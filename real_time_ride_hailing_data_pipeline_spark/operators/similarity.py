@@ -170,6 +170,13 @@ def brute_force_topk_batch(
     if mask_col is not None:
         if query_masks is None:
             raise ValueError("mask_col requires query_masks")
+        unmasked = [qid for qid in qids if qid not in query_masks]
+        if unmasked:
+            raise ValueError(
+                f"query_masks has no entry for query id(s) {unmasked[:10]} "
+                f"({len(unmasked)} of {len(qids)} queries); every query "
+                f"needs its allowed {mask_col!r} values"
+            )
         mask_arrays = [np.asarray(sorted(query_masks[qid])) for qid in qids]
 
     def _screen(batches):

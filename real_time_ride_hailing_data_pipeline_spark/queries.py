@@ -1652,13 +1652,19 @@ def pandas_grouped_agg_fare_cents(spark: SparkSession, sf_dir: str) -> DataFrame
     value-hash oracle. Plans as a (sanctioned) Arrow aggregate — no
     row-wise Python; one shuffle on the group key."""
     import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit functionType: hint-style resolution can't see
-    # function-local imports under `from __future__ import annotations`
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def cents_sum(v):
+    def _cents_sum(v):
         return int(np.floor(v.to_numpy() * 100 + 0.5).astype(np.int64).sum())
+
+    # type-hinted form (the deprecated PandasUDFType.GROUPED_AGG flag
+    # is gone): Series -> scalar infers a grouped-agg UDF. Real
+    # annotation objects, as in the SCALAR_ITER entry above — the hint
+    # resolver cannot see function-local imports under `from
+    # __future__ import annotations`
+    _cents_sum.__annotations__ = {"v": pd.Series, "return": int}
+    cents_sum = pandas_udf(_cents_sum, "long")
 
     events = _t(spark, sf_dir, "events")
     return events.groupBy("event_type").agg(

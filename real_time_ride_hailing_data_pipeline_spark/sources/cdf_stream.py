@@ -141,8 +141,7 @@ class SnapshotCdfStreamReader(DataSourceStreamReader):
         with open(
             os.path.join(self.snapshot_dir, "manifest", f"epoch={epoch}.json")
         ) as fh:
-            data = json.load(fh)
-        return data["parts"] if isinstance(data, dict) and "parts" in data else data
+            return json.load(fh)["parts"]
 
     def _physical_of(self, epoch: int) -> dict[str, str]:
         """logical -> physical name map from the version's schema

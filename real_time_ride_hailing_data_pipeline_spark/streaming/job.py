@@ -1308,8 +1308,8 @@ def streaming_cdc_downstream_apply(spark: SparkSession, sf_dir: str) -> DataFram
     or cache-invalidation consumer uses Delta CDF. The replica must
     equal the live table; each application is O(changed rows), so at
     100 TB the consumer's cost tracks churn, not table size. Returned
-    is the replica (the oracle aggregates the raw events minus the
-    deleted type)."""
+    is the live read-back the replica was proven equal to (the oracle
+    aggregates the raw events minus the deleted type)."""
     sink = _two_batch_snapshot_replay(spark, sf_dir)
     epochs = sink.snapshots()
     doomed = (
@@ -1335,20 +1335,25 @@ def streaming_cdc_downstream_apply(spark: SparkSession, sf_dir: str) -> DataFram
     live = sink.read(spark)
     # the composition proof: replica built ONLY from deltas == table.
     # r14 (guide §1.2): (a) the replica — a per-version chain of
-    # broadcast-anti-join + union — is PERSISTED, so the proof and the
-    # returned read compute the chain once instead of three times;
+    # broadcast-anti-join + union — is PERSISTED for the two proof
+    # passes, so they compute the chain once, and unpersisted after;
     # (b) multiset equality in ONE anti-join pass: with equal
     # cardinalities, replica∖live = ∅ already implies live∖replica =
     # ∅, so the second exceptAll — a full extra build+anti-join of
     # both relations — is provably redundant. Within-query
     # intermediate reuse only; nothing survives this invocation.
     replica = replica.persist()
-    if (
-        replica.count() != live.count()
-        or replica.exceptAll(live).count()
-    ):
-        raise RuntimeError("CDC replica diverged from the live table")
-    return replica
+    try:
+        if (
+            replica.count() != live.count()
+            or replica.exceptAll(live).count()
+        ):
+            raise RuntimeError("CDC replica diverged from the live table")
+    finally:
+        replica.unpersist()
+    # proven equal as a multiset: return the sink read-back, so no
+    # cached block outlives this invocation
+    return live
 
 
 def streaming_cdf_source_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1363,10 +1368,11 @@ def streaming_cdf_source_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     is applied to the e0 snapshot exactly like the batch CDC consumer
     (upserts overwrite by key, delete pre-images remove by key); the
     replica must equal the live table (asserted via exceptAll), and
-    the oracle (raw events minus 'click') value-hashes it — proving
-    the streaming feed is complete, applyable, and deletion-vector-
-    aware. Per-trigger cost is O(changed partitions), so a 100 TB
-    consumer tracks churn, not table size."""
+    the oracle (raw events minus 'click') value-hashes the live
+    read-back it equals — proving the streaming feed is complete,
+    applyable, and deletion-vector-aware. Per-trigger cost is
+    O(changed partitions), so a 100 TB consumer tracks churn, not
+    table size."""
     from real_time_ride_hailing_data_pipeline_spark.sources import cdf_stream
 
     sink = _two_batch_snapshot_replay(spark, sf_dir)
@@ -1421,12 +1427,15 @@ def streaming_cdf_source_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch CDC consumer (r14): equal counts + empty replica∖live ⇒
     # live∖replica empty
     replica = replica.persist()
-    if (
-        replica.count() != live.count()
-        or replica.exceptAll(live).count()
-    ):
-        raise RuntimeError("streaming-CDF replica diverged from the live table")
-    return replica
+    try:
+        if (
+            replica.count() != live.count()
+            or replica.exceptAll(live).count()
+        ):
+            raise RuntimeError("streaming-CDF replica diverged from the live table")
+    finally:
+        replica.unpersist()
+    return live  # proven equal as a multiset (see the batch consumer)
 
 
 def streaming_partition_evolution_replay(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -410,7 +410,10 @@ class ParquetUpsertSink:
         spec history); publishing it AFTER the swap and BEFORE the
         staging drop makes the whole restore re-enterable from any
         crash point — every recovery entry point (read/merge/delete/
-        compact/migrate) already funnels through here."""
+        compact/migrate) already funnels through here. The live table
+        was just re-laid-out wholesale, so the consolidated cache is
+        rebuilt BEFORE the staging drops: a crash in between re-enters
+        this commit and converges it."""
         staging = self._migrate_staging()
         if not os.path.isdir(staging):
             return
@@ -441,33 +444,21 @@ class ParquetUpsertSink:
                     shutil.rmtree(
                         os.path.join(self.path, d), ignore_errors=True
                     )
+        self._refresh_consolidated()
         if restore is not None:
             # RESTORE commit point: the restored version's schema
             # becomes the authoritative table schema, the spec history
             # is PRESERVED (restored dirs may live under older specs —
             # collapsing would break cross-spec candidate derivation),
             # and the new epoch's manifest points at the SOURCE
-            # version's existing immutable copies (zero new log data).
-            # All idempotent JSON publishes — a crash replays them.
-            if restore.get("schema") is not None:
-                self._atomic_json_write(
-                    self._schema_file(), restore["schema"]
-                )
-                self._atomic_json_write(
-                    self._epoch_schema_path(restore["epoch"]),
-                    restore["schema"],
-                )
-            else:
-                # restoring a legacy pre-sidecar version: its schema is
-                # whatever its homogeneous files carry — leaving the
-                # current evolved _schema.json in place would read the
-                # restored table under the POST-restore schema,
-                # diverging from the restore-schema semantics sidecar-
-                # bearing versions get (ADVICE r8)
-                try:
-                    os.remove(self._schema_file())
-                except FileNotFoundError:
-                    pass
+            # version's existing immutable copies (zero new log data);
+            # its folded metadata is the cache just rebuilt from the
+            # restored dirs (identical files and sidecars). All
+            # idempotent JSON publishes — a crash replays them.
+            self._atomic_json_write(self._schema_file(), restore["schema"])
+            self._atomic_json_write(
+                self._epoch_schema_path(restore["epoch"]), restore["schema"]
+            )
             self._atomic_json_write(
                 self._partspec_file(), restore["specs"]
             )
@@ -476,20 +467,14 @@ class ParquetUpsertSink:
                     restore["epoch"],
                     restore["parts"],
                     op="restore",
-                    sidecars=restore.get("sidecars"),
+                    sidecars=self._consolidated(),
                 )
                 # a restore is a commit like any other: apply the
                 # retention bound here too, or a max_snapshots table
                 # exceeds it until the next ordinary commit (ADVICE r8)
                 self._expire_snapshots()
-            # the live table was just re-laid-out wholesale: rebuild
-            # the consolidated cache BEFORE dropping the staging so a
-            # crash in between re-enters this commit and converges it
-            self._refresh_consolidated()
             shutil.rmtree(staging, ignore_errors=True)
             return
-        # same wholesale re-layout on the migration path
-        self._refresh_consolidated()
         shutil.rmtree(staging, ignore_errors=True)
         # post-MIGRATION the layout is homogeneous under the current
         # spec — collapse the history so merges/deletes return to the
@@ -536,26 +521,20 @@ class ParquetUpsertSink:
                     f"retained epoch {retained[-1]}"
                 )
             parts = self._load_manifest(epoch_id)
-            schema = self._epoch_schema(epoch_id)
             staging = self._migrate_staging()
             shutil.rmtree(staging, ignore_errors=True)
             os.makedirs(staging, exist_ok=True)
             for d, e in parts.items():
                 self._copytree_link(
-                    os.path.join(self.snapshot_dir, "files", f"epoch={e}", d),
-                    os.path.join(staging, d),
+                    self._epoch_copy(e, d), os.path.join(staging, d)
                 )
             self._atomic_json_write(
                 os.path.join(staging, "_RESTORE"),
                 {
                     "epoch": new_epoch,
                     "parts": parts,
-                    "schema": None if schema is None else schema.jsonValue(),
+                    "schema": self._epoch_schema(epoch_id).jsonValue(),
                     "specs": self._transforms(),
-                    # the restored version's folded metadata carries
-                    # over verbatim — the new manifest points at the
-                    # same immutable copies (None for legacy sources)
-                    "sidecars": self._load_manifest_sidecars(epoch_id),
                 },
             )
             open(os.path.join(staging, "_SUCCESS"), "w").close()
@@ -920,14 +899,13 @@ class ParquetUpsertSink:
         survivors = self._anti_join_keys(
             existing.filter(self._part_date_filter(touched_vals)), staged_keys
         )
-        stored = self._stored_schema()
+        # the scanned schema stands in when none is recorded (a first
+        # write that crashed before publishing _schema.json)
+        stored = self._stored_schema() or existing.schema
         self._distribute(self._to_physical(survivors, stored)).write.mode(
             "overwrite"
         ).partitionBy("part_date").parquet(self.merged_path)
-        if stored is not None:
-            self._atomic_json_write(
-                self._staged_schema_file(), stored.jsonValue()
-            )
+        self._write_schema_file(stored, self._staged_schema_file())
         self._refresh_staged_stats()
         self._refresh_staged_blooms()
         touched_dirs = [self._part_dirname(v) for v in touched_vals]
@@ -1012,14 +990,11 @@ class ParquetUpsertSink:
                 projections.append(F.col(c))
         updated = scoped.select(*projections)
         self._audit_batch(updated)  # constraints hold AFTER the update
-        stored = self._stored_schema()
+        stored = self._stored_schema() or existing.schema  # see _delete
         self._distribute(self._to_physical(updated, stored)).write.mode(
             "overwrite"
         ).partitionBy("part_date").parquet(self.merged_path)
-        if stored is not None:
-            self._atomic_json_write(
-                self._staged_schema_file(), stored.jsonValue()
-            )
+        self._write_schema_file(stored, self._staged_schema_file())
         self._refresh_staged_stats()
         self._refresh_staged_blooms()
         touched_dirs = [self._part_dirname(v) for v in touched_vals]
@@ -1299,14 +1274,11 @@ class ParquetUpsertSink:
                 existing, staged, list(merged.columns)
             )
         else:
-            stored = self._stored_schema()
+            stored = self._stored_schema() or existing.schema  # see _delete
         self._distribute(self._to_physical(merged, stored)).write.mode(
             "overwrite"
         ).partitionBy("part_date").parquet(self.merged_path)
-        if stored is not None:
-            self._atomic_json_write(
-                self._staged_schema_file(), stored.jsonValue()
-            )
+        self._write_schema_file(stored, self._staged_schema_file())
         self._refresh_staged_stats()
         self._refresh_staged_blooms()
         self._publish_staging(touched_dirs, epoch_id, op="merge")
@@ -1443,9 +1415,9 @@ class ParquetUpsertSink:
         # RAW positional scan: stored-schema read (NULL-fills evolved
         # columns) + the hidden _metadata source column; DVs are not
         # applied so replays re-find already-hidden rows (idempotence)
-        raw = self._read_table(
-            spark, apply_dv=False, with_positions=True
-        ).select(*self.key_cols, "part_date", "__dv_path", "__dv_pos")
+        raw = self._read_table(spark, with_positions=True).select(
+            *self.key_cols, "part_date", "__dv_path", "__dv_pos"
+        )
         if self.partition_source in self.key_cols:
             # prune the discovery scan to partitions the keys derive
             # (same locality contract as the copy-on-write delete)
@@ -1551,7 +1523,7 @@ class ParquetUpsertSink:
                 with open(sidecar) as fh:
                     loaded = json.load(fh)
             except ValueError:
-                continue  # torn legacy artifact: atomic writes can't produce one
+                continue  # unparsable: atomic writes never produce one
             part_dir = os.path.basename(d.rstrip("/"))
             for fname, positions in loaded.items():
                 out[(part_dir, fname)] = positions
@@ -1589,22 +1561,6 @@ class ParquetUpsertSink:
                 "left_anti",
             )
             .select(*cols)
-        )
-
-    def _live_dv_map(self) -> dict[tuple[str, str], list[int]]:
-        if not os.path.isdir(self.path):
-            return {}
-        # one plan-time read of the consolidated cache; per-dir sidecar
-        # sweep only for tables last written by pre-fold code
-        cons = self._consolidated()
-        if cons is not None:
-            return self._dv_from_entries(cons)
-        return self._dv_map(
-            [
-                os.path.join(self.path, d)
-                for d in os.listdir(self.path)
-                if d.startswith("part_date=")
-            ]
         )
 
     def _semi_join_keys(self, left: DataFrame, keys: DataFrame) -> DataFrame:
@@ -1652,38 +1608,6 @@ class ParquetUpsertSink:
     def _touched_file(self) -> str:
         return os.path.join(self.merged_path, "_TOUCHED")
 
-    def _staged_touched(self, spark: SparkSession) -> list[str]:
-        """Partition dirs the durable staging rewrites. The explicit
-        ``_TOUCHED`` list (written by every stage step) is
-        authoritative: for a DELETE staging it includes partitions the
-        delete EMPTIED, which have no rows in the staged content and
-        would be invisible to a content scan. Fallback to the scan for
-        stagings written before the list existed."""
-        try:
-            with open(self._touched_file()) as fh:
-                data = json.load(fh)
-            # pre-dict-format stagings wrote a bare list (all touched,
-            # none emptied) — a crashed one must still recover
-            return data if isinstance(data, list) else data["touched"]
-        except (FileNotFoundError, ValueError, KeyError):
-            staged = spark.read.parquet(self.merged_path)
-            return [
-                self._part_dirname(r[0])
-                for r in staged.select("part_date").distinct().collect()
-            ]
-
-    def _staged_op(self) -> str:
-        """Operation type of a durable staging ('merge' for legacy
-        stagings written before the field existed)."""
-        try:
-            with open(self._touched_file()) as fh:
-                data = json.load(fh)
-            if isinstance(data, dict):
-                return str(data.get("op", "merge"))
-        except (FileNotFoundError, ValueError):
-            pass
-        return "merge"
-
     @staticmethod
     def _copytree_link(src: str, dst: str) -> None:
         """copytree by HARDLINK (fallback: physical copy across
@@ -1716,16 +1640,19 @@ class ParquetUpsertSink:
         return os.path.join(self.snapshot_dir, "schemas", f"epoch={epoch_id}.json")
 
     def _epoch_schema(self, epoch_id: int):
-        """Schema of a committed version, or None for snapshots written
-        before sidecars existed (homogeneous by construction)."""
+        """Schema of a committed version (published with its manifest)."""
         return self._load_schema(self._epoch_schema_path(epoch_id))
 
-    def _load_manifest(self, epoch_id: int) -> dict[str, int]:
+    def _manifest(self, epoch_id: int) -> dict:
+        """A version's manifest: ``{parts, committed_at, op,
+        sidecars}`` — parts maps each partition dir to the epoch whose
+        immutable copy holds it, sidecars folds each dir's metadata
+        entry (see ``_publish_manifest``)."""
         with open(self._manifest_path(epoch_id)) as fh:
-            data = json.load(fh)
-        # legacy manifests are a bare {dir: epoch} map; current ones
-        # wrap it with the first-publish commit timestamp
-        return data["parts"] if isinstance(data, dict) and "parts" in data else data
+            return json.load(fh)
+
+    def _load_manifest(self, epoch_id: int) -> dict[str, int]:
+        return self._manifest(epoch_id)["parts"]
 
     def _manifest_committed_at(self, epoch_id: int) -> float:
         """Commit time of a snapshot: the timestamp recorded INSIDE the
@@ -1733,22 +1660,19 @@ class ParquetUpsertSink:
         identical parts on idempotent epoch replays and by
         _heal_migration_snapshot; using the file's mtime would refresh
         the clock on every rewrite and silently extend time-based
-        retention. Legacy bare-map manifests fall back to mtime."""
-        try:
-            with open(self._manifest_path(epoch_id)) as fh:
-                data = json.load(fh)
-            if isinstance(data, dict) and "committed_at" in data:
-                return float(data["committed_at"])
-        except (FileNotFoundError, ValueError):
-            pass
-        return os.path.getmtime(self._manifest_path(epoch_id))
+        retention."""
+        return float(self._manifest(epoch_id)["committed_at"])
+
+    def _manifest_op(self, epoch_id: int) -> str:
+        """Operation recorded at a version's publish."""
+        return str(self._manifest(epoch_id)["op"])
 
     def _publish_manifest(
         self,
         epoch_id: int,
         parts: dict[str, int],
-        op: str = "merge",
-        sidecars: dict[str, dict] | None = None,
+        op: str,
+        sidecars: dict[str, dict],
     ) -> None:
         """Atomic manifest publish (the commit point), PRESERVING the
         first publish's commit timestamp across replays/heals and
@@ -1758,29 +1682,20 @@ class ParquetUpsertSink:
         deletion vectors) INTO the manifest — the Delta-checkpoint /
         Iceberg-manifest design — so a time-travel plan needs ONE JSON
         read instead of O(partitions) sidecar opens (VERDICT r9
-        item 4). None omits the key (legacy manifests; reads fall back
-        to per-dir sidecar files)."""
+        item 4)."""
         try:
             committed_at = self._manifest_committed_at(epoch_id)
-        except FileNotFoundError:
-            committed_at = time.time()
-        payload = {"parts": parts, "committed_at": committed_at, "op": op}
-        if sidecars is not None:
-            payload["sidecars"] = sidecars
-        self._atomic_json_write(self._manifest_path(epoch_id), payload)
-
-    def _load_manifest_sidecars(self, epoch_id: int) -> dict[str, dict] | None:
-        """The per-partition metadata entries folded into a version's
-        manifest, or None for manifests published before the fold
-        existed (reads then fall back to per-dir sidecar files)."""
-        try:
-            with open(self._manifest_path(epoch_id)) as fh:
-                data = json.load(fh)
-            if isinstance(data, dict):
-                return data.get("sidecars")
         except (FileNotFoundError, ValueError):
-            pass
-        return None
+            committed_at = time.time()
+        self._atomic_json_write(
+            self._manifest_path(epoch_id),
+            {
+                "parts": parts,
+                "committed_at": committed_at,
+                "op": op,
+                "sidecars": sidecars,
+            },
+        )
 
     # -- consolidated per-partition metadata (one plan-time read) ----------
     def _sidecars_file(self) -> str:
@@ -1840,41 +1755,55 @@ class ParquetUpsertSink:
                 entry["range"] = rng
         return entry
 
-    def _consolidated(self) -> dict[str, dict] | None:
+    def _consolidated(self) -> dict[str, dict]:
         """The live table's consolidated metadata map (partition dir ->
-        entry), or None for tables last written by pre-fold code (reads
-        then fall back to per-dir listing — correctness never depends
-        on the cache existing, only plan-time cost does)."""
+        entry) — ONE JSON read of ``_sidecars.json``. When that file is
+        missing or unparsable (deleted out of band, or a crash between
+        a first write's directory overwrite and its cache refresh) the
+        same map is built in memory from the partition dirs, so
+        correctness never depends on the cache existing, only plan-time
+        cost does. Read-only: writers persist the map through
+        ``_refresh_consolidated``, which starts from this full map."""
         try:
             with open(self._sidecars_file()) as fh:
                 return json.load(fh)
         except (FileNotFoundError, ValueError):
-            return None
+            return self._rebuild_entries({}, None)
 
-    def _refresh_consolidated(self, dirs: list[str] | None = None) -> None:
-        """Write-through maintenance of ``_sidecars.json``: rebuild the
-        entries for ``dirs`` (dropped when the dir no longer exists) or
-        the whole map when None. Called at the END of every path that
-        mutates partition contents — always BEFORE the staging that
-        would re-trigger recovery is dropped, so a crash in between
-        re-enters the same commit and converges the cache; the cache
-        is therefore never stale relative to a completed commit."""
-        if not os.path.isdir(self.path):
-            return
+    def _rebuild_entries(
+        self, current: dict[str, dict], dirs: list[str] | None
+    ) -> dict[str, dict]:
+        """``current`` with the entries of ``dirs`` (every partition
+        dir when None) rebuilt from disk; a dir that no longer exists
+        is dropped."""
         if dirs is None:
-            current: dict[str, dict] = {}
-            dirs = [
-                d for d in os.listdir(self.path) if d.startswith("part_date=")
-            ]
-        else:
-            current = self._consolidated() or {}
+            dirs = (
+                [d for d in os.listdir(self.path) if d.startswith("part_date=")]
+                if os.path.isdir(self.path)
+                else []
+            )
         for d in dirs:
             pdir = os.path.join(self.path, d)
             if os.path.isdir(pdir):
                 current[d] = self._dir_entry(pdir)
             else:
                 current.pop(d, None)
-        self._atomic_json_write(self._sidecars_file(), current)
+        return current
+
+    def _refresh_consolidated(self, dirs: list[str] | None = None) -> None:
+        """Write-through maintenance of ``_sidecars.json``: rebuild the
+        entries for ``dirs`` on top of the full current map, or the
+        whole map when None. Called at the END of every path that
+        mutates partition contents — always BEFORE the staging that
+        would re-trigger recovery is dropped, so a crash in between
+        re-enters the same commit and converges the cache; the cache
+        is therefore never stale relative to a completed commit."""
+        if not os.path.isdir(self.path):
+            return
+        current = {} if dirs is None else self._consolidated()
+        self._atomic_json_write(
+            self._sidecars_file(), self._rebuild_entries(current, dirs)
+        )
 
     @staticmethod
     def _dv_from_entries(
@@ -1891,24 +1820,6 @@ class ParquetUpsertSink:
             for fname, positions in (e.get("dv") or {}).items():
                 out[(part_dir, fname)] = positions
         return out
-
-    def _entries_for_dirs(self, dirs: list[str]) -> dict[str, dict]:
-        """Legacy fallback: build entries by listing each dir (the
-        pre-fold O(partitions) path — only taken when neither the
-        consolidated file nor manifest sidecars exist)."""
-        return {d: self._dir_entry(d) for d in dirs if os.path.isdir(d)}
-
-    def _manifest_op(self, epoch_id: int) -> str:
-        """Operation recorded at a version's publish ('merge' for
-        legacy bare-map manifests)."""
-        try:
-            with open(self._manifest_path(epoch_id)) as fh:
-                data = json.load(fh)
-            if isinstance(data, dict) and "op" in data:
-                return str(data["op"])
-        except (FileNotFoundError, ValueError):
-            pass
-        return "merge"
 
     def _snapshot(
         self,
@@ -1929,8 +1840,10 @@ class ParquetUpsertSink:
         if self.snapshot_dir is None:
             return
         prev_epochs = [e for e in self.snapshots() if e < epoch_id]
-        prev: dict[str, int] = (
-            self._load_manifest(prev_epochs[-1]) if prev_epochs else {}
+        prev = (
+            self._manifest(prev_epochs[-1])
+            if prev_epochs
+            else {"parts": {}, "sidecars": {}}
         )
         if touched is None or not prev_epochs:
             # first snapshot (or unknown baseline): capture every
@@ -1940,12 +1853,8 @@ class ParquetUpsertSink:
                 d for d in os.listdir(self.path) if d.startswith("part_date=")
             ]
         epoch_files = os.path.join(self.snapshot_dir, "files", f"epoch={epoch_id}")
-        manifest = dict(prev)
-        sidecars: dict[str, dict] = dict(
-            (self._load_manifest_sidecars(prev_epochs[-1]) or {})
-            if prev_epochs
-            else {}
-        )
+        manifest: dict[str, int] = dict(prev["parts"])
+        sidecars: dict[str, dict] = dict(prev["sidecars"])
         for d in touched:
             src = os.path.join(self.path, d)
             if not os.path.isdir(src):
@@ -1964,14 +1873,6 @@ class ParquetUpsertSink:
             # hardlinked) — its entry folds into the manifest so a
             # time-travel plan reads one JSON, not O(dirs) sidecars
             sidecars[d] = self._dir_entry(src)
-        # first snapshot after an upgrade from pre-fold manifests:
-        # inherited dirs have no folded entry yet — build each from its
-        # immutable epoch copy, once (every later commit inherits)
-        for d, e in manifest.items():
-            if d not in sidecars:
-                sidecars[d] = self._dir_entry(
-                    os.path.join(self.snapshot_dir, "files", f"epoch={e}", d)
-                )
         # schema sidecar first: the manifest publish is the commit
         # point, and a committed version must know its schema AS OF
         # that commit (time travel across an evolution boundary shows
@@ -2032,7 +1933,7 @@ class ParquetUpsertSink:
                 try:
                     os.remove(self._epoch_schema_path(epoch))
                 except FileNotFoundError:
-                    pass  # pre-sidecar snapshot
+                    pass  # removed out of band
         referenced = {
             (e, d)
             for epoch in retained
@@ -2077,34 +1978,99 @@ class ParquetUpsertSink:
         full-table materialization ever happened. Raises below the
         retention horizon — an expired version is gone, exactly like a
         vacuumed Delta/Iceberg version."""
-        retained = self.snapshots()
-        eligible = [e for e in retained if e <= epoch_id]
-        if not eligible:
-            if retained:
-                raise ValueError(
-                    f"epoch {epoch_id} precedes the retention horizon "
-                    f"(oldest retained snapshot: {retained[0]}, "
-                    f"max_snapshots={self.max_snapshots})"
-                )
-            raise ValueError(f"no snapshot at or before epoch {epoch_id}")
-        manifest = self._load_manifest(eligible[-1])
-        paths = [
-            os.path.join(self.snapshot_dir, "files", f"epoch={e}", d)
-            for d, e in sorted(manifest.items())
-        ]
-        # deletion vectors come from the manifest's folded metadata —
-        # the same JSON read that resolved the parts — so the plan
-        # costs zero per-dir sidecar opens; None (legacy manifest)
-        # falls back to the per-dir sweep inside _read_snapshot_paths
-        folded = self._load_manifest_sidecars(eligible[-1])
-        dv = (
-            self._dv_from_entries(
-                {d: folded[d] for d in manifest if d in folded}
+        entries, schema = self._resolve(spark, epoch_id)
+        return self._compose(spark, sorted(entries), entries, schema)
+
+    def _epoch_copy(self, epoch_id: int, pdir: str) -> str:
+        """Path of partition dir ``pdir``'s immutable copy at epoch."""
+        return os.path.join(self.snapshot_dir, "files", f"epoch={epoch_id}", pdir)
+
+    def _version_entries(self, epoch_id: int) -> dict[str, dict]:
+        """Copy PATH -> folded metadata entry for every partition a
+        version references — one manifest read, zero per-dir opens."""
+        m = self._manifest(epoch_id)
+        return {
+            self._epoch_copy(e, d): m["sidecars"][d]
+            for d, e in m["parts"].items()
+        }
+
+    def _resolve(self, spark: SparkSession, version: int | None):
+        """The plan-time metadata of one table state, shared by every
+        reader: (partition dir PATH -> metadata entry, logical schema
+        without the directory-encoded ``part_date``, None when none is
+        recorded — see ``_scan``). ``version=None``
+        is the live table — a crashed swap is repaired first, then the
+        consolidated cache and the authoritative schema. Otherwise the
+        newest retained version <= ``version``: its manifest fold and
+        the schema AS OF that commit (each version reads under its own
+        columns and names, across evolutions and renames). Raises
+        below the retention horizon."""
+        from pyspark.sql.types import StructType
+
+        if version is None:
+            self._repair_for_read(spark)
+            entries = {
+                os.path.join(self.path, d): e
+                for d, e in self._consolidated().items()
+            }
+            schema = self._stored_schema()
+        else:
+            retained = self.snapshots()
+            eligible = [e for e in retained if e <= version]
+            if not eligible:
+                if retained:
+                    raise ValueError(
+                        f"epoch {version} precedes the retention horizon "
+                        f"(oldest retained snapshot: {retained[0]}, "
+                        f"max_snapshots={self.max_snapshots})"
+                    )
+                raise ValueError(f"no snapshot at or before epoch {version}")
+            entries = self._version_entries(eligible[-1])
+            schema = self._epoch_schema(eligible[-1])
+        if schema is not None:
+            schema = StructType(
+                [f for f in schema.fields if f.name != "part_date"]
             )
-            if folded is not None
-            else None
+        return entries, schema
+
+    def _compose(
+        self,
+        spark: SparkSession,
+        paths: list[str],
+        entries: dict[str, dict],
+        schema,
+    ) -> DataFrame:
+        """The one read composition of every reader: scan ``paths``
+        (data files, partition dirs or the table root) under
+        ``schema`` (see ``_scan``), hide the rows the entries' deletion
+        vectors delete (each copy carries its vector AS OF its commit)
+        and map physical to logical names. Zero paths is the empty
+        table (a delete that emptied every partition publishes an
+        empty manifest; a pruned plan may select nothing)."""
+        if not paths:
+            if schema is None:  # no recorded schema: the live footers'
+                return self._read_table(spark).drop("part_date").limit(0)
+            return spark.createDataFrame([], schema)
+        df = self._scan(spark, paths, schema)
+        return self._to_logical(
+            self._apply_dv(spark, df, self._dv_from_entries(entries)), schema
         )
-        return self._read_snapshot_paths(spark, paths, eligible[-1], dv_map=dv)
+
+    def _scan(self, spark: SparkSession, paths: list[str], schema) -> DataFrame:
+        """Raw file-source scan of ``paths`` under ``schema``'s physical
+        names: after an evolution commit only the touched partitions
+        physically carry the new column, and a footer-sampled read
+        could silently drop it; the explicit schema makes every file
+        NULL-fill what it lacks. Footer-sampled only when no schema is
+        recorded (a first write that crashed before publishing
+        ``_schema.json``, or one deleted out of band)."""
+        self._invalidate_listing(spark)
+        reader = (
+            spark.read
+            if schema is None
+            else spark.read.schema(self._physical_schema(schema))
+        )
+        return reader.parquet(*paths)
 
     def clone(
         self,
@@ -2175,20 +2141,16 @@ class ParquetUpsertSink:
     def describe_history(self, spark: SparkSession) -> DataFrame:
         """The DESCRIBE HISTORY view of the transaction log: one row
         per retained version — epoch, the operation that committed it
-        (merge/delete/restore/migrate; 'merge' for legacy manifests),
-        its live partition count, and the recorded commit timestamp.
-        Driver-side O(retained manifests) JSON reads — metadata only,
-        bounded by the retention policy, never a data scan."""
+        (merge/delete/restore/migrate/...), its live partition count,
+        and the recorded commit timestamp. One JSON read per retained
+        manifest — metadata only, bounded by the retention policy,
+        never a data scan."""
         if self.snapshot_dir is None:
             raise ValueError("sink was built without snapshot_dir")
         rows = [
-            (
-                e,
-                self._manifest_op(e),
-                len(self._load_manifest(e)),
-                float(self._manifest_committed_at(e)),
-            )
+            (e, str(m["op"]), len(m["parts"]), float(m["committed_at"]))
             for e in self.snapshots()
+            for m in (self._manifest(e),)
         ]
         return spark.createDataFrame(
             rows, "epoch long, op string, n_partitions long, committed_at double"
@@ -2198,49 +2160,30 @@ class ParquetUpsertSink:
         """The DESCRIBE DETAIL / `table_files()` metadata view: one row
         per live data file — partition, name, bytes, whether min/max
         stats and a bloom bitset cover it, and how many rows its
-        deletion vector hides. Sourced from the SAME consolidated
-        metadata the query planner reads (one JSON open; per-dir
-        fallback for pre-fold tables) plus one stat() per file for the
-        size, so the view costs O(files) metadata and never scans
-        data — the operational surface for "is this table compacted /
-        indexed / carrying delete debt?" that OPTIMIZE decisions need
-        at 100 TB."""
-        schema_ddl = (
-            "part_date string, file string, bytes long, "
-            "has_stats boolean, has_bloom boolean, dv_deleted_rows long"
-        )
-        # heal a crashed swap first — every other read path does, and
-        # without it this view could describe a mid-crash staging
-        # state; a never-written table is an empty view, not an error
-        # (ADVICE r10)
-        self._repair_for_read(spark)
-        cons = self._consolidated()
-        if cons is not None:
-            entries = dict(cons)
-        else:
-            try:
-                entries = {
-                    d: self._dir_entry(os.path.join(self.path, d))
-                    for d in sorted(os.listdir(self.path))
-                    if d.startswith("part_date=")
-                }
-            except FileNotFoundError:
-                return spark.createDataFrame([], schema_ddl)
+        deletion vector hides. Sourced from the SAME live metadata the
+        query planner resolves (one JSON open of the consolidated
+        cache) plus one stat() per file for the size, so the view
+        costs O(files) metadata and never scans data — the operational
+        surface for "is this table compacted / indexed / carrying
+        delete debt?" that OPTIMIZE decisions need at 100 TB. The
+        resolve heals a crashed swap first, like every other read; a
+        never-written table is an empty view, not an error (ADVICE
+        r10)."""
+        entries, _ = self._resolve(spark, None)
         rows = []
-        for d in sorted(entries):
-            e = entries[d]
+        for pdir in sorted(entries):
+            e = entries[pdir]
             stats_files = (e.get("stats") or {}).get("files", {})
             bloom_files = (e.get("bloom") or {}).get("files", {})
             dv = e.get("dv") or {}
             for fname in e.get("files", []):
-                fpath = os.path.join(self.path, d, fname)
                 try:
-                    size = os.path.getsize(fpath)
+                    size = os.path.getsize(os.path.join(pdir, fname))
                 except OSError:
                     size = None
                 rows.append(
                     (
-                        d.split("=", 1)[1],
+                        os.path.basename(pdir).split("=", 1)[1],
                         fname,
                         size,
                         fname in stats_files,
@@ -2248,7 +2191,11 @@ class ParquetUpsertSink:
                         len(dv.get(fname, [])),
                     )
                 )
-        return spark.createDataFrame(rows, schema_ddl)
+        return spark.createDataFrame(
+            rows,
+            "part_date string, file string, bytes long, "
+            "has_stats boolean, has_bloom boolean, dv_deleted_rows long",
+        )
 
     def read_at_timestamp(self, spark: SparkSession, ts: float) -> DataFrame:
         """Time-travel read by WALL-CLOCK instant (the Delta
@@ -2271,57 +2218,6 @@ class ParquetUpsertSink:
                 f"max_snapshots={self.max_snapshots})"
             )
         return self.read_at(spark, eligible[-1])
-
-    def _read_snapshot_paths(
-        self,
-        spark: SparkSession,
-        paths: list[str],
-        schema_epoch: int,
-        dv_map: dict[tuple[str, str], list[int]] | None = None,
-    ) -> DataFrame:
-        """Read snapshot partition copies under the schema AS OF
-        ``schema_epoch``: partition copies referenced across an
-        evolution boundary may physically predate a column the chosen
-        version already had — the sidecar schema NULL-fills them,
-        exactly what a live read at that commit returned. part_date is
-        a directory-encoded partition column, physically absent from
-        the copied files (and from what read_at has always returned),
-        so it is dropped from the applied schema."""
-        from pyspark.sql.types import StructType
-
-        self._invalidate_listing(spark)
-        schema = self._epoch_schema(schema_epoch)
-        if schema is not None:
-            schema = StructType(
-                [f for f in schema.fields if f.name != "part_date"]
-            )
-        if not paths:
-            # a delete_keys commit that emptied EVERY partition (full
-            # erasure) publishes an empty manifest; that version IS the
-            # empty table, so compose it from the epoch's schema sidecar
-            # instead of handing spark.read zero paths (which raises)
-            if schema is None:
-                raise ValueError(
-                    f"epoch {schema_epoch} has an empty manifest and no "
-                    f"schema sidecar — cannot reconstruct the empty table"
-                )
-            return spark.createDataFrame([], schema)
-        if schema is None:  # pre-sidecar snapshot: homogeneous files
-            df = spark.read.parquet(*paths)
-        else:
-            df = spark.read.schema(self._physical_schema(schema)).parquet(*paths)
-        # each epoch copy carries the _dv.json AS OF that commit (the
-        # sidecar republishes via os.replace, so hardlinked copies pin
-        # the old vector) — applying it here makes time travel, CDF and
-        # history all merge-on-read-aware with zero extra machinery.
-        # Callers with a folded manifest pass dv_map (one JSON read);
-        # the per-dir sweep only runs for legacy manifests.
-        df = self._apply_dv(
-            spark, df, self._dv_map(paths) if dv_map is None else dv_map
-        )
-        # ... and the version's own logical names (column mapping):
-        # a version below a RENAME reads its original column names
-        return self._to_logical(df, schema)
 
     def read_history(self, spark: SparkSession) -> DataFrame:
         """Every retained snapshot as one DataFrame with an ``epoch``
@@ -2356,6 +2252,32 @@ class ParquetUpsertSink:
         O(changed partitions), never O(table), which is the whole
         point of keeping the log. Within the changed partitions the
         diff is ``exceptAll`` (multiset — duplicate-safe)."""
+        new, old, dropped = self._version_diff(spark, from_epoch, to_epoch)
+        # a delete_keys() commit can DROP partitions; their rows (and
+        # any row-level deletes inside surviving partitions) are only
+        # visible through the typed feed, so the post-image-only
+        # contract here must fail loudly rather than under-report
+        if dropped:
+            raise ValueError(
+                f"partitions dropped between versions: {dropped} — a "
+                f"delete_keys() commit lies in this range; use "
+                f"read_changes_typed() for the delete-aware feed"
+            )
+        if new is None:  # identical versions (e.g. an empty commit)
+            return self.read_at(spark, to_epoch).limit(0)
+        return new if old is None else new.exceptAll(old)
+
+    def _version_diff(self, spark: SparkSession, from_epoch: int, to_epoch: int):
+        """(new, old, dropped) between two retained versions — the
+        manifest-pruned sides of both change feeds. ``new`` reads the
+        TO copies of partitions whose pointer changed; ``old`` reads
+        the FROM copies of those plus of the partitions ``dropped`` in
+        between; None when there is nothing to read. Both sides read
+        under the TO version's schema so exceptAll compares aligned
+        relations across an evolution boundary (a pre-evolution row
+        differs from its post-image exactly when the evolved column,
+        NULL before, or any value changed), and each hides the rows
+        its own version's deletion vectors delete."""
         retained = self.snapshots()
         for epoch in (from_epoch, to_epoch):
             if epoch not in retained:
@@ -2367,37 +2289,27 @@ class ParquetUpsertSink:
         m_from = self._load_manifest(from_epoch)
         m_to = self._load_manifest(to_epoch)
         changed = sorted(d for d, e in m_to.items() if m_from.get(d) != e)
-        # a delete_keys() commit can DROP partitions; their rows (and
-        # any row-level deletes inside surviving partitions) are only
-        # visible through the typed feed, so the post-image-only
-        # contract here must fail loudly rather than under-report
-        dropped = [d for d in m_from if d not in m_to]
-        if dropped:
-            raise ValueError(
-                f"partitions dropped between versions: {dropped} — a "
-                f"delete_keys() commit lies in this range; use "
-                f"read_changes_typed() for the delete-aware feed"
-            )
-        if not changed:  # identical versions (e.g. an empty commit)
-            return self.read_at(spark, to_epoch).limit(0)
-        files = os.path.join(self.snapshot_dir, "files")
-        # both sides read under the TO version's schema so exceptAll
-        # compares aligned relations across an evolution boundary; a
-        # pre-evolution row then differs from its post-image exactly
-        # when the evolved column (NULL before) or any value changed
-        new = self._read_snapshot_paths(
-            spark,
-            [os.path.join(files, f"epoch={m_to[d]}", d) for d in changed],
-            to_epoch,
-        )
+        dropped = sorted(d for d in m_from if d not in m_to)
+        to_entries, schema = self._resolve(spark, to_epoch)
+        new_paths = [self._epoch_copy(m_to[d], d) for d in changed]
         old_paths = [
-            os.path.join(files, f"epoch={m_from[d]}", d)
-            for d in changed
+            self._epoch_copy(m_from[d], d)
+            for d in changed + dropped
             if d in m_from
         ]
-        if not old_paths:
-            return new
-        return new.exceptAll(self._read_snapshot_paths(spark, old_paths, to_epoch))
+        new = (
+            self._compose(spark, new_paths, to_entries, schema)
+            if new_paths
+            else None
+        )
+        old = (
+            self._compose(
+                spark, old_paths, self._version_entries(from_epoch), schema
+            )
+            if old_paths
+            else None
+        )
+        return new, old, dropped
 
     def read_changes_typed(
         self, spark: SparkSession, from_epoch: int, to_epoch: int
@@ -2414,19 +2326,7 @@ class ParquetUpsertSink:
         on the same key→partition locality as the merge (a key never
         migrates partitions), which is what makes the per-partition
         key anti-join exact."""
-        retained = self.snapshots()
-        for epoch in (from_epoch, to_epoch):
-            if epoch not in retained:
-                raise ValueError(
-                    f"epoch {epoch} is not a retained snapshot "
-                    f"(retained: {retained}, max_snapshots="
-                    f"{self.max_snapshots}) — expired or never committed"
-                )
-        m_from = self._load_manifest(from_epoch)
-        m_to = self._load_manifest(to_epoch)
-        changed = sorted(d for d, e in m_to.items() if m_from.get(d) != e)
-        dropped = sorted(d for d in m_from if d not in m_to)
-        files = os.path.join(self.snapshot_dir, "files")
+        new, old, _ = self._version_diff(spark, from_epoch, to_epoch)
 
         def empty() -> DataFrame:  # degenerate branches only — lazy
             return (
@@ -2435,25 +2335,6 @@ class ParquetUpsertSink:
                 .withColumn("change_type", F.lit(""))
             )
 
-        new = (
-            self._read_snapshot_paths(
-                spark,
-                [os.path.join(files, f"epoch={m_to[d]}", d) for d in changed],
-                to_epoch,
-            )
-            if changed
-            else None
-        )
-        old_paths = [
-            os.path.join(files, f"epoch={m_from[d]}", d)
-            for d in changed
-            if d in m_from
-        ] + [os.path.join(files, f"epoch={m_from[d]}", d) for d in dropped]
-        old = (
-            self._read_snapshot_paths(spark, old_paths, to_epoch)
-            if old_paths
-            else None
-        )
         if new is None and old is None:  # identical versions
             return empty()
         upserts = (
@@ -2545,14 +2426,11 @@ class ParquetUpsertSink:
         self._distribute(self._to_physical(merged, logical)).write.mode(
             "overwrite"
         ).partitionBy("part_date").parquet(self.merged_path)
-        if logical is not None:
-            # the staging must carry the LOGICAL schema (with column-
-            # mapping metadata): _commit derives the authoritative
-            # schema file from here, and the physical parquet names
-            # alone cannot reconstruct the mapping
-            self._atomic_json_write(
-                self._staged_schema_file(), logical.jsonValue()
-            )
+        # the staging must carry the LOGICAL schema (with column-
+        # mapping metadata): _commit derives the authoritative schema
+        # file from here, and the physical parquet names alone cannot
+        # reconstruct the mapping
+        self._write_schema_file(logical, self._staged_schema_file())
         self._refresh_staged_stats()
         self._refresh_staged_blooms()
         touched_dirs = [self._part_dirname(v) for v in touched]
@@ -2593,18 +2471,9 @@ class ParquetUpsertSink:
                     else None
                 )
                 fields.append(StructField(c, src.dataType, True, md))
-        # same VOID→DATE partition-column pinning as _write_schema_file
-        from pyspark.sql.types import DateType, NullType
-
-        fields = [
-            StructField(f.name, DateType(), True)
-            if f.name == "part_date" and isinstance(f.dataType, NullType)
-            else f
-            for f in fields
-        ]
         return StructType(fields)
 
-    def _commit(self, spark: SparkSession, drop_staging: bool = True) -> None:
+    def _commit(self, spark: SparkSession, drop_staging: bool = True) -> dict:
         """Install the touched partitions from the durable merged copy
         by per-partition FILESYSTEM SWAP (the ``_finish_compact``
         pattern), then drop the staging. The staged content already IS
@@ -2622,21 +2491,17 @@ class ParquetUpsertSink:
         some partitions' physical files, which reads handle exactly
         (missing columns NULL-fill); the reverse order could leave an
         evolved table whose stale schema file silently drops the new
-        column from every read."""
+        column from every read. Returns the staging's ``_TOUCHED``
+        record ``{touched, emptied, op}``."""
         staged_dirs = sorted(
             d for d in os.listdir(self.merged_path) if d.startswith("part_date=")
         )
         if staged_dirs:
-            staged_logical = self._load_schema(self._staged_schema_file())
-            if staged_logical is not None:
-                # the stage step recorded the LOGICAL schema (column-
-                # mapping metadata included); the parquet footers carry
-                # only physical names
-                self._atomic_json_write(
-                    self._schema_file(), staged_logical.jsonValue()
-                )
-            else:  # legacy staging from before the stash existed
-                self._write_schema_file(spark.read.parquet(self.merged_path).schema)
+            # the stage step recorded the LOGICAL schema (column-mapping
+            # metadata included); the parquet footers carry only
+            # physical names
+            with open(self._staged_schema_file()) as fh:
+                self._atomic_json_write(self._schema_file(), json.load(fh))
             os.makedirs(self.path, exist_ok=True)
             for d in staged_dirs:
                 src = os.path.join(self.merged_path, d)
@@ -2651,32 +2516,28 @@ class ParquetUpsertSink:
                     # its side of the shared inodes)
                     self._copytree_link(src, dst)
         # partitions a DELETE emptied have no staged content to swap
-        # in; the stage-time _EMPTIED list names them (inferring from
+        # in; the stage-time _TOUCHED record names them (inferring from
         # what remains in a partially-drained staging would wrongly
         # count already-moved partitions). rmtree is a no-op replay.
-        try:
-            with open(self._touched_file()) as fh:
-                data = json.load(fh)
-            # bare-list legacy stagings predate deletes: none emptied
-            emptied = [] if isinstance(data, list) else data["emptied"]
-            touched_all = data if isinstance(data, list) else data["touched"]
-        except (FileNotFoundError, ValueError, KeyError):
-            emptied = []
-            touched_all = list(staged_dirs)
-        for d in emptied:
+        with open(self._touched_file()) as fh:
+            staged = json.load(fh)
+        for d in staged["emptied"]:
             shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
         # consolidated-cache write-through over the AUTHORITATIVE
         # touched list (not what remains in a partially-drained
         # staging — a recovery re-entry must refresh dirs the crashed
         # first pass already installed), BEFORE the staging drops: a
         # crash in between re-enters this commit and converges
-        self._refresh_consolidated(sorted(set(touched_all) | set(emptied)))
+        self._refresh_consolidated(
+            sorted(set(staged["touched"]) | set(staged["emptied"]))
+        )
         if drop_staging:
             shutil.rmtree(self.merged_path, ignore_errors=True)
         # the swap deleted target files in place; DataFrames planned
         # after this commit must not be scheduled against the session's
         # stale file listing (see _invalidate_listing)
         self._invalidate_listing(spark)
+        return staged
 
     def _staged_epoch(self) -> int | None:
         """Epoch id of a COMPLETE merged/delete staging surviving a
@@ -2711,24 +2572,18 @@ class ParquetUpsertSink:
             # created under the writer lock within a single operation);
             # a pending deletion-vector delta is the other kind
             return self._finish_pending_dv(spark)
-        touched = self._staged_touched(spark) if self.snapshot_dir else None
-        self._commit(spark, drop_staging=False)
-        self._snapshot(spark, epoch, touched, op=self._staged_op())
+        staged = self._commit(spark, drop_staging=False)
+        self._snapshot(spark, epoch, staged["touched"], op=staged["op"])
         # a crashed OCC commit's idempotence key rides in the staging:
         # record it before the staging drops, so a replayed OCC call
         # returns the committed version instead of re-applying a
         # non-idempotent payload (exactly-once OCC replay)
         try:
             with open(os.path.join(self.merged_path, "_OCC_KEY")) as fh:
-                data = json.load(fh)
-            if isinstance(data, dict):  # {"epoch": e, "writer": ns}
-                self._occ_record_applied(
-                    int(data["epoch"]), epoch, str(data.get("writer", ""))
-                )
-            else:  # legacy plain-int staging
-                self._occ_record_applied(int(data), epoch)
-        except (FileNotFoundError, ValueError, TypeError, KeyError):
-            pass
+                key = json.load(fh)  # {"epoch": e, "writer": ns}
+            self._occ_record_applied(int(key["epoch"]), epoch, key["writer"])
+        except (FileNotFoundError, ValueError):
+            pass  # not an OCC commit
         shutil.rmtree(self.merged_path, ignore_errors=True)
         return epoch
 
@@ -2794,12 +2649,15 @@ class ParquetUpsertSink:
             return None
 
     def _stored_schema(self):
-        """The log-recorded table schema, or None for tables written
-        before evolution support (those are homogeneous by
-        construction, so the footer the scan samples is correct)."""
+        """The log-recorded table schema, or None when none is recorded
+        (a first write that crashed before publishing it, or a file
+        deleted out of band: reads then sample the footers, see
+        ``_scan``, and the next staged commit publishes one)."""
         return self._load_schema(self._schema_file())
 
-    def _write_schema_file(self, schema) -> None:
+    def _write_schema_file(self, schema, path: str | None = None) -> None:
+        """Publish ``schema`` as the table's ``_schema.json`` — or, given
+        ``path``, record it in a staging for ``_commit`` to publish."""
         from pyspark.sql.types import DateType, NullType, StructField, StructType
 
         # partition-column type is INFERRED from directory names on the
@@ -2814,7 +2672,7 @@ class ParquetUpsertSink:
             for f in schema.fields
         ]
         self._atomic_json_write(
-            self._schema_file(), StructType(fields).jsonValue()
+            path or self._schema_file(), StructType(fields).jsonValue()
         )
 
     def _evolved_columns(self, existing: DataFrame, staged: DataFrame) -> list[str]:
@@ -3115,37 +2973,24 @@ class ParquetUpsertSink:
             spark.catalog.refreshByPath(self.snapshot_dir)
 
     def _read_table(
-        self,
-        spark: SparkSession,
-        apply_dv: bool = True,
-        with_positions: bool = False,
+        self, spark: SparkSession, with_positions: bool = False
     ) -> DataFrame:
-        """Read the live table under the authoritative schema: after an
-        evolution commit only the touched partitions physically carry
-        the new column, and a footer-sampled read could silently drop
-        it; the explicit schema makes every file NULL-fill what it
-        lacks (one tiny JSON read — never a footer sweep). Deletion
-        vectors are applied unless ``apply_dv=False`` (the DV delete's
-        own discovery scan, which needs the raw positions)."""
-        self._invalidate_listing(spark)
+        """The live table for writers, with the directory-encoded
+        ``part_date``, under the authoritative schema (one tiny JSON
+        read — never a footer sweep) through ``_compose``.
+        ``with_positions`` is the DV delete's own discovery scan: raw
+        file positions instead of applied deletion vectors, so replays
+        re-find already-hidden rows."""
         schema = self._stored_schema()
-        reader = (
-            spark.read
-            if schema is None
-            else spark.read.schema(self._physical_schema(schema))
-        )
-        df = reader.parquet(self.path)
-        if with_positions:
-            # the DV delete's positional probe: _metadata must bind
-            # while df is still the raw scan (mutually exclusive with
-            # apply_dv, whose anti-join names would collide)
-            df = df.withColumn(
-                "__dv_path", F.col("_metadata.file_path")
-            ).withColumn("__dv_pos", F.col("_metadata.row_index"))
-        if apply_dv:
-            # DV application first, while df is still the raw scan and
-            # the hidden _metadata column resolves
-            df = self._apply_dv(spark, df, self._live_dv_map())
+        if not with_positions:
+            return self._compose(
+                spark, [self.path], self._consolidated(), schema
+            )
+        # _metadata must bind while df is still the raw scan
+        df = self._scan(spark, [self.path], schema)
+        df = df.withColumn(
+            "__dv_path", F.col("_metadata.file_path")
+        ).withColumn("__dv_pos", F.col("_metadata.row_index"))
         return self._to_logical(df, schema)
 
     def _compact_staging(self) -> str:
@@ -3788,35 +3633,11 @@ class ParquetUpsertSink:
         NAMESPACE because epochs are only monotone per writer — a
         single global floor under oldest-version-first eviction would
         spuriously flag writer A's genuinely-new epochs once any
-        higher-based writer B entry ages out (ADVICE r12). Legacy
-        files (flat map, or scalar ``"floor"``) load into the default
-        namespace."""
+        higher-based writer B entry ages out (ADVICE r12)."""
         try:
             with open(self._occ_applied_file()) as fh:
-                data = json.load(fh)
+                return json.load(fh)
         except (FileNotFoundError, ValueError):
-            return {"applied": {}, "floors": {}}
-        try:
-            if isinstance(data, dict) and "applied" in data:
-                floors = {
-                    str(ns): int(v)
-                    for ns, v in data.get("floors", {}).items()
-                }
-                if data.get("floor") is not None:  # legacy scalar
-                    floors[""] = max(
-                        int(data["floor"]), floors.get("", int(data["floor"]))
-                    )
-                return {
-                    "applied": {
-                        str(k): int(v) for k, v in data["applied"].items()
-                    },
-                    "floors": floors,
-                }
-            return {
-                "applied": {str(k): int(v) for k, v in data.items()},
-                "floors": {},
-            }
-        except (AttributeError, TypeError, ValueError):
             return {"applied": {}, "floors": {}}
 
     def _occ_applied(self) -> dict[str, int]:
@@ -4031,7 +3852,7 @@ class ParquetUpsertSink:
         )
         out_cols = [f.name for f in schema.fields] if schema else None
 
-        def stage_keep_union_batch(pin_root: str, merged: str) -> None:
+        def stage_keep_union_batch(pin_root: str, merged: str):
             # audit per ATTEMPT against the constraints as pinned (a
             # constraint added mid-flight flips the metadata
             # fingerprint and forces this re-audit via retry)
@@ -4054,6 +3875,7 @@ class ParquetUpsertSink:
             self._distribute(self._to_physical(out, schema)).write.mode(
                 "overwrite"
             ).partitionBy("part_date").parquet(merged)
+            return out.schema
 
         return self._occ_commit(
             spark,
@@ -4084,7 +3906,7 @@ class ParquetUpsertSink:
         spark: SparkSession,
         epoch_id: int,
         touched: list[str],
-        stage_fn: Callable[[str, str], None],
+        stage_fn: Callable[[str, str], "StructType"],
         *,
         occ_root: str,
         entry_schema=None,
@@ -4096,10 +3918,10 @@ class ParquetUpsertSink:
         """The generic OCC protocol (shared by ``write_batch_occ`` and
         ``merge_into_occ``): pin → ``stage_fn(pin_root, merged_dir)``
         builds the touched partitions' complete post-commit bytes from
-        the immutable pin → conflict-checked swap through the existing
-        crash-safe staging. ``occ_root`` is the caller's private work
-        dir (it may already hold the staged source); removed here on
-        every exit path.
+        the immutable pin and returns their logical schema →
+        conflict-checked swap through the existing crash-safe staging.
+        ``occ_root`` is the caller's private work dir (it may already
+        hold the staged source); removed here on every exit path.
 
         ``entry_schema`` is the stored schema the CALLER validated its
         scope against (and bound into ``stage_fn``'s closure). Every
@@ -4169,12 +3991,13 @@ class ParquetUpsertSink:
                         pinned_fp[d] = self._dir_fingerprint(src)
                     meta_fp = self._meta_fingerprint()
                 # -- stage (NO lock: reads only the immutable pin) ----
-                stage_fn(pin_root, merged)
-                if schema is not None:
-                    self._atomic_json_write(
-                        os.path.join(merged, "_LOGICAL_SCHEMA.json"),
-                        schema.jsonValue(),
-                    )
+                staged_schema = stage_fn(pin_root, merged)
+                # a schema-less table (a first write that crashed before
+                # publishing _schema.json) takes the staged output's
+                self._write_schema_file(
+                    schema if schema is not None else staged_schema,
+                    os.path.join(merged, "_LOGICAL_SCHEMA.json"),
+                )
                 self._refresh_staged_stats(merged)
                 self._refresh_staged_blooms(merged)
                 emptied = [
@@ -4383,7 +4206,7 @@ class ParquetUpsertSink:
         )
         out_cols = [f.name for f in schema.fields] if schema else None
 
-        def stage_merge_clauses(pin_root: str, merged_dir: str) -> None:
+        def stage_merge_clauses(pin_root: str, merged_dir: str):
             pin_dirs = [
                 os.path.join(pin_root, d)
                 for d in touched
@@ -4415,6 +4238,7 @@ class ParquetUpsertSink:
             self._distribute(self._to_physical(out, schema)).write.mode(
                 "overwrite"
             ).partitionBy("part_date").parquet(merged_dir)
+            return out.schema
 
         return self._occ_commit(
             spark,
@@ -4428,8 +4252,10 @@ class ParquetUpsertSink:
             writer_id=writer_id,
         )
 
-    def _phys_name_of(self, logical: str) -> str:
-        schema = self._stored_schema()
+    def _phys_name_of(self, logical: str, schema=None) -> str:
+        """Physical column name of ``logical`` under ``schema`` (default:
+        the live table's)."""
+        schema = self._stored_schema() if schema is None else schema
         if schema is not None:
             for f in schema.fields:
                 if f.name == logical:
@@ -4587,14 +4413,16 @@ class ParquetUpsertSink:
             return True
         return False
 
-    def _source_bound_pred(self, lower, upper):
-        """The re-applied partition-source predicate: results never
-        depend on the dir skipping being right."""
+    @staticmethod
+    def _bound_pred(column: str, lower, upper):
+        """``lower <= column <= upper`` (either side optional) — the
+        predicate every skipping read re-applies, so results never
+        depend on the skipping being right."""
         pred = F.lit(True)
         if lower is not None:
-            pred = pred & (F.col(self.partition_source) >= F.lit(lower))
+            pred = pred & (F.col(column) >= F.lit(lower))
         if upper is not None:
-            pred = pred & (F.col(self.partition_source) <= F.lit(upper))
+            pred = pred & (F.col(column) <= F.lit(upper))
         return pred
 
     def read_pruned(
@@ -4612,70 +4440,72 @@ class ParquetUpsertSink:
         [lower, upper] — after a clustered rewrite a selective range
         predicate reads O(matching files), not O(table), which is the
         second pruning axis on top of partition pruning at 100 TB.
-        Files or partitions without stats are always read (absence
-        degrades to correctness, never to a wrong skip; deletion-
-        vector deletes only SHRINK a file's true range, so stale
-        bounds stay valid over-approximations). The range predicate is
-        re-applied to the composed scan, so results never depend on
-        the stats. ``source_lower``/``source_upper`` additionally
-        bound the PARTITION source column: dirs whose time period is
-        provably disjoint are skipped whole (the first pruning axis —
-        at 100 TB partition pruning removes the bulk before any
-        per-file check runs) and the bound re-applies as a predicate.
-        Returns (DataFrame, files_selected, files_total) —
+        Planning is in-memory over ONE read of the consolidated
+        metadata (file lists, stats, deletion vectors — VERDICT r9
+        item 4). Files or partitions without stats are always read
+        (absence degrades to correctness, never to a wrong skip;
+        deletion-vector deletes only SHRINK a file's true range, so
+        stale bounds stay valid over-approximations). The range
+        predicate is re-applied to the composed scan, so results never
+        depend on the stats. ``source_lower``/``source_upper``
+        additionally bound the PARTITION source column: dirs whose
+        time period is provably disjoint are skipped whole (the first
+        pruning axis — at 100 TB partition pruning removes the bulk
+        before any per-file check runs) and the bound re-applies as a
+        predicate. Returns (DataFrame, files_selected, files_total) —
         the counts are the pruning proof the registry entry asserts.
         ``column`` is the logical name; stats live under the physical
         one."""
         if lower is None and upper is None:
             raise ValueError("read_pruned needs at least one bound")
-        self._repair_for_read(spark)
-        schema = self._stored_schema()
-        phys = self._phys_name_of(column)
-        # ONE metadata read plans the whole scan (file lists, stats,
-        # deletion vectors all come from the consolidated cache —
-        # VERDICT r9 item 4); pre-fold tables fall back to per-dir reads
-        cons = self._consolidated()
-        if cons is not None:
-            entries = {os.path.join(self.path, d): e for d, e in cons.items()}
-        else:
-            entries = self._entries_for_dirs(
-                [
-                    os.path.join(self.path, d)
-                    for d in sorted(os.listdir(self.path))
-                    if d.startswith("part_date=")
-                ]
-            )
+        return self._read_skipping(
+            spark,
+            None,
+            column,
+            lambda entries, phys: self._select_files_from_entries(
+                entries, phys, lower, upper
+            ),
+            self._bound_pred(column, lower, upper),
+            source_lower,
+            source_upper,
+        )
+
+    def _read_skipping(
+        self,
+        spark: SparkSession,
+        version: int | None,
+        column: str,
+        select: Callable[[dict[str, dict], str], tuple[list[str], int]],
+        pred,
+        source_lower=None,
+        source_upper=None,
+    ) -> tuple[DataFrame, int, int]:
+        """The one implementation behind ``read_pruned``/``read_point``
+        and their ``_at`` twins: resolve the table state (``version``
+        None = live), skip partition dirs provably disjoint from the
+        partition-source bound, let ``select(entries, physical column)``
+        choose files from the metadata entries, then compose the
+        chosen files and re-apply ``pred`` and the source bound. The
+        physical column comes from the resolved schema, so pruning
+        composes with renames across versions."""
+        entries, schema = self._resolve(spark, version)
         skipped_files = 0
         if source_lower is not None or source_upper is not None:
             eligible = {}
             for pdir, e in entries.items():
                 if self._partition_disjoint(
-                    os.path.basename(pdir.rstrip("/")), source_lower, source_upper
+                    os.path.basename(pdir), source_lower, source_upper
                 ):
                     skipped_files += len(e.get("files", []))
                 else:
                     eligible[pdir] = e
             entries = eligible
-        chosen, total = self._select_files_from_entries(
-            entries, phys, lower, upper
+        chosen, total = select(entries, self._phys_name_of(column, schema))
+        pred = pred & self._bound_pred(
+            self.partition_source, source_lower, source_upper
         )
-        total += skipped_files
-        self._invalidate_listing(spark)
-        if not chosen:
-            base = self._read_table(spark).limit(0)
-        else:
-            reader = spark.read.option("basePath", self.path)
-            if schema is not None:
-                reader = reader.schema(self._physical_schema(schema))
-            df = reader.parquet(*chosen)
-            df = self._apply_dv(spark, df, self._dv_from_entries(entries))
-            base = self._to_logical(df, schema)
-        pred = self._source_bound_pred(source_lower, source_upper)
-        if lower is not None:
-            pred = pred & (F.col(column) >= F.lit(lower))
-        if upper is not None:
-            pred = pred & (F.col(column) <= F.lit(upper))
-        return base.filter(pred).drop("part_date"), len(chosen), total
+        df = self._compose(spark, chosen, entries, schema).filter(pred)
+        return df, len(chosen), total + skipped_files
 
     @staticmethod
     def _select_files_from_entries(
@@ -4733,59 +4563,23 @@ class ParquetUpsertSink:
         """Data-skipping TIME-TRAVEL read: ``read_at`` semantics with
         the same file-level stats pruning as ``read_pruned``. Works
         because the hardlinked epoch copies carry each partition's
-        ``_stats.json`` (and ``_dv.json``) AS OF that commit — the
-        version's own bounds prune the version's own files. The
-        version's sidecar schema resolves the logical column to its
-        then-physical name, so pruning composes with renames across
-        the evolution boundary."""
+        ``_stats.json`` (and ``_dv.json``) AS OF that commit and the
+        manifest folds them — the version's own bounds prune the
+        version's own files from one JSON read. The version's sidecar
+        schema resolves the logical column to its then-physical name,
+        so pruning composes with renames across the evolution
+        boundary."""
         if lower is None and upper is None:
             raise ValueError("read_pruned_at needs at least one bound")
-        retained = self.snapshots()
-        eligible = [e for e in retained if e <= epoch_id]
-        if not eligible:
-            raise ValueError(f"no snapshot at or before epoch {epoch_id}")
-        manifest = self._load_manifest(eligible[-1])
-        schema = self._epoch_schema(eligible[-1])
-        phys = column
-        if schema is not None:
-            for f in schema.fields:
-                if f.name == column:
-                    phys = self._physical_name(f)
-        # plan from the manifest's FOLDED metadata (the same one JSON
-        # read that resolved the parts); a dir absent from the fold
-        # (legacy manifest) degrades to a per-dir listing for just it
-        folded = self._load_manifest_sidecars(eligible[-1]) or {}
-        entries = {}
-        for d, e in sorted(manifest.items()):
-            pdir = os.path.join(self.snapshot_dir, "files", f"epoch={e}", d)
-            entries[pdir] = folded.get(d) or self._dir_entry(pdir)
-        chosen, total = self._select_files_from_entries(
-            entries, phys, lower, upper
+        return self._read_skipping(
+            spark,
+            epoch_id,
+            column,
+            lambda entries, phys: self._select_files_from_entries(
+                entries, phys, lower, upper
+            ),
+            self._bound_pred(column, lower, upper),
         )
-        self._invalidate_listing(spark)
-        from pyspark.sql.types import StructType
-
-        if schema is not None:
-            schema = StructType(
-                [f for f in schema.fields if f.name != "part_date"]
-            )
-        if not chosen:
-            base = self.read_at(spark, epoch_id).limit(0)
-        else:
-            reader = (
-                spark.read
-                if schema is None
-                else spark.read.schema(self._physical_schema(schema))
-            )
-            df = reader.parquet(*chosen)
-            df = self._apply_dv(spark, df, self._dv_from_entries(entries))
-            base = self._to_logical(df, schema)
-        pred = F.lit(True)
-        if lower is not None:
-            pred = pred & (F.col(column) >= F.lit(lower))
-        if upper is not None:
-            pred = pred & (F.col(column) <= F.lit(upper))
-        return base.filter(pred), len(chosen), total
 
     # -- recorded clustering (the liquid-clustering UX, r10) -----------------
     def _clustering_file(self) -> str:
@@ -5234,55 +5028,23 @@ class ParquetUpsertSink:
         the IN predicate is re-applied to the composed scan, so
         results never depend on the sidecars. Returns (DataFrame,
         files_selected, files_total) — the pruning proof."""
+        self._check_probe("read_point", values)
+        return self._read_skipping(
+            spark,
+            None,
+            column,
+            lambda entries, phys: self._select_files_point(entries, phys, values),
+            F.col(column).isin(values),
+            source_lower,
+            source_upper,
+        )
+
+    @staticmethod
+    def _check_probe(name: str, values: list) -> None:
         if not values:
-            raise ValueError("read_point needs at least one probe value")
+            raise ValueError(f"{name} needs at least one probe value")
         if any(v is None for v in values):
             raise ValueError("NULL never matches an IN probe")
-        self._repair_for_read(spark)
-        schema = self._stored_schema()
-        phys = self._phys_name_of(column)
-        cons = self._consolidated()
-        if cons is not None:
-            entries = {os.path.join(self.path, d): e for d, e in cons.items()}
-        else:
-            entries = self._entries_for_dirs(
-                [
-                    os.path.join(self.path, d)
-                    for d in sorted(os.listdir(self.path))
-                    if d.startswith("part_date=")
-                ]
-            )
-        skipped_files = 0
-        if source_lower is not None or source_upper is not None:
-            eligible = {}
-            for pdir, e in entries.items():
-                if self._partition_disjoint(
-                    os.path.basename(pdir.rstrip("/")), source_lower, source_upper
-                ):
-                    skipped_files += len(e.get("files", []))
-                else:
-                    eligible[pdir] = e
-            entries = eligible
-        chosen, total = self._select_files_point(entries, phys, values)
-        total += skipped_files
-        self._invalidate_listing(spark)
-        if not chosen:
-            base = self._read_table(spark).limit(0)
-        else:
-            reader = spark.read.option("basePath", self.path)
-            if schema is not None:
-                reader = reader.schema(self._physical_schema(schema))
-            df = reader.parquet(*chosen)
-            df = self._apply_dv(spark, df, self._dv_from_entries(entries))
-            base = self._to_logical(df, schema)
-        return (
-            base.filter(
-                self._source_bound_pred(source_lower, source_upper)
-                & F.col(column).isin(values)
-            ).drop("part_date"),
-            len(chosen),
-            total,
-        )
 
     @classmethod
     def _select_files_point(
@@ -5383,46 +5145,14 @@ class ParquetUpsertSink:
         schema resolves the logical column through any later renames,
         and the IN predicate re-applies, so results never depend on
         the sidecars."""
-        if not values:
-            raise ValueError("read_point_at needs at least one probe value")
-        if any(v is None for v in values):
-            raise ValueError("NULL never matches an IN probe")
-        retained = self.snapshots()
-        eligible = [e for e in retained if e <= epoch_id]
-        if not eligible:
-            raise ValueError(f"no snapshot at or before epoch {epoch_id}")
-        manifest = self._load_manifest(eligible[-1])
-        schema = self._epoch_schema(eligible[-1])
-        phys = column
-        if schema is not None:
-            for f in schema.fields:
-                if f.name == column:
-                    phys = self._physical_name(f)
-        folded = self._load_manifest_sidecars(eligible[-1]) or {}
-        entries = {}
-        for d, e in sorted(manifest.items()):
-            pdir = os.path.join(self.snapshot_dir, "files", f"epoch={e}", d)
-            entries[pdir] = folded.get(d) or self._dir_entry(pdir)
-        chosen, total = self._select_files_point(entries, phys, values)
-        self._invalidate_listing(spark)
-        from pyspark.sql.types import StructType
-
-        if schema is not None:
-            schema = StructType(
-                [f for f in schema.fields if f.name != "part_date"]
-            )
-        if not chosen:
-            base = self.read_at(spark, epoch_id).limit(0)
-        else:
-            reader = (
-                spark.read
-                if schema is None
-                else spark.read.schema(self._physical_schema(schema))
-            )
-            df = reader.parquet(*chosen)
-            df = self._apply_dv(spark, df, self._dv_from_entries(entries))
-            base = self._to_logical(df, schema)
-        return base.filter(F.col(column).isin(values)), len(chosen), total
+        self._check_probe("read_point_at", values)
+        return self._read_skipping(
+            spark,
+            epoch_id,
+            column,
+            lambda entries, phys: self._select_files_point(entries, phys, values),
+            F.col(column).isin(values),
+        )
 
     def _finish_compact(self, staging: str) -> None:
         """Swap every partition out of a COMPLETE compaction staging

@@ -29,10 +29,11 @@ from real_time_ride_hailing_data_pipeline_spark.streaming.sinks import (
 
 # Fault-injection sweeps replay a multi-commit sequence once per
 # instrumented filesystem op — minutes per test (465 s for the file in
-# the r14 baseline run). Deselected from the default (driver) run via
-# pytest.ini; run with `pytest -m slow` / `-m ""` (VERDICT r13 item 1 —
-# nothing deleted, nothing weakened).
-pytestmark = pytest.mark.slow
+# the r14 baseline run). Each sweep carries @pytest.mark.slow and is
+# deselected from the default run via pytest.ini; run them with
+# `pytest -m slow` / `-m ""` (VERDICT r13 item 1 — nothing deleted,
+# nothing weakened). The default tier keeps a 4-point smoke of the
+# main sequence (test_crash_matrix_smoke_four_points_recover).
 
 D1 = dt.datetime(2024, 1, 15, 10, 0)
 D2 = dt.datetime(2024, 1, 16, 11, 0)
@@ -148,44 +149,37 @@ def _assert_final_state(spark, sink):
     assert typed == [("delete", "a")]
 
 
-def test_crash_matrix_every_fs_op_recovers(spark, tmp_path, monkeypatch):
-    """Crash after the Nth orchestration-layer FS op, replay, assert
-    the exact no-crash state — for a stride of crash points covering
-    the whole sequence. A point where recovery diverges (lost
-    partition, resurrected row, torn snapshot log) fails loudly with
-    the op index."""
-    injector = _FaultInjector(monkeypatch)
-    injector.install()
-
-    # measure the op budget of a clean run
-    base = tmp_path / "baseline"
-    sink = ParquetUpsertSink(
-        str(base / "t"),
+def _main_sink(root) -> ParquetUpsertSink:
+    return ParquetUpsertSink(
+        str(root / "t"),
         key_cols=("k", "window_start"),
-        snapshot_dir=str(base / "s"),
+        snapshot_dir=str(root / "s"),
         schema_evolution=True,
         retries=0,
     )
+
+
+def _measure_main_op_budget(spark, tmp_path, injector) -> int:
+    """Run the main sequence without a crash, assert its final state,
+    and return how many orchestration-layer FS ops it took."""
+    sink = _main_sink(tmp_path / "baseline")
     injector.arm(None)
     for step in _steps(spark, sink):
         step()
     total_ops = injector.count
     _assert_final_state(spark, sink)
     assert total_ops > 10  # the instrumentation actually sees the ops
+    return total_ops
 
-    # dense early (creation/first-commit windows), stride-sampled after
-    crash_points = list(range(1, min(13, total_ops + 1))) + list(
-        range(13, total_ops + 1, 5)
-    )
+
+def _crash_and_replay_main(spark, tmp_path, injector, crash_points) -> None:
+    """For each crash point: crash after that many FS ops, replay from
+    the crashed step (a checkpointed restart), and assert the exact
+    no-crash state. A point where recovery diverges (lost partition,
+    resurrected row, torn snapshot log) fails loudly with the op
+    index."""
     for crash_at in crash_points:
-        root = tmp_path / f"crash{crash_at}"
-        sink = ParquetUpsertSink(
-            str(root / "t"),
-            key_cols=("k", "window_start"),
-            snapshot_dir=str(root / "s"),
-            schema_evolution=True,
-            retries=0,
-        )
+        sink = _main_sink(tmp_path / f"crash{crash_at}")
         steps = _steps(spark, sink)
         injector.arm(crash_at)
         crashed_step = None
@@ -206,6 +200,36 @@ def test_crash_matrix_every_fs_op_recovers(spark, tmp_path, monkeypatch):
                 f"divergence after crash at FS op #{crash_at} "
                 f"(step {crashed_step}): {exc}"
             ) from exc
+
+
+@pytest.mark.slow
+def test_crash_matrix_every_fs_op_recovers(spark, tmp_path, monkeypatch):
+    """Crash after the Nth orchestration-layer FS op, replay, assert
+    the exact no-crash state — for a stride of crash points covering
+    the whole sequence."""
+    injector = _FaultInjector(monkeypatch)
+    injector.install()
+    total_ops = _measure_main_op_budget(spark, tmp_path, injector)
+    # dense early (creation/first-commit windows), stride-sampled after
+    crash_points = list(range(1, min(13, total_ops + 1))) + list(
+        range(13, total_ops + 1, 5)
+    )
+    _crash_and_replay_main(spark, tmp_path, injector, crash_points)
+
+
+def test_crash_matrix_smoke_four_points_recover(spark, tmp_path, monkeypatch):
+    """Default-tier smoke of the main sweep: crash at the first op,
+    at one and two thirds of the measured budget, and at the last op,
+    then replay and assert the exact no-crash state. Keeps the commit,
+    pending-epoch recovery and snapshot paths under fault injection in
+    every default run; the full stride is the slow sweep above."""
+    injector = _FaultInjector(monkeypatch)
+    injector.install()
+    total_ops = _measure_main_op_budget(spark, tmp_path, injector)
+    crash_points = sorted(
+        {1, max(1, total_ops // 3), max(1, 2 * total_ops // 3), total_ops}
+    )
+    _crash_and_replay_main(spark, tmp_path, injector, crash_points)
 
 
 # -- partition-evolution crash matrix (VERDICT r7 item 4) -----------------
@@ -293,6 +317,7 @@ def _assert_evo_final_state(spark, sink):
     assert n == len(EVO_EXPECTED_LIVE)
 
 
+@pytest.mark.slow
 def test_crash_matrix_partition_evolution_recovers(spark, tmp_path, monkeypatch):
     """Crash after the Nth FS op across merge -> (evolve + merge) ->
     cross-spec merge; replay from the crashed epoch; assert the exact
@@ -396,6 +421,7 @@ def _r9_assert_final(spark, sink):
         assert got == want, f"epoch {epoch}"
 
 
+@pytest.mark.slow
 def test_crash_matrix_dv_and_column_mapping_recovers(spark, tmp_path, monkeypatch):
     """The r9 write surface under the same fault sweep: a deletion-
     vector delete (atomic intent + sidecar fold), a metadata-only
@@ -517,6 +543,7 @@ def _r10_assert_final(spark, sink):
     assert {r["k"] for r in dfb.collect()} == {"k5"} and sb < tb
 
 
+@pytest.mark.slow
 def test_crash_matrix_bloom_zorder_merge_recovers(spark, tmp_path, monkeypatch):
     """The r10 write surface under the fault sweep: bloom-index build,
     z-order clustered compaction (staged swap), a schema-evolving
@@ -644,6 +671,7 @@ def _occ_assert_final(spark, sink):
     )  # the emptied partition is gone, not resurrected
 
 
+@pytest.mark.slow
 def test_crash_matrix_occ_commits_recover_exactly_once(
     spark, tmp_path, monkeypatch
 ):
@@ -699,6 +727,7 @@ def test_crash_matrix_occ_commits_recover_exactly_once(
             ) from exc
 
 
+@pytest.mark.slow
 def test_crash_matrix_streaming_kill_resume_multi_stream_occ(spark, tmp_path):
     """VERDICT r12 item 7: kill ONE of two live OCC ingest streams in
     the worst window — AFTER its non-idempotent merge committed but
@@ -805,6 +834,7 @@ def test_crash_matrix_streaming_kill_resume_multi_stream_occ(spark, tmp_path):
     assert got2 == got, got2
 
 
+@pytest.mark.slow
 def test_crash_matrix_streaming_kill_resume_ivf_index_ingest(spark, tmp_path):
     """r13 vector-index maintenance under the same worst crash window:
     kill the ingest stream AFTER a micro-batch's partitions landed in

@@ -787,6 +787,29 @@ def test_batch_topk_masked_screen_is_lossless(spark, data):
     assert got == sorted(expected), (got, sorted(expected))
 
 
+def test_batch_topk_masks_missing_a_query_id_raise_value_error(spark):
+    """A ``query_masks`` map that misses a query id is a caller error
+    named at the boundary (a descriptive ValueError), not a bare
+    KeyError from inside the screen setup."""
+    import pytest
+
+    from real_time_ride_hailing_data_pipeline_spark.operators import (
+        similarity as sim,
+    )
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0], 0), (1, [0.0, 1.0], 1)],
+        "vec_id long, embedding array<float>, cell int",
+    )
+    qdf = spark.createDataFrame(
+        [(7, [1.0, 0.0]), (8, [0.0, 1.0])], "query_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match=r"query_masks has no entry .*\[8\]"):
+        sim.brute_force_topk_batch(
+            df, qdf, k=1, mask_col="cell", query_masks={7: [0]}
+        )
+
+
 def test_batch_topk_zero_norm_vectors_do_not_poison_screen(spark):
     """ADVICE r12 (low): a zero-norm corpus vector's NaN cosine must
     not land on the screen's partition cut and silently drop the whole

@@ -2537,22 +2537,24 @@ def test_consolidated_metadata_one_read_per_plan(spark, tmp_path):
     assert full_at.count() == 399
 
 
-def test_consolidated_metadata_legacy_table_falls_back(spark, tmp_path):
-    """A table whose _sidecars.json is missing (written by pre-fold
-    code, or deleted out-of-band) still reads/prunes correctly via the
-    per-dir sidecar sweep — the cache is a plan-cost optimization,
-    never a correctness dependency."""
+def test_consolidated_metadata_lost_cache_rebuilds_from_dirs(spark, tmp_path):
+    """A table whose _sidecars.json is lost (deleted out of band, or a
+    crash between a first write's directory overwrite and its cache
+    refresh) still reads and prunes correctly: readers build the full
+    map in memory from the partition dirs and never write it, and the
+    next commit persists the FULL map — a commit touching one of two
+    partitions must not drop the other from the cache (that lost the
+    untouched partition's deletion vector and its files from every
+    pruned plan)."""
+    import json
+
     sink = _evo_sink(tmp_path)
     rows = [
         (f"k{i}", dt.datetime(2024, 1, 15 + (i % 2), 10, i % 60), i)
         for i in range(100)
     ]
-    sink.write_batch(
-        spark.createDataFrame(
-            rows, "k string, window_start timestamp, total bigint"
-        ),
-        0,
-    )
+    schema = "k string, window_start timestamp, total bigint"
+    sink.write_batch(spark.createDataFrame(rows, schema), 0)
     sink.compact(spark, files_per_partition=4, sort_by="total")
     sink.delete_keys(
         spark.createDataFrame(
@@ -2562,11 +2564,111 @@ def test_consolidated_metadata_legacy_table_falls_back(spark, tmp_path):
         1,
         mode="merge_on_read",
     )
-    os.remove(os.path.join(sink.path, "_sidecars.json"))
+    cache = os.path.join(sink.path, "_sidecars.json")
+    both = {"2024-01-15", "2024-01-16"}
+
+    def files_by_partition():
+        return {r["part_date"] for r in sink.describe_files(spark).collect()}
+
+    os.remove(cache)
     assert sink.read(spark).count() == 99  # DV still applies
     df, sel, tot = sink.read_pruned(spark, "total", lower=95)
     assert sel < tot
     assert sorted(r["total"] for r in df.collect()) == list(range(95, 99))
+    assert files_by_partition() == both
+    assert not os.path.exists(cache)  # readers never write the cache
+
+    # one commit touching only 2024-01-15: the DV'd 2024-01-16 partition
+    # must survive in the persisted cache
+    sink.write_batch(
+        spark.createDataFrame(
+            [("k0", dt.datetime(2024, 1, 15, 10, 0), 1000)], schema
+        ),
+        2,
+    )
+    assert sink.read(spark).count() == 99  # the DV did not come back
+    df, sel, tot = sink.read_pruned(spark, "total", lower=95)
+    assert sorted(r["total"] for r in df.collect()) == [95, 96, 97, 98, 1000]
+    df, _, _ = sink.read_point(spark, "k", ["k97", "k0", "k99"])
+    assert sorted(r["k"] for r in df.collect()) == ["k0", "k97"]
+    assert files_by_partition() == both
+    with open(cache) as fh:
+        assert set(json.load(fh)) == {f"part_date={d}" for d in both}
+
+
+@pytest.mark.parametrize("op", ["delete", "update", "merge_into", "occ"])
+def test_first_write_crash_before_schema_publish_recovers(spark, tmp_path, op):
+    """A first write that crashed between its directory overwrite and
+    the _schema.json publish leaves a table without a recorded schema.
+    Every reader serves it under the footer schema (the pruned readers
+    too, including a plan that selects no file), and every staging
+    writer commits through it: the staging records the scanned schema
+    for the commit to publish, so the commit neither fails nor wedges
+    the table, and the next write_batch lands."""
+    sink = _evo_sink(tmp_path, retries=0)  # a crash is not retried
+    rows = [
+        (f"k{i}", dt.datetime(2024, 1, 15 + (i % 2), 10, i % 60), i)
+        for i in range(100)
+    ]
+    schema = "k string, window_start timestamp, total bigint"
+    publish = sink._write_schema_file
+
+    def crash(s, path=None):
+        if path is None:  # the table's _schema.json, not a staging's
+            raise RuntimeError("injected crash before the schema publish")
+        publish(s, path)
+
+    sink._write_schema_file = crash
+    with pytest.raises(RuntimeError, match="injected crash"):
+        sink.write_batch(spark.createDataFrame(rows, schema), 0)
+    del sink._write_schema_file
+    schema_file = os.path.join(sink.path, "_schema.json")
+    assert not os.path.exists(schema_file)
+
+    def totals():
+        return sorted(r["total"] for r in sink.read(spark).collect())
+
+    assert totals() == list(range(100))
+    df, _, _ = sink.read_pruned(spark, "total", lower=95)
+    assert sorted(r["total"] for r in df.collect()) == list(range(95, 100))
+    df, _, _ = sink.read_pruned(
+        spark, "total", lower=0, source_lower=dt.datetime(2030, 1, 1)
+    )
+    assert df.count() == 0 and "total" in df.columns
+    df, _, _ = sink.read_point(spark, "k", ["k3", "k98"])
+    assert sorted(r["k"] for r in df.collect()) == ["k3", "k98"]
+    assert not os.path.exists(schema_file)  # readers never write it
+
+    k99 = ("k99", dt.datetime(2024, 1, 16, 10, 39))
+    if op == "delete":
+        sink.delete_keys(
+            spark.createDataFrame([k99], "k string, window_start timestamp"), 1
+        )
+        expected = list(range(99))
+    elif op == "update":
+        sink.update_where(spark, "k = 'k99'", {"total": "total + 1000"}, 1)
+        expected = list(range(99)) + [1099]
+    elif op == "merge_into":
+        sink.merge_into(
+            spark.createDataFrame([(*k99, 5000)], schema),
+            1,
+            when_matched_update={"total": "s.total"},
+        )
+        expected = list(range(99)) + [5000]
+    else:
+        sink.write_batch_occ(spark.createDataFrame([(*k99, 5000)], schema), 1)
+        expected = list(range(99)) + [5000]
+    assert 1 in sink.snapshots()
+    assert os.path.exists(schema_file)  # the commit published it
+    assert totals() == expected
+
+    sink.write_batch(
+        spark.createDataFrame(
+            [("k0", dt.datetime(2024, 1, 15, 10, 0), 2000)], schema
+        ),
+        2,
+    )
+    assert totals() == sorted(expected[1:] + [2000])
 
 
 # -- cross-process writer exclusion (r10, VERDICT r9 item 6) ----------------
@@ -3340,6 +3442,8 @@ def test_occ_crash_recovery_records_writer_scoped_key(spark, tmp_path):
     _os.makedirs(sink.merged_path, exist_ok=True)
     with open(_os.path.join(sink.merged_path, "_OCC_KEY"), "w") as fh:
         _json.dump({"epoch": 7, "writer": "x"}, fh)
+    with open(_os.path.join(sink.merged_path, "_TOUCHED"), "w") as fh:
+        _json.dump({"touched": [], "emptied": [], "op": "merge"}, fh)
     with open(_os.path.join(sink.merged_path, "_EPOCH"), "w") as fh:
         _json.dump(v, fh)
     open(_os.path.join(sink.merged_path, "_SUCCESS"), "w").close()
