@@ -182,8 +182,8 @@ class ParquetUpsertSink:
         # loudly; note the pre-evolution code SILENTLY DROPPED columns
         # a batch omitted from every touched partition, which is the
         # worse failure. The table's authoritative schema lives in
-        # ``<path>/_schema.json`` (committed before each destructive
-        # overwrite) so reads never depend on which parquet footer the
+        # ``<path>/_schema.json`` (published before each partition
+        # swap) so reads never depend on which parquet footer the
         # scan samples first — footer-merge (``mergeSchema=true``)
         # reads every file footer, which is exactly what a 100 TB
         # table cannot afford; a log-recorded schema is how
@@ -306,14 +306,11 @@ class ParquetUpsertSink:
         remains in a partially-drained staging, so a crashed swap can
         never delete an already-installed partition on re-entry."""
         with self._writer_lock():
-            self._finish_compact(self._compact_staging())
-            self._finish_migrate()
-            self._heal_migration_snapshot(spark)
             # an unapplied merge/delete commit must land BEFORE the
             # re-layout: migrating first would delete the old-spec dirs
             # its staging is about to re-install (duplicating keys
             # across specs when the stream later replays the epoch)
-            self._finish_pending_epoch(spark)
+            self._recover(spark)
             if not self._table_exists():
                 return
             current = self._read_table(spark)
@@ -502,12 +499,8 @@ class ParquetUpsertSink:
         if self.snapshot_dir is None:
             raise ValueError("sink was built without snapshot_dir")
         with self._writer_lock():
-            # same preamble as migrate: no pending work may straddle
-            # a re-layout of the table
-            self._finish_compact(self._compact_staging())
-            self._finish_migrate()
-            self._heal_migration_snapshot(spark)
-            self._finish_pending_epoch(spark)
+            # no pending work may straddle a re-layout of the table
+            self._recover(spark)
             retained = self.snapshots()
             if epoch_id not in retained:
                 raise ValueError(
@@ -664,19 +657,24 @@ class ParquetUpsertSink:
 
     # -- the foreachBatch hook -------------------------------------------
     def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """MERGE one micro-batch: stage it, MATERIALIZE the merged
-        touched-partition content to a staging directory, then commit
-        by overwriting the touched partitions from that durable copy.
-        Idempotent: applying the same batch N times = applying it once.
+        """MERGE one micro-batch: MATERIALIZE the merged touched-
+        partition content (keep ∪ batch) to a staging directory, then
+        commit by installing the touched partitions from that durable
+        copy. Idempotent: applying the same batch N times = applying it
+        once. A first write (no live partition) has an empty keep side,
+        so the batch itself is staged — one partitioned write, like any
+        commit — and the table directory is never truncated: the
+        partition specs, constraints, clustering, bloom declarations
+        and OCC ledger recorded on an empty or drained table stay.
 
-        Crash safety: the destructive overwrite of the target never
-        begins until the full merged content (pre-batch keys included)
-        is durable under ``<path>__merged`` with an epoch marker. A
-        crash mid-commit therefore loses nothing — the retry (in-process
-        via ``with_retries``, or the streaming restart replaying the
-        same epoch) detects the completed staging for this epoch and
-        re-runs only the commit, restoring any partially-overwritten
-        partition. Only after a successful commit is the staging removed.
+        Crash safety: the target is not touched until the full merged
+        content (pre-batch keys included) is durable under
+        ``<path>__merged`` with an epoch marker. A crash mid-commit
+        therefore loses nothing — the retry (in-process via
+        ``with_retries``, or the streaming restart replaying the same
+        epoch) detects the completed staging for this epoch and re-runs
+        only the commit, restoring any partially-installed partition.
+        The staging is removed only after the snapshot publishes.
         """
         with self._writer_lock():
             with_retries(
@@ -685,19 +683,22 @@ class ParquetUpsertSink:
                 self.retry_delay_s,
             )
 
-    def _merge(self, batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # A compact() that crashed mid-swap leaves a partition pending
-        # in its staging; finish it BEFORE touching the table, or a
-        # merge into that partition's date would be silently clobbered
-        # when the next compact() completes the stale swap.
+    def _recover(self, spark: SparkSession) -> int | None:
+        """Finish whatever a crashed operation left pending, before an
+        entry point touches the table: a compaction or migration swap
+        (a merge into a partition a stale swap is about to clobber
+        would be lost), a migration's re-snapshot, then a complete
+        merge/delete/OCC staging (commit -> snapshot -> drop). Returns
+        the epoch that staging committed, or None — when it is the
+        caller's own epoch, the replayed call is already applied."""
         self._finish_compact(self._compact_staging())
         self._finish_migrate()
         self._heal_migration_snapshot(spark)
-        # a complete staging from ANY crashed commit is finished first
-        # (commit -> snapshot -> drop); if it was THIS epoch, the
-        # replayed batch is already applied
-        if self._finish_pending_epoch(spark) == epoch_id:
+        return self._finish_pending_epoch(spark)
+
+    def _merge(self, batch_df: DataFrame, epoch_id: int) -> None:
+        spark = batch_df.sparkSession
+        if self._recover(spark) == epoch_id:
             return
         if batch_df.isEmpty():
             # update-mode can emit empty micro-batches (e.g. the final
@@ -711,58 +712,15 @@ class ParquetUpsertSink:
             if self._table_exists():
                 self._snapshot(spark, epoch_id, touched=[])
             return
-        specs = self._transforms()
-        constraints = self._constraints()
-        clustering = self._clustering()
         self._audit_batch(batch_df)  # refuse BEFORE any table mutation
         batch = batch_df.withColumn(
-            "part_date", self._derive_part_date(specs[-1])
+            "part_date", self._derive_part_date(self._transforms()[-1])
         )
-
-        if not self._table_exists():
-            # first batch: nothing to merge with — write directly (the
-            # common availableNow single-batch replay pays one write
-            # instead of three FS round trips; no read-modify-write, so
-            # no staging needed). touched=None: snapshot every table
-            # partition (the full first baseline).
-            self._distribute(batch).write.mode("overwrite").partitionBy(
-                "part_date"
-            ).parquet(self.path)
-            self._write_schema_file(batch.schema)
-            # the static overwrite truncated the table directory —
-            # including any partition-spec sidecar an evolve on an
-            # empty/drained table had written; republish the specs the
-            # batch was derived under, or a restarted writer's
-            # constructor default silently reverts the evolution
-            self._atomic_json_write(self._partspec_file(), specs)
-            if constraints:  # same truncation hazard for constraints
-                self._atomic_json_write(self._constraints_file(), constraints)
-            if clustering is not None:  # and for recorded clustering
-                self._atomic_json_write(
-                    self._clustering_file(),
-                    {"columns": clustering[0], "mode": clustering[1]},
-                )
-            # the overwrite truncated _sidecars.json with everything
-            # else — rebuild the cache from the fresh layout
-            self._refresh_consolidated()
-            self._snapshot(spark, epoch_id, touched=None)
-            self._auto_compact(spark, touched=None)
-            return
-
-        touched, emptied = self._stage_merge(spark, batch, epoch_id)
-        if emptied:
-            # a post-evolution merge drained an old-spec partition:
-            # same resurrection-safe ordering as deletes — the staging
-            # outlives the snapshot publish (see _finish_pending_epoch)
-            self._commit(spark, drop_staging=False)
-            self._snapshot(spark, epoch_id, touched)
-            shutil.rmtree(self.merged_path, ignore_errors=True)
-        else:
-            self._commit(spark)
-            self._snapshot(spark, epoch_id, touched)
+        touched, _ = self._stage_merge(spark, batch, epoch_id)
+        self._finish_pending_epoch(spark)
         self._auto_compact(spark, touched)
 
-    def _auto_compact(self, spark: SparkSession, touched: list[str] | None) -> None:
+    def _auto_compact(self, spark: SparkSession, touched: list[str]) -> None:
         """Scoped post-commit compaction of any touched partition whose
         data-file count exceeds ``auto_compact_files`` (None = off).
         The census is a driver-side listing of just the touched dirs;
@@ -772,13 +730,8 @@ class ParquetUpsertSink:
         periodic table-wide OPTIMIZE."""
         if self.auto_compact_files is None:
             return
-        dirs = (
-            touched
-            if touched is not None
-            else [d for d in os.listdir(self.path) if d.startswith("part_date=")]
-        )
         fat = []
-        for d in dirs:
+        for d in touched:
             p = os.path.join(self.path, d)
             if not os.path.isdir(p):
                 continue
@@ -849,10 +802,7 @@ class ParquetUpsertSink:
 
     def _delete(self, keys_df: DataFrame, epoch_id: int) -> None:
         spark = keys_df.sparkSession
-        self._finish_compact(self._compact_staging())
-        self._finish_migrate()
-        self._heal_migration_snapshot(spark)
-        if self._finish_pending_epoch(spark) == epoch_id:
+        if self._recover(spark) == epoch_id:
             return  # crashed commit for this very epoch, now finished
         if not self._table_exists():
             return  # nothing to delete from; no commit to record
@@ -899,24 +849,16 @@ class ParquetUpsertSink:
         survivors = self._anti_join_keys(
             existing.filter(self._part_date_filter(touched_vals)), staged_keys
         )
-        # the scanned schema stands in when none is recorded (a first
-        # write that crashed before publishing _schema.json)
-        stored = self._stored_schema() or existing.schema
-        self._distribute(self._to_physical(survivors, stored)).write.mode(
-            "overwrite"
-        ).partitionBy("part_date").parquet(self.merged_path)
-        self._write_schema_file(stored, self._staged_schema_file())
-        self._refresh_staged_stats()
-        self._refresh_staged_blooms()
-        touched_dirs = [self._part_dirname(v) for v in touched_vals]
-        self._publish_staging(touched_dirs, epoch_id, op="delete")
-        # staging dropped only AFTER the snapshot publishes: a crash
-        # between commit and snapshot must leave the epoch-marked
-        # staging so the replay re-enters the recovery branch above
-        # instead of the (manifest-diverging) empty-commit path
-        self._commit(spark, drop_staging=False)
-        self._snapshot(spark, epoch_id, touched_dirs, op="delete")
-        shutil.rmtree(self.merged_path, ignore_errors=True)
+        # the scanned schema stands in when none is recorded (a
+        # _schema.json deleted out of band)
+        self._stage(
+            survivors,
+            self._stored_schema() or existing.schema,
+            [self._part_dirname(v) for v in touched_vals],
+            "delete",
+            epoch_id,
+        )
+        self._finish_pending_epoch(spark)
 
     # -- row-level UPDATE ----------------------------------------------------
     def update_where(
@@ -955,10 +897,7 @@ class ParquetUpsertSink:
     def _update(
         self, spark: SparkSession, condition, set_exprs: dict, epoch_id: int
     ) -> None:
-        self._finish_compact(self._compact_staging())
-        self._finish_migrate()
-        self._heal_migration_snapshot(spark)
-        if self._finish_pending_epoch(spark) == epoch_id:
+        if self._recover(spark) == epoch_id:
             return
         if self.snapshot_dir is not None and epoch_id in self.snapshots():
             # an UPDATE's payload is NOT naturally idempotent (unlike
@@ -990,18 +929,14 @@ class ParquetUpsertSink:
                 projections.append(F.col(c))
         updated = scoped.select(*projections)
         self._audit_batch(updated)  # constraints hold AFTER the update
-        stored = self._stored_schema() or existing.schema  # see _delete
-        self._distribute(self._to_physical(updated, stored)).write.mode(
-            "overwrite"
-        ).partitionBy("part_date").parquet(self.merged_path)
-        self._write_schema_file(stored, self._staged_schema_file())
-        self._refresh_staged_stats()
-        self._refresh_staged_blooms()
-        touched_dirs = [self._part_dirname(v) for v in touched_vals]
-        self._publish_staging(touched_dirs, epoch_id, op="update")
-        self._commit(spark, drop_staging=False)
-        self._snapshot(spark, epoch_id, touched_dirs, op="update")
-        shutil.rmtree(self.merged_path, ignore_errors=True)
+        self._stage(
+            updated,
+            self._stored_schema() or existing.schema,  # see _delete
+            [self._part_dirname(v) for v in touched_vals],
+            "update",
+            epoch_id,
+        )
+        self._finish_pending_epoch(spark)
 
     # -- generalized MERGE INTO ---------------------------------------------
     def merge_into(
@@ -1114,13 +1049,8 @@ class ParquetUpsertSink:
         ins_cond,
         nmbs_cond,
     ) -> None:
-        from functools import reduce
-
         spark = source_df.sparkSession
-        self._finish_compact(self._compact_staging())
-        self._finish_migrate()
-        self._heal_migration_snapshot(spark)
-        if self._finish_pending_epoch(spark) == epoch_id:
+        if self._recover(spark) == epoch_id:
             return
         if self.snapshot_dir is not None and epoch_id in self.snapshots():
             # conditional MERGE payloads are not naturally idempotent
@@ -1131,7 +1061,8 @@ class ParquetUpsertSink:
         staged = spark.read.parquet(self.staging_path)
         specs = self._transforms()
         if not self._table_exists():
-            # first commit: every source row is NOT MATCHED
+            # no live partition: every source row is NOT MATCHED, so
+            # the commit is the inserts alone — a first write_batch
             if not ins:
                 return
             ins_rows = staged.alias("s")
@@ -1140,28 +1071,14 @@ class ParquetUpsertSink:
             if ins_rows.isEmpty():
                 return
             self._audit_batch(ins_rows)
-            clustering = self._clustering()
-            # capture BEFORE the overwrite truncates the table dir —
-            # reading the sidecar afterwards always yields {} and the
-            # republish below could never fire
-            cons = self._constraints()
-            batch = ins_rows.withColumn(
-                "part_date", self._derive_part_date(specs[-1])
+            self._stage_merge(
+                spark,
+                ins_rows.withColumn(
+                    "part_date", self._derive_part_date(specs[-1])
+                ),
+                epoch_id,
             )
-            self._distribute(batch).write.mode("overwrite").partitionBy(
-                "part_date"
-            ).parquet(self.path)
-            self._write_schema_file(batch.schema)
-            self._atomic_json_write(self._partspec_file(), specs)
-            if cons:
-                self._atomic_json_write(self._constraints_file(), cons)
-            if clustering is not None:  # survives the overwrite too
-                self._atomic_json_write(
-                    self._clustering_file(),
-                    {"columns": clustering[0], "mode": clustering[1]},
-                )
-            self._refresh_consolidated()
-            self._snapshot(spark, epoch_id, touched=None, op="merge")
+            self._finish_pending_epoch(spark)
             return
 
         existing = self._read_table(spark)
@@ -1275,16 +1192,8 @@ class ParquetUpsertSink:
             )
         else:
             stored = self._stored_schema() or existing.schema  # see _delete
-        self._distribute(self._to_physical(merged, stored)).write.mode(
-            "overwrite"
-        ).partitionBy("part_date").parquet(self.merged_path)
-        self._write_schema_file(stored, self._staged_schema_file())
-        self._refresh_staged_stats()
-        self._refresh_staged_blooms()
-        self._publish_staging(touched_dirs, epoch_id, op="merge")
-        self._commit(spark, drop_staging=False)
-        self._snapshot(spark, epoch_id, touched_dirs, op="merge")
-        shutil.rmtree(self.merged_path, ignore_errors=True)
+        self._stage(merged, stored, touched_dirs, "merge", epoch_id)
+        self._finish_pending_epoch(spark)
 
     def _apply_merge_clauses(
         self,
@@ -1402,10 +1311,7 @@ class ParquetUpsertSink:
         index lists with identical semantics. Broad deletes should use
         copy_on_write (and `compact()` folds any accumulated DVs)."""
         spark = keys_df.sparkSession
-        self._finish_compact(self._compact_staging())
-        self._finish_migrate()
-        self._heal_migration_snapshot(spark)
-        if self._finish_pending_epoch(spark) == epoch_id:
+        if self._recover(spark) == epoch_id:
             return  # crashed commit for this very epoch, now finished
         if not self._table_exists():
             return
@@ -1605,9 +1511,6 @@ class ParquetUpsertSink:
             return "part_date=__HIVE_DEFAULT_PARTITION__"
         return f"part_date={value.isoformat() if hasattr(value, 'isoformat') else value}"
 
-    def _touched_file(self) -> str:
-        return os.path.join(self.merged_path, "_TOUCHED")
-
     @staticmethod
     def _copytree_link(src: str, dst: str) -> None:
         """copytree by HARDLINK (fallback: physical copy across
@@ -1758,12 +1661,13 @@ class ParquetUpsertSink:
     def _consolidated(self) -> dict[str, dict]:
         """The live table's consolidated metadata map (partition dir ->
         entry) — ONE JSON read of ``_sidecars.json``. When that file is
-        missing or unparsable (deleted out of band, or a crash between
-        a first write's directory overwrite and its cache refresh) the
-        same map is built in memory from the partition dirs, so
-        correctness never depends on the cache existing, only plan-time
-        cost does. Read-only: writers persist the map through
-        ``_refresh_consolidated``, which starts from this full map."""
+        missing or unparsable (deleted out of band, or a first commit
+        that crashed between installing its partitions and refreshing
+        the cache, which its replay then writes) the same map is built
+        in memory from the partition dirs, so correctness never depends
+        on the cache existing, only plan-time cost does. Read-only:
+        writers persist the map through ``_refresh_consolidated``,
+        which starts from this full map."""
         try:
             with open(self._sidecars_file()) as fh:
                 return json.load(fh)
@@ -1825,7 +1729,7 @@ class ParquetUpsertSink:
         self,
         spark: SparkSession,
         epoch_id: int,
-        touched: list[str] | None,
+        touched: list[str],
         op: str = "merge",
     ) -> None:
         """Retain this epoch's committed state in the transaction log
@@ -1845,10 +1749,10 @@ class ParquetUpsertSink:
             if prev_epochs
             else {"parts": {}, "sidecars": {}}
         )
-        if touched is None or not prev_epochs:
-            # first snapshot (or unknown baseline): capture every
-            # current table partition so the manifest is complete even
-            # when the sink attached to a pre-existing table
+        if not prev_epochs:
+            # first snapshot: capture every current table partition so
+            # the manifest is complete even when the sink attached to a
+            # pre-existing table
             touched = [
                 d for d in os.listdir(self.path) if d.startswith("part_date=")
             ]
@@ -2062,8 +1966,7 @@ class ParquetUpsertSink:
         physically carry the new column, and a footer-sampled read
         could silently drop it; the explicit schema makes every file
         NULL-fill what it lacks. Footer-sampled only when no schema is
-        recorded (a first write that crashed before publishing
-        ``_schema.json``, or one deleted out of band)."""
+        recorded (a ``_schema.json`` deleted out of band)."""
         self._invalidate_listing(spark)
         reader = (
             spark.read
@@ -2098,10 +2001,7 @@ class ParquetUpsertSink:
         if os.path.isdir(dest_path) and os.listdir(dest_path):
             raise ValueError(f"clone destination {dest_path} is not empty")
         with self._writer_lock():
-            self._finish_compact(self._compact_staging())
-            self._finish_migrate()
-            self._heal_migration_snapshot(spark)
-            self._finish_pending_epoch(spark)
+            self._recover(spark)
             os.makedirs(dest_path, exist_ok=True)
             for d in os.listdir(self.path):
                 src_dir = os.path.join(self.path, d)
@@ -2359,10 +2259,17 @@ class ParquetUpsertSink:
     def _stage_merge(
         self, spark: SparkSession, batch: DataFrame, epoch_id: int
     ) -> tuple[list[str], list[str]]:
-        """Compute keep ∪ batch for the touched partitions and persist
-        it (with an epoch marker) WITHOUT touching the target. Returns
-        (touched dir names, emptied dir names) — the snapshot delta
-        and the dirs a post-evolution overwrite drained."""
+        """Compute keep ∪ batch for the touched partitions and stage it
+        as ``epoch_id``'s certified commit (see ``_stage``) WITHOUT
+        touching the target. Returns (touched dir names, emptied dir
+        names) — the snapshot delta and the dirs a post-evolution
+        overwrite drained."""
+        if not self._table_exists():
+            # no live partition: the keep side is empty, so the batch
+            # under its own schema IS the merged content — staged
+            # straight into the commit staging, one partitioned write
+            rec = self._stage(batch, batch.schema, None, "merge", epoch_id)
+            return rec["touched"], rec["emptied"]
         # Stage the batch (the reference's S4 staging write, parquet
         # instead of JDBC): the merge must not read and overwrite the
         # same files, and retries re-read a stable input. Staged
@@ -2422,23 +2329,62 @@ class ParquetUpsertSink:
         # batch rows NULL-fill); without evolution the column sets are
         # already proven equal so it never fires
         merged = keep.unionByName(staged, allowMissingColumns=True).select(*out_cols)
-        logical = self._staged_logical_schema(existing, staged, out_cols)
-        self._distribute(self._to_physical(merged, logical)).write.mode(
-            "overwrite"
-        ).partitionBy("part_date").parquet(self.merged_path)
-        # the staging must carry the LOGICAL schema (with column-
-        # mapping metadata): _commit derives the authoritative schema
-        # file from here, and the physical parquet names alone cannot
-        # reconstruct the mapping
-        self._write_schema_file(logical, self._staged_schema_file())
-        self._refresh_staged_stats()
-        self._refresh_staged_blooms()
-        touched_dirs = [self._part_dirname(v) for v in touched]
-        emptied = self._publish_staging(touched_dirs, epoch_id)
-        return touched_dirs, emptied
+        rec = self._stage(
+            merged,
+            self._staged_logical_schema(existing, staged, out_cols),
+            [self._part_dirname(v) for v in touched],
+            "merge",
+            epoch_id,
+        )
+        return rec["touched"], rec["emptied"]
 
-    def _staged_schema_file(self) -> str:
-        return os.path.join(self.merged_path, "_LOGICAL_SCHEMA.json")
+    def _stage(
+        self,
+        frame: DataFrame,
+        schema,
+        touched: list[str] | None,
+        op: str,
+        epoch_id: int | None = None,
+        root: str | None = None,
+    ) -> dict:
+        """Stage a commit under ``root`` (default: the canonical merge
+        staging; OCC writers pass their private one): ``frame`` — the
+        complete post-commit rows of the touched partitions — written
+        partitioned under ``schema``'s physical names; the LOGICAL
+        schema stash (column-mapping metadata included: ``_commit``
+        publishes the authoritative schema from it, and the physical
+        parquet names alone cannot reconstruct the mapping); file
+        stats and blooms refreshed for the staged dirs; and the
+        ``_TOUCHED`` record ``{touched, emptied, op}`` (``touched``
+        None = the dirs the write produced; emptied = touched dirs
+        with no staged content — a delete, or a post-evolution merge
+        that drained an old-spec dir — recorded now because a
+        partially-installed staging cannot be inspected for this
+        after a crash). Given ``epoch_id``, the epoch marker publishes
+        LAST: with Spark's ``_SUCCESS`` it certifies a complete
+        staging, which ``_finish_pending_epoch`` commits. Both markers
+        publish atomically (a torn ``_EPOCH`` would wedge every later
+        recovery). Returns the ``_TOUCHED`` record."""
+        root = self.merged_path if root is None else root
+        self._distribute(self._to_physical(frame, schema)).write.mode(
+            "overwrite"
+        ).partitionBy("part_date").parquet(root)
+        self._write_schema_file(
+            schema, os.path.join(root, "_LOGICAL_SCHEMA.json")
+        )
+        self._refresh_staged_stats(root)
+        self._refresh_staged_blooms(root)
+        staged = {d for d in os.listdir(root) if d.startswith("part_date=")}
+        touched = sorted(staged) if touched is None else touched
+        rec = {
+            "touched": touched,
+            "emptied": [d for d in touched if d not in staged],
+            "op": op,
+        }
+        self._atomic_json_write(os.path.join(root, "_TOUCHED"), rec)
+        if epoch_id is not None:
+            self._atomic_json_write(os.path.join(root, "_EPOCH"), epoch_id)
+        return rec
 
     def _staged_logical_schema(
         self, existing: DataFrame, staged: DataFrame, out_cols: list[str]
@@ -2473,66 +2419,51 @@ class ParquetUpsertSink:
                 fields.append(StructField(c, src.dataType, True, md))
         return StructType(fields)
 
-    def _commit(self, spark: SparkSession, drop_staging: bool = True) -> dict:
+    def _commit(self, spark: SparkSession) -> dict:
         """Install the touched partitions from the durable merged copy
-        by per-partition FILESYSTEM SWAP (the ``_finish_compact``
-        pattern), then drop the staging. The staged content already IS
-        the complete new bytes of every touched partition, so a second
-        Spark write (the previous dynamic partition overwrite) would
-        re-shuffle and re-encode the same data — the swap halves every
-        micro-batch's commit cost and dominates broad deletes. On an
-        object store the renames become per-partition copy+delete;
-        either way re-runnable: a crash mid-swap leaves each partition
-        either in the target or still in the staging, and the replay
-        re-enters here from the epoch-marked staging.
+        by per-partition FILESYSTEM SWAP: each staged dir is
+        HARDLINKED into the target — O(files) inode work, zero bytes
+        copied. The staged content
+        already IS the complete new bytes of every touched partition,
+        so a second Spark write would re-shuffle and re-encode the
+        same data. The staging stays intact: it is dropped only after
+        the snapshot publishes (``_finish_pending_epoch``), so a crash
+        anywhere in between replays this commit from the epoch-marked
+        staging — re-linking is idempotent, and a partition is always
+        either installed or still staged. On an object store the links
+        become per-partition server-side copies.
 
-        The authoritative schema publishes BEFORE the first target file
-        is replaced: a crash in between leaves a schema file ahead of
-        some partitions' physical files, which reads handle exactly
-        (missing columns NULL-fill); the reverse order could leave an
-        evolved table whose stale schema file silently drops the new
-        column from every read. Returns the staging's ``_TOUCHED``
-        record ``{touched, emptied, op}``."""
+        The authoritative schema publishes from the staging's stash
+        BEFORE the first target file is replaced: a crash in between
+        leaves a schema file ahead of some partitions' physical files,
+        which reads handle exactly (missing columns NULL-fill); the
+        reverse order could leave an evolved table whose stale schema
+        file silently drops the new column from every read. Returns
+        the staging's ``_TOUCHED`` record ``{touched, emptied, op}``."""
         staged_dirs = sorted(
             d for d in os.listdir(self.merged_path) if d.startswith("part_date=")
         )
         if staged_dirs:
-            # the stage step recorded the LOGICAL schema (column-mapping
-            # metadata included); the parquet footers carry only
-            # physical names
-            with open(self._staged_schema_file()) as fh:
+            stash = os.path.join(self.merged_path, "_LOGICAL_SCHEMA.json")
+            with open(stash) as fh:
                 self._atomic_json_write(self._schema_file(), json.load(fh))
-            os.makedirs(self.path, exist_ok=True)
             for d in staged_dirs:
-                src = os.path.join(self.merged_path, d)
                 dst = os.path.join(self.path, d)
                 shutil.rmtree(dst, ignore_errors=True)
-                if drop_staging:
-                    shutil.move(src, dst)
-                else:
-                    # delete recovery needs the staging intact until
-                    # the snapshot publishes — link, don't drain (the
-                    # staging's rmtree after the snapshot only unlinks
-                    # its side of the shared inodes)
-                    self._copytree_link(src, dst)
+                self._copytree_link(os.path.join(self.merged_path, d), dst)
         # partitions a DELETE emptied have no staged content to swap
-        # in; the stage-time _TOUCHED record names them (inferring from
-        # what remains in a partially-drained staging would wrongly
-        # count already-moved partitions). rmtree is a no-op replay.
-        with open(self._touched_file()) as fh:
+        # in; the stage-time _TOUCHED record names them. rmtree is a
+        # no-op replay.
+        with open(os.path.join(self.merged_path, "_TOUCHED")) as fh:
             staged = json.load(fh)
         for d in staged["emptied"]:
             shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
         # consolidated-cache write-through over the AUTHORITATIVE
-        # touched list (not what remains in a partially-drained
-        # staging — a recovery re-entry must refresh dirs the crashed
-        # first pass already installed), BEFORE the staging drops: a
-        # crash in between re-enters this commit and converges
+        # touched list, BEFORE the staging drops: a crash in between
+        # re-enters this commit and converges
         self._refresh_consolidated(
             sorted(set(staged["touched"]) | set(staged["emptied"]))
         )
-        if drop_staging:
-            shutil.rmtree(self.merged_path, ignore_errors=True)
         # the swap deleted target files in place; DataFrames planned
         # after this commit must not be scheduled against the session's
         # stale file listing (see _invalidate_listing)
@@ -2556,27 +2487,28 @@ class ParquetUpsertSink:
             return None
 
     def _finish_pending_epoch(self, spark: SparkSession) -> int | None:
-        """Complete a crashed merge/delete commit from its durable
-        staging — commit, snapshot, and only THEN drop the staging (a
-        commit that emptied partitions must keep its staging until the
-        manifest publishes, or a crash in between makes the replay's
-        snapshot inherit stale pointers to the emptied dirs,
-        resurrecting erased rows in the versioned view). Returns the
-        finished epoch, or None when no complete staging exists.
-        Shared by the merge/delete entry points AND migrate (which
-        must never re-layout a table with an unapplied commit
-        pending)."""
+        """Commit the certified staging — ``_commit``, snapshot, the
+        OCC ledger record, and only THEN drop the staging — and return
+        its epoch, or None when no certified staging exists. The one
+        install step of every staged commit (merge, delete, update,
+        MERGE INTO, OCC) and of its crash recovery: a staging that
+        survives a crash anywhere in here replays the same steps. The
+        staging outlives the manifest publish because a crash in
+        between must replay this commit, not the caller's (possibly
+        empty, manifest-diverging) stage path. Shared by every entry
+        point through ``_recover`` (migrate must never re-layout a
+        table with an unapplied commit pending)."""
         epoch = self._staged_epoch()
         if epoch is None:
             # at most one staging kind can survive a crash (both are
             # created under the writer lock within a single operation);
             # a pending deletion-vector delta is the other kind
             return self._finish_pending_dv(spark)
-        staged = self._commit(spark, drop_staging=False)
+        staged = self._commit(spark)
         self._snapshot(spark, epoch, staged["touched"], op=staged["op"])
-        # a crashed OCC commit's idempotence key rides in the staging:
-        # record it before the staging drops, so a replayed OCC call
-        # returns the committed version instead of re-applying a
+        # an OCC commit's idempotence key rides in the staging: record
+        # it before the staging drops, so a replayed OCC call returns
+        # the committed version instead of re-applying a
         # non-idempotent payload (exactly-once OCC replay)
         try:
             with open(os.path.join(self.merged_path, "_OCC_KEY")) as fh:
@@ -2586,35 +2518,6 @@ class ParquetUpsertSink:
             pass  # not an OCC commit
         shutil.rmtree(self.merged_path, ignore_errors=True)
         return epoch
-
-    def _publish_staging(
-        self, touched_dirs: list[str], epoch_id: int, op: str = "merge"
-    ) -> list[str]:
-        """Record the staged commit's touched and EMPTIED partition
-        sets (emptied = touched dirs with no staged content — a
-        delete, or a post-evolution merge that drained an old-spec
-        dir; recorded at stage time because a partially-drained
-        staging cannot be inspected for this after a crash), then the
-        epoch marker LAST — its presence with Spark's _SUCCESS
-        certifies a complete staging. Returns the emptied list."""
-        emptied = [
-            d
-            for d in touched_dirs
-            if not os.path.isdir(os.path.join(self.merged_path, d))
-        ]
-        # both markers publish atomically (tmp + rename): a crash
-        # mid-write must leave either no marker or a complete one — a
-        # torn _EPOCH would make every later recovery's int() raise, a
-        # permanent wedge the crash matrix can't even reach via the
-        # shutil fault injectors
-        self._atomic_json_write(
-            self._touched_file(),
-            {"touched": touched_dirs, "emptied": emptied, "op": op},
-        )
-        self._atomic_json_write(
-            os.path.join(self.merged_path, "_EPOCH"), epoch_id
-        )
-        return emptied
 
     def _table_exists(self) -> bool:
         if not os.path.isdir(self.path):
@@ -2650,9 +2553,11 @@ class ParquetUpsertSink:
 
     def _stored_schema(self):
         """The log-recorded table schema, or None when none is recorded
-        (a first write that crashed before publishing it, or a file
-        deleted out of band: reads then sample the footers, see
-        ``_scan``, and the next staged commit publishes one)."""
+        — a new table, or a file deleted out of band: every commit
+        publishes it before its first partition lands, so a live
+        partition without it arises only from out-of-band deletion;
+        reads then sample the footers (see ``_scan``) and the next
+        staged commit publishes one."""
         return self._load_schema(self._schema_file())
 
     def _write_schema_file(self, schema, path: str | None = None) -> None:
@@ -2861,10 +2766,7 @@ class ParquetUpsertSink:
                 f"sink's addressing contract"
             )
         with self._writer_lock():
-            self._finish_compact(self._compact_staging())
-            self._finish_migrate()
-            self._heal_migration_snapshot(spark)
-            self._finish_pending_epoch(spark)
+            self._recover(spark)
             schema = self._stored_schema()
             if schema is None:
                 if not self._table_exists():
@@ -2924,10 +2826,7 @@ class ParquetUpsertSink:
                 f"sink's addressing contract"
             )
         with self._writer_lock():
-            self._finish_compact(self._compact_staging())
-            self._finish_migrate()
-            self._heal_migration_snapshot(spark)
-            self._finish_pending_epoch(spark)
+            self._recover(spark)
             schema = self._stored_schema()
             if schema is None:
                 if not self._table_exists():
@@ -3431,10 +3330,7 @@ class ParquetUpsertSink:
             # metadata moment in progress — maintenance waits it out
             # instead of dying, so OPTIMIZE runs beside a stream) ----
             with self._writer_lock_blocking():
-                self._finish_compact(self._compact_staging())
-                self._finish_migrate()
-                self._heal_migration_snapshot(spark)
-                self._finish_pending_epoch(spark)
+                self._recover(spark)
                 shutil.rmtree(pin_root, ignore_errors=True)
                 shutil.rmtree(stage, ignore_errors=True)
                 if not self._table_exists():
@@ -3852,7 +3748,7 @@ class ParquetUpsertSink:
         )
         out_cols = [f.name for f in schema.fields] if schema else None
 
-        def stage_keep_union_batch(pin_root: str, merged: str):
+        def stage_keep_union_batch(pin_root: str) -> DataFrame:
             # audit per ATTEMPT against the constraints as pinned (a
             # constraint added mid-flight flips the metadata
             # fingerprint and forces this re-audit via retry)
@@ -3870,12 +3766,7 @@ class ParquetUpsertSink:
                 out = keep.unionByName(staged)
             else:
                 out = staged
-            if out_cols is not None:
-                out = out.select(*out_cols)
-            self._distribute(self._to_physical(out, schema)).write.mode(
-                "overwrite"
-            ).partitionBy("part_date").parquet(merged)
-            return out.schema
+            return out.select(*out_cols) if out_cols is not None else out
 
         return self._occ_commit(
             spark,
@@ -3906,7 +3797,7 @@ class ParquetUpsertSink:
         spark: SparkSession,
         epoch_id: int,
         touched: list[str],
-        stage_fn: Callable[[str, str], "StructType"],
+        stage_fn: Callable[[str], DataFrame],
         *,
         occ_root: str,
         entry_schema=None,
@@ -3916,10 +3807,12 @@ class ParquetUpsertSink:
         writer_id: str = "",
     ) -> dict:
         """The generic OCC protocol (shared by ``write_batch_occ`` and
-        ``merge_into_occ``): pin → ``stage_fn(pin_root, merged_dir)``
-        builds the touched partitions' complete post-commit bytes from
-        the immutable pin and returns their logical schema →
-        conflict-checked swap through the existing crash-safe staging.
+        ``merge_into_occ``): pin → ``stage_fn(pin_root)`` builds the
+        touched partitions' complete post-commit rows from the
+        immutable pin, staged by ``_stage`` into a private root →
+        conflict-checked rename onto the canonical staging, installed
+        by the same ``_finish_pending_epoch`` as every serialized
+        commit.
         ``occ_root`` is the caller's private work dir (it may already
         hold the staged source); removed here on every exit path.
 
@@ -3933,8 +3826,10 @@ class ParquetUpsertSink:
         silently reverting the evolution. A retry cannot help because
         the staging closure is bound to the stale schema; the caller
         must re-enter with fresh validation. The value is used
-        VERBATIM (None means the caller validated against a
-        schema-less table, which the pin check enforces too)."""
+        VERBATIM (None means the caller validated against a table
+        whose ``_schema.json`` was deleted out of band, which the pin
+        check enforces too; the stage then stashes the staged rows'
+        schema, and the commit republishes it)."""
         schema = entry_schema
         pin_root = os.path.join(occ_root, "pin")
         merged = os.path.join(occ_root, "merged")
@@ -3945,10 +3840,7 @@ class ParquetUpsertSink:
                 attempts += 1
                 # -- pin (brief blocking lock) ------------------------
                 with self._writer_lock_blocking():
-                    self._finish_compact(self._compact_staging())
-                    self._finish_migrate()
-                    self._heal_migration_snapshot(spark)
-                    self._finish_pending_epoch(spark)
+                    self._recover(spark)
                     self._occ_gc()
                     replayed = self._occ_replay_check(epoch_id, writer_id)
                     if replayed is not None:
@@ -3991,33 +3883,16 @@ class ParquetUpsertSink:
                         pinned_fp[d] = self._dir_fingerprint(src)
                     meta_fp = self._meta_fingerprint()
                 # -- stage (NO lock: reads only the immutable pin) ----
-                staged_schema = stage_fn(pin_root, merged)
-                # a schema-less table (a first write that crashed before
-                # publishing _schema.json) takes the staged output's
-                self._write_schema_file(
-                    schema if schema is not None else staged_schema,
-                    os.path.join(merged, "_LOGICAL_SCHEMA.json"),
-                )
-                self._refresh_staged_stats(merged)
-                self._refresh_staged_blooms(merged)
-                emptied = [
-                    d
-                    for d in touched
-                    if not os.path.isdir(os.path.join(merged, d))
-                ]
-                self._atomic_json_write(
-                    os.path.join(merged, "_TOUCHED"),
-                    {"touched": touched, "emptied": emptied, "op": op},
+                out = stage_fn(pin_root)
+                self._stage(
+                    out, schema or out.schema, touched, op, root=merged
                 )
                 if on_staged is not None and not fired:
                     fired = True
                     on_staged()
                 # -- commit (brief blocking lock): conflict check + swap
                 with self._writer_lock_blocking():
-                    self._finish_compact(self._compact_staging())
-                    self._finish_migrate()
-                    self._heal_migration_snapshot(spark)
-                    self._finish_pending_epoch(spark)
+                    self._recover(spark)
                     conflict = self._meta_fingerprint() != meta_fp or any(
                         self._dir_fingerprint(os.path.join(self.path, d))
                         != pinned_fp[d]
@@ -4058,15 +3933,11 @@ class ParquetUpsertSink:
                     if os.path.isdir(self.merged_path):
                         shutil.rmtree(self.merged_path, ignore_errors=True)
                     os.rename(merged, self.merged_path)
-                    # from here the EXISTING crash-safe protocol owns
-                    # the commit: any crash replays via
-                    # _finish_pending_epoch at every entry point; the
-                    # staging outlives commit + snapshot + ledger (the
-                    # same resurrection-safe ordering deletes use)
-                    self._commit(spark, drop_staging=False)
-                    self._snapshot(spark, version, touched, op=op)
-                    self._occ_record_applied(epoch_id, version, writer_id)
-                    shutil.rmtree(self.merged_path, ignore_errors=True)
+                    # from here the serialized commit's install step
+                    # owns the commit (commit -> snapshot -> ledger ->
+                    # drop); a crash anywhere replays it through
+                    # _recover at every entry point
+                    self._finish_pending_epoch(spark)
                 # the commit lock is RELEASED before the scoped
                 # compaction: an O(bytes) rewrite inside the lock turns
                 # the brief metadata moment into a rewrite-length hold
@@ -4206,7 +4077,7 @@ class ParquetUpsertSink:
         )
         out_cols = [f.name for f in schema.fields] if schema else None
 
-        def stage_merge_clauses(pin_root: str, merged_dir: str):
+        def stage_merge_clauses(pin_root: str) -> DataFrame:
             pin_dirs = [
                 os.path.join(pin_root, d)
                 for d in touched
@@ -4233,12 +4104,7 @@ class ParquetUpsertSink:
                 None,
             )
             self._audit_batch(out)  # constraints hold AFTER the merge
-            if out_cols is not None:
-                out = out.select(*out_cols)
-            self._distribute(self._to_physical(out, schema)).write.mode(
-                "overwrite"
-            ).partitionBy("part_date").parquet(merged_dir)
-            return out.schema
+            return out.select(*out_cols) if out_cols is not None else out
 
         return self._occ_commit(
             spark,
@@ -4328,7 +4194,7 @@ class ParquetUpsertSink:
                 },
             )
 
-    def _refresh_staged_stats(self, root: str | None = None) -> None:
+    def _refresh_staged_stats(self, root: str) -> None:
         """Keep file stats alive ACROSS merges and deletes: for every
         staged partition whose LIVE counterpart carries a
         ``_stats.json``, recompute the per-file ranges from the STAGED
@@ -4339,9 +4205,7 @@ class ParquetUpsertSink:
         whatever still can be skipped until the next
         ``compact(sort_by=...)`` re-tightens the files. Driver-side
         O(staged files) footer reads, only for stats-bearing
-        partitions. ``root`` defaults to the canonical merge staging
-        (OCC writers pass their private staging)."""
-        root = self.merged_path if root is None else root
+        partitions, under the staging ``root``."""
         if not os.path.isdir(root):
             return
         for d in os.listdir(root):
@@ -4994,7 +4858,7 @@ class ParquetUpsertSink:
                     {"columns": cols_meta, "files": {}},
                 )
 
-    def _refresh_staged_blooms(self, root: str | None = None) -> None:
+    def _refresh_staged_blooms(self, root: str) -> None:
         """Keep declared bloom indexes alive ACROSS data-rewriting
         commits: rebuild `_bloom.json` inside the staging so the swap
         installs data and matching blooms together (the stats-refresh
@@ -5002,7 +4866,6 @@ class ParquetUpsertSink:
         sidecar — still correct (absent bloom = must read) but the
         index would decay to nothing under a streaming upsert load.
         No-op when no index is declared or the staging is absent."""
-        root = self.merged_path if root is None else root
         if not self._bloom_meta() or not os.path.isdir(root):
             return
         spark = SparkSession.getActiveSession()

@@ -24,6 +24,7 @@ import shutil
 import pytest
 
 from real_time_ride_hailing_data_pipeline_spark.streaming.sinks import (
+    ConstraintViolationError,
     ParquetUpsertSink,
 )
 
@@ -33,7 +34,8 @@ from real_time_ride_hailing_data_pipeline_spark.streaming.sinks import (
 # deselected from the default run via pytest.ini; run them with
 # `pytest -m slow` / `-m ""` (VERDICT r13 item 1 — nothing deleted,
 # nothing weakened). The default tier keeps a 4-point smoke of the
-# main sequence (test_crash_matrix_smoke_four_points_recover).
+# main, partition-evolution and OCC sequences, plus the full sweep of
+# a first write (a handful of ops).
 
 D1 = dt.datetime(2024, 1, 15, 10, 0)
 D2 = dt.datetime(2024, 1, 16, 11, 0)
@@ -159,31 +161,49 @@ def _main_sink(root) -> ParquetUpsertSink:
     )
 
 
-def _measure_main_op_budget(spark, tmp_path, injector) -> int:
-    """Run the main sequence without a crash, assert its final state,
+def _plain_sink(root) -> ParquetUpsertSink:
+    return ParquetUpsertSink(
+        str(root / "t"),
+        key_cols=("k", "window_start"),
+        snapshot_dir=str(root / "s"),
+        retries=0,
+    )
+
+
+# A family is (sink factory, steps, final-state assertion). ``steps``
+# returns the per-epoch closures; only those run under fault injection
+# (anything it does before returning them is the table they start on).
+_MAIN = (_main_sink, _steps, _assert_final_state)
+
+
+def _measure_op_budget(spark, tmp_path, injector, family) -> int:
+    """Run a family's sequence without a crash, assert its final state,
     and return how many orchestration-layer FS ops it took."""
-    sink = _main_sink(tmp_path / "baseline")
+    mk, steps, assert_final = family
+    sink = mk(tmp_path / "baseline")
+    closures = steps(spark, sink)
     injector.arm(None)
-    for step in _steps(spark, sink):
+    for step in closures:
         step()
     total_ops = injector.count
-    _assert_final_state(spark, sink)
+    assert_final(spark, sink)
     assert total_ops > 10  # the instrumentation actually sees the ops
     return total_ops
 
 
-def _crash_and_replay_main(spark, tmp_path, injector, crash_points) -> None:
+def _crash_and_replay(spark, tmp_path, injector, crash_points, family) -> None:
     """For each crash point: crash after that many FS ops, replay from
     the crashed step (a checkpointed restart), and assert the exact
     no-crash state. A point where recovery diverges (lost partition,
     resurrected row, torn snapshot log) fails loudly with the op
     index."""
+    mk, steps, assert_final = family
     for crash_at in crash_points:
-        sink = _main_sink(tmp_path / f"crash{crash_at}")
-        steps = _steps(spark, sink)
+        sink = mk(tmp_path / f"crash{crash_at}")
+        closures = steps(spark, sink)
         injector.arm(crash_at)
         crashed_step = None
-        for i, step in enumerate(steps):
+        for i, step in enumerate(closures):
             try:
                 step()
             except SimulatedCrash:
@@ -191,10 +211,10 @@ def _crash_and_replay_main(spark, tmp_path, injector, crash_points) -> None:
                 break
         assert crashed_step is not None, f"op budget moved? crash_at={crash_at}"
         injector.arm(None)
-        for step in steps[crashed_step:]:  # checkpointed-restart replay
+        for step in closures[crashed_step:]:  # checkpointed-restart replay
             step()
         try:
-            _assert_final_state(spark, sink)
+            assert_final(spark, sink)
         except AssertionError as exc:
             raise AssertionError(
                 f"divergence after crash at FS op #{crash_at} "
@@ -202,19 +222,32 @@ def _crash_and_replay_main(spark, tmp_path, injector, crash_points) -> None:
             ) from exc
 
 
+def _dense_then_stride(dense: int, stride: int):
+    """Crash points: every op below ``dense`` (the creation and
+    first-commit windows), then every ``stride``-th op."""
+    return lambda total: list(range(1, min(dense, total + 1))) + list(
+        range(dense, total + 1, stride)
+    )
+
+
+def _four_points(total: int) -> list[int]:
+    """The first op, one and two thirds of the budget, and the last."""
+    return sorted({1, max(1, total // 3), max(1, 2 * total // 3), total})
+
+
+def _sweep(spark, tmp_path, monkeypatch, family, points) -> None:
+    injector = _FaultInjector(monkeypatch)
+    injector.install()
+    total_ops = _measure_op_budget(spark, tmp_path, injector, family)
+    _crash_and_replay(spark, tmp_path, injector, points(total_ops), family)
+
+
 @pytest.mark.slow
 def test_crash_matrix_every_fs_op_recovers(spark, tmp_path, monkeypatch):
     """Crash after the Nth orchestration-layer FS op, replay, assert
     the exact no-crash state — for a stride of crash points covering
     the whole sequence."""
-    injector = _FaultInjector(monkeypatch)
-    injector.install()
-    total_ops = _measure_main_op_budget(spark, tmp_path, injector)
-    # dense early (creation/first-commit windows), stride-sampled after
-    crash_points = list(range(1, min(13, total_ops + 1))) + list(
-        range(13, total_ops + 1, 5)
-    )
-    _crash_and_replay_main(spark, tmp_path, injector, crash_points)
+    _sweep(spark, tmp_path, monkeypatch, _MAIN, _dense_then_stride(13, 5))
 
 
 def test_crash_matrix_smoke_four_points_recover(spark, tmp_path, monkeypatch):
@@ -223,13 +256,71 @@ def test_crash_matrix_smoke_four_points_recover(spark, tmp_path, monkeypatch):
     then replay and assert the exact no-crash state. Keeps the commit,
     pending-epoch recovery and snapshot paths under fault injection in
     every default run; the full stride is the slow sweep above."""
-    injector = _FaultInjector(monkeypatch)
-    injector.install()
-    total_ops = _measure_main_op_budget(spark, tmp_path, injector)
-    crash_points = sorted(
-        {1, max(1, total_ops // 3), max(1, 2 * total_ops // 3), total_ops}
+    _sweep(spark, tmp_path, monkeypatch, _MAIN, _four_points)
+
+
+# -- first write onto table-level metadata ----------------------------------
+#
+# Partition specs, constraints and clustering can be recorded on an
+# empty table. The first write is a staged commit like every other, so
+# no crash point of it may lose them (nor the schema it publishes).
+
+
+def _first_write_steps(spark, sink):
+    sink.evolve_partitioning("month")
+    sink.add_constraint(spark, "pos", "total > 0")
+    sink.set_clustering(["total"], mode="sort")
+    return [
+        lambda: sink.write_batch(
+            spark.createDataFrame(
+                [("a", D1, 10), ("b", D2, 20)],
+                "k string, window_start timestamp, total bigint",
+            ),
+            0,
+        )
+    ]
+
+
+def _assert_first_write_state(spark, sink):
+    assert {r["k"]: r["total"] for r in sink.read(spark).collect()} == {
+        "a": 10,
+        "b": 20,
+    }
+    dirs = {d for d in os.listdir(sink.path) if d.startswith("part_date=")}
+    assert dirs == {"part_date=2024-01-01"}, dirs  # the monthly spec
+    assert sink.snapshots() == [0]
+    assert sink._transforms() == ["day", "month"]
+    assert sink._clustering() == (["total"], "sort")
+    assert [f.name for f in sink._stored_schema().fields] == [
+        "k",
+        "window_start",
+        "total",
+        "part_date",
+    ]
+    assert sink._constraints() == {"pos": "total > 0"}
+    with pytest.raises(ConstraintViolationError, match="pos"):
+        sink.write_batch(
+            spark.createDataFrame(
+                [("c", D1, -1)], "k string, window_start timestamp, total bigint"
+            ),
+            1,
+        )
+
+
+def test_crash_matrix_first_write_keeps_table_metadata(
+    spark, tmp_path, monkeypatch
+):
+    """Crash a first write_batch at EVERY instrumented FS op, replay
+    it, and assert the spec history, the constraint (a violating batch
+    is refused), the clustering record and the published schema are
+    intact, with the rows under the evolved spec."""
+    _sweep(
+        spark,
+        tmp_path,
+        monkeypatch,
+        (_plain_sink, _first_write_steps, _assert_first_write_state),
+        lambda total: list(range(1, total + 1)),
     )
-    _crash_and_replay_main(spark, tmp_path, injector, crash_points)
 
 
 # -- partition-evolution crash matrix (VERDICT r7 item 4) -----------------
@@ -317,6 +408,9 @@ def _assert_evo_final_state(spark, sink):
     assert n == len(EVO_EXPECTED_LIVE)
 
 
+_EVO = (_plain_sink, _evo_steps, _assert_evo_final_state)
+
+
 @pytest.mark.slow
 def test_crash_matrix_partition_evolution_recovers(spark, tmp_path, monkeypatch):
     """Crash after the Nth FS op across merge -> (evolve + merge) ->
@@ -324,50 +418,14 @@ def test_crash_matrix_partition_evolution_recovers(spark, tmp_path, monkeypatch)
     no-crash layout, spec history, snapshot log, and per-version
     reads. Covers the spec-publish-to-next-commit window and every
     point of the cross-spec claim's stage/swap."""
-    injector = _FaultInjector(monkeypatch)
-    injector.install()
+    _sweep(spark, tmp_path, monkeypatch, _EVO, _dense_then_stride(13, 4))
 
-    base = tmp_path / "baseline"
-    mk = lambda root: ParquetUpsertSink(  # noqa: E731
-        str(root / "t"),
-        key_cols=("k", "window_start"),
-        snapshot_dir=str(root / "s"),
-        retries=0,
-    )
-    sink = mk(base)
-    injector.arm(None)
-    for step in _evo_steps(spark, sink):
-        step()
-    total_ops = injector.count
-    _assert_evo_final_state(spark, sink)
-    assert total_ops > 10
 
-    crash_points = list(range(1, min(13, total_ops + 1))) + list(
-        range(13, total_ops + 1, 4)
-    )
-    for crash_at in crash_points:
-        root = tmp_path / f"crash{crash_at}"
-        sink = mk(root)
-        steps = _evo_steps(spark, sink)
-        injector.arm(crash_at)
-        crashed_step = None
-        for i, step in enumerate(steps):
-            try:
-                step()
-            except SimulatedCrash:
-                crashed_step = i
-                break
-        assert crashed_step is not None, f"op budget moved? crash_at={crash_at}"
-        injector.arm(None)
-        for step in steps[crashed_step:]:  # checkpointed-restart replay
-            step()
-        try:
-            _assert_evo_final_state(spark, sink)
-        except AssertionError as exc:
-            raise AssertionError(
-                f"divergence after crash at FS op #{crash_at} "
-                f"(step {crashed_step}): {exc}"
-            ) from exc
+def test_crash_matrix_partition_evolution_smoke_four_points_recover(
+    spark, tmp_path, monkeypatch
+):
+    """Default-tier 4-point smoke of the partition-evolution sweep."""
+    _sweep(spark, tmp_path, monkeypatch, _EVO, _four_points)
 
 
 # -- r9 surfaces: DV delete, rename, post-rename merge, sorted compact ------
@@ -431,56 +489,13 @@ def test_crash_matrix_dv_and_column_mapping_recovers(spark, tmp_path, monkeypatc
     FS op is a crash point, the epoch replays, and the final state
     plus every version's schema-correct read must equal the no-crash
     run."""
-    injector = _FaultInjector(monkeypatch)
-    injector.install()
-
-    base = tmp_path / "baseline"
-    sink = ParquetUpsertSink(
-        str(base / "t"),
-        key_cols=("k", "window_start"),
-        snapshot_dir=str(base / "s"),
-        schema_evolution=True,
-        retries=0,
+    _sweep(
+        spark,
+        tmp_path,
+        monkeypatch,
+        (_main_sink, _r9_steps, _r9_assert_final),
+        _dense_then_stride(13, 5),
     )
-    injector.arm(None)
-    for step in _r9_steps(spark, sink):
-        step()
-    total_ops = injector.count
-    _r9_assert_final(spark, sink)
-    assert total_ops > 10
-
-    crash_points = list(range(1, min(13, total_ops + 1))) + list(
-        range(13, total_ops + 1, 5)
-    )
-    for crash_at in crash_points:
-        root = tmp_path / f"crash{crash_at}"
-        sink = ParquetUpsertSink(
-            str(root / "t"),
-            key_cols=("k", "window_start"),
-            snapshot_dir=str(root / "s"),
-            schema_evolution=True,
-            retries=0,
-        )
-        steps = _r9_steps(spark, sink)
-        injector.arm(crash_at)
-        crashed_step = None
-        for i, step in enumerate(steps):
-            try:
-                step()
-            except SimulatedCrash:
-                crashed_step = i
-                break
-        assert crashed_step is not None, f"op budget moved? crash_at={crash_at}"
-        injector.arm(None)
-        for step in steps[crashed_step:]:
-            step()
-        try:
-            _r9_assert_final(spark, sink)
-        except AssertionError as exc:
-            raise AssertionError(
-                f"divergence after crash at FS op #{crash_at} "
-                f"(step {crashed_step}): {exc}"
-            ) from exc
 
 
 # -- r10 surface: bloom index + z-order compact + MERGE evolution -----------
@@ -551,51 +566,13 @@ def test_crash_matrix_bloom_zorder_merge_recovers(spark, tmp_path, monkeypatch):
     DV delete — every orchestration FS op is a crash point, the
     sequence replays, and the final state INCLUDING both pruning
     axes' correctness must equal the no-crash run."""
-    injector = _FaultInjector(monkeypatch)
-    injector.install()
-
-    base = tmp_path / "baseline"
-    mk = lambda root: ParquetUpsertSink(  # noqa: E731
-        str(root / "t"),
-        key_cols=("k", "window_start"),
-        snapshot_dir=str(root / "s"),
-        schema_evolution=True,
-        retries=0,
+    _sweep(
+        spark,
+        tmp_path,
+        monkeypatch,
+        (_main_sink, _r10_steps, _r10_assert_final),
+        _dense_then_stride(10, 7),
     )
-    sink = mk(base)
-    injector.arm(None)
-    for step in _r10_steps(spark, sink):
-        step()
-    total_ops = injector.count
-    _r10_assert_final(spark, sink)
-    assert total_ops > 10
-
-    crash_points = list(range(1, min(10, total_ops + 1))) + list(
-        range(10, total_ops + 1, 7)
-    )
-    for crash_at in crash_points:
-        root = tmp_path / f"r10crash{crash_at}"
-        sink = mk(root)
-        steps = _r10_steps(spark, sink)
-        injector.arm(crash_at)
-        crashed_step = None
-        for i, step in enumerate(steps):
-            try:
-                step()
-            except SimulatedCrash:
-                crashed_step = i
-                break
-        assert crashed_step is not None, f"op budget moved? crash_at={crash_at}"
-        injector.arm(None)
-        for step in steps[crashed_step:]:
-            step()
-        try:
-            _r10_assert_final(spark, sink)
-        except AssertionError as exc:
-            raise AssertionError(
-                f"divergence after crash at FS op #{crash_at} "
-                f"(step {crashed_step}): {exc}"
-            ) from exc
 
 
 # -- r11 surface: OCC commits (write_batch_occ + merge_into_occ) ------------
@@ -671,6 +648,9 @@ def _occ_assert_final(spark, sink):
     )  # the emptied partition is gone, not resurrected
 
 
+_OCC = (_plain_sink, _occ_steps, _occ_assert_final)
+
+
 @pytest.mark.slow
 def test_crash_matrix_occ_commits_recover_exactly_once(
     spark, tmp_path, monkeypatch
@@ -681,50 +661,12 @@ def test_crash_matrix_occ_commits_recover_exactly_once(
     equal the no-crash run EXACTLY (snapshot ids included) — a
     double-applied payload, duplicated version, lost partition, or
     resurrected row fails with the op index."""
-    injector = _FaultInjector(monkeypatch)
-    injector.install()
+    _sweep(spark, tmp_path, monkeypatch, _OCC, _dense_then_stride(10, 7))
 
-    base = tmp_path / "baseline"
-    mk = lambda root: ParquetUpsertSink(  # noqa: E731
-        str(root / "t"),
-        key_cols=("k", "window_start"),
-        snapshot_dir=str(root / "s"),
-        retries=0,
-    )
-    sink = mk(base)
-    injector.arm(None)
-    for step in _occ_steps(spark, sink):
-        step()
-    total_ops = injector.count
-    _occ_assert_final(spark, sink)
-    assert total_ops > 10
 
-    crash_points = list(range(1, min(10, total_ops + 1))) + list(
-        range(10, total_ops + 1, 7)
-    )
-    for crash_at in crash_points:
-        root = tmp_path / f"occcrash{crash_at}"
-        sink = mk(root)
-        steps = _occ_steps(spark, sink)
-        injector.arm(crash_at)
-        crashed_step = None
-        for i, step in enumerate(steps):
-            try:
-                step()
-            except SimulatedCrash:
-                crashed_step = i
-                break
-        assert crashed_step is not None, f"op budget moved? crash_at={crash_at}"
-        injector.arm(None)
-        for step in steps[crashed_step:]:
-            step()
-        try:
-            _occ_assert_final(spark, sink)
-        except AssertionError as exc:
-            raise AssertionError(
-                f"divergence after crash at FS op #{crash_at} "
-                f"(step {crashed_step}): {exc}"
-            ) from exc
+def test_crash_matrix_occ_smoke_four_points_recover(spark, tmp_path, monkeypatch):
+    """Default-tier 4-point smoke of the OCC sweep."""
+    _sweep(spark, tmp_path, monkeypatch, _OCC, _four_points)
 
 
 @pytest.mark.slow

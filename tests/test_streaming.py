@@ -2597,32 +2597,24 @@ def test_consolidated_metadata_lost_cache_rebuilds_from_dirs(spark, tmp_path):
 
 
 @pytest.mark.parametrize("op", ["delete", "update", "merge_into", "occ"])
-def test_first_write_crash_before_schema_publish_recovers(spark, tmp_path, op):
-    """A first write that crashed between its directory overwrite and
-    the _schema.json publish leaves a table without a recorded schema.
-    Every reader serves it under the footer schema (the pruned readers
-    too, including a plan that selects no file), and every staging
-    writer commits through it: the staging records the scanned schema
-    for the commit to publish, so the commit neither fails nor wedges
-    the table, and the next write_batch lands."""
-    sink = _evo_sink(tmp_path, retries=0)  # a crash is not retried
+def test_schema_file_lost_out_of_band_recovers(spark, tmp_path, op):
+    """A live table whose _schema.json was deleted out of band (every
+    commit publishes it before its first partition lands, so this is
+    the one way a table loses it). Every reader serves it under the
+    footer schema (the pruned readers too, including a plan that
+    selects no file), and every staging writer commits through it: the
+    staging records the scanned schema for the commit to publish, so
+    the commit neither fails nor wedges the table, and the next
+    write_batch lands."""
+    sink = _evo_sink(tmp_path, retries=0)
     rows = [
         (f"k{i}", dt.datetime(2024, 1, 15 + (i % 2), 10, i % 60), i)
         for i in range(100)
     ]
     schema = "k string, window_start timestamp, total bigint"
-    publish = sink._write_schema_file
-
-    def crash(s, path=None):
-        if path is None:  # the table's _schema.json, not a staging's
-            raise RuntimeError("injected crash before the schema publish")
-        publish(s, path)
-
-    sink._write_schema_file = crash
-    with pytest.raises(RuntimeError, match="injected crash"):
-        sink.write_batch(spark.createDataFrame(rows, schema), 0)
-    del sink._write_schema_file
+    sink.write_batch(spark.createDataFrame(rows, schema), 0)
     schema_file = os.path.join(sink.path, "_schema.json")
+    os.remove(schema_file)
     assert not os.path.exists(schema_file)
 
     def totals():
@@ -2669,6 +2661,51 @@ def test_first_write_crash_before_schema_publish_recovers(spark, tmp_path, op):
         2,
     )
     assert totals() == sorted(expected[1:] + [2000])
+
+
+@pytest.mark.parametrize("recreate", ["write_batch", "merge_into"])
+def test_drained_table_recreate_keeps_table_metadata(spark, tmp_path, recreate):
+    """A write that re-creates a table whose every row was deleted is a
+    staged commit like any other, so the table-level files recorded
+    before the drain survive it: the OCC idempotence ledger (replaying
+    the OCC epoch returns its original version and re-applies nothing,
+    so the row deleted while drained stays deleted), the bloom
+    declaration (the new partition is indexed) and the constraint."""
+    from real_time_ride_hailing_data_pipeline_spark.streaming.sinks import (
+        ConstraintViolationError,
+    )
+
+    sink, d1, d2 = _occ_seed(spark, tmp_path)
+    schema = "k string, window_start timestamp, total bigint"
+    occ_batch = spark.createDataFrame([("a", d1, 11)], schema)
+    assert sink.write_batch_occ(occ_batch, 7, writer_id="w")["version"] == 7
+    sink.add_constraint(spark, "pos", "total > 0")
+    sink.create_bloom_index(spark, "k")
+    sink.delete_keys(
+        spark.createDataFrame(
+            [("a", d1), ("b", d1), ("c", d2), ("d", d2)],
+            "k string, window_start timestamp",
+        ),
+        9,
+    )
+    assert not sink._table_exists()
+
+    batch = spark.createDataFrame([("e", d2, 5)], schema)
+    if recreate == "write_batch":
+        sink.write_batch(batch, 10)
+    else:
+        sink.merge_into(batch, 10)
+    assert sink.snapshots() == [0, 7, 9, 10]
+    for name in ("_occ_applied.json", "_bloom_meta.json"):
+        assert os.path.exists(os.path.join(sink.path, name)), name
+    assert [r["has_bloom"] for r in sink.describe_files(spark).collect()] == [True]
+    assert sink._constraints() == {"pos": "total > 0"}
+    with pytest.raises(ConstraintViolationError, match="pos"):
+        sink.write_batch(spark.createDataFrame([("f", d2, -1)], schema), 11)
+
+    replay = sink.write_batch_occ(occ_batch, 7, writer_id="w")
+    assert (replay["version"], replay["attempts"]) == (7, 0)
+    assert {r["k"]: r["total"] for r in sink.read(spark).collect()} == {"e": 5}
 
 
 # -- cross-process writer exclusion (r10, VERDICT r9 item 6) ----------------
