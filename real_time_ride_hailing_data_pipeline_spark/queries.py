@@ -25,6 +25,7 @@ from real_time_ride_hailing_data_pipeline_spark.operators import ride_pipeline a
 from real_time_ride_hailing_data_pipeline_spark.operators import similarity as sim
 from real_time_ride_hailing_data_pipeline_spark.operators import sampling as smp
 from real_time_ride_hailing_data_pipeline_spark.operators import text as tx
+from real_time_ride_hailing_data_pipeline_spark.session import scoped_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 _V = TypeVar("_V")
@@ -7049,13 +7050,13 @@ def statestore_open_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     names (count + avg internals); a positional struct cast renames
     them for unambiguous access."""
     import os
-    import tempfile as _tf
 
     from real_time_ride_hailing_data_pipeline_spark.streaming.job import (
+        _workdir,
         run_city_metrics_replay,
     )
 
-    workdir = _tf.mkdtemp(prefix="rtrh_stater_")
+    workdir = _workdir("rtrh_stater_")
     ckpt = os.path.join(workdir, "ckpt")
     run_city_metrics_replay(
         spark,
@@ -8561,17 +8562,8 @@ def runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     demo thresholds (see _BLOOM_CONFS — restored after; defaults fire
     at production scale) via localCheckpoint, so the registry
     callable stays conf-clean for its caller."""
-    prev = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    try:
-        for k, v in _BLOOM_CONFS.items():
-            spark.conf.set(k, v)
+    with scoped_conf(spark, **_BLOOM_CONFS):
         return _bloom_filter_join(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @query(
@@ -10415,13 +10407,13 @@ def state_metadata_operators(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariants; a Spark upgrade that changed operator naming or
     batch accounting would fail the hash loudly."""
     import os as _os
-    import tempfile as _tf
 
     from real_time_ride_hailing_data_pipeline_spark.streaming.job import (
+        _workdir,
         run_city_metrics_replay,
     )
 
-    workdir = _tf.mkdtemp(prefix="rtrh_statemd_")
+    workdir = _workdir("rtrh_statemd_")
     ckpt = _os.path.join(workdir, "ckpt")
     run_city_metrics_replay(
         spark,

@@ -334,7 +334,8 @@ class EmbeddedPostgres:
     Boots once per process (initdb + pg_ctl start, trust auth,
     localhost TCP on a free port), as user ``nobody`` when the process
     is root (PostgreSQL refuses to run as root). fsync/synchronous
-    commit off — micro-benchmark harness posture. Stopped at exit."""
+    commit off — micro-benchmark harness posture. Stopped, and its
+    data dir removed, at exit."""
 
     _instance: "EmbeddedPostgres | None" = None
 
@@ -411,6 +412,7 @@ class EmbeddedPostgres:
 
     def _boot(self) -> None:
         self._base = tempfile.mkdtemp(prefix="rtrh_pg_")
+        atexit.register(self._stop)  # also removes a failed boot's dir
         data = os.path.join(self._base, "data")
         if os.geteuid() == 0:
             shutil.chown(self._base, user="nobody")
@@ -431,9 +433,11 @@ class EmbeddedPostgres:
             shutil.which("pg_ctl"), "-D", data, "-w",
             "-l", os.path.join(self._base, "pg.log"), "-o", opts, "start",
         )
-        atexit.register(self._stop)
 
     def _stop(self) -> None:
+        """Stop the server and remove its data dir: the dir is
+        single-use, and a process that left it behind would leave one
+        ``rtrh_pg_*`` tree per run under the temp dir."""
         try:
             self._run(
                 shutil.which("pg_ctl"), "-D",
@@ -441,6 +445,7 @@ class EmbeddedPostgres:
             )
         except Exception:
             pass
+        shutil.rmtree(self._base, ignore_errors=True)
 
     def connect(self) -> PgWireClient:
         return PgWireClient(self.host, self.port, self.user, self.database)

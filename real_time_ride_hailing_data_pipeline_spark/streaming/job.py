@@ -34,12 +34,16 @@ import atexit
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from real_time_ride_hailing_data_pipeline_spark import catalog
 from real_time_ride_hailing_data_pipeline_spark.operators import ride_pipeline as rp
-from real_time_ride_hailing_data_pipeline_spark.session import configure_runtime
+from real_time_ride_hailing_data_pipeline_spark.session import (
+    configure_runtime,
+    scoped_conf,
+)
 from real_time_ride_hailing_data_pipeline_spark.streaming.sinks import ParquetUpsertSink
 
 
@@ -105,12 +109,37 @@ def _as_source_dir(path: str, wrapper_dir: str | None) -> str:
     """
     if not os.path.isfile(path):
         return path
-    wrapper = wrapper_dir or tempfile.mkdtemp(prefix="rtrh_src_")
+    wrapper = wrapper_dir or _workdir("rtrh_src_")
     os.makedirs(wrapper, exist_ok=True)
     link = os.path.join(wrapper, os.path.basename(path))
     if not os.path.exists(link):
         os.symlink(path, link)
     return wrapper
+
+
+def _run_available_now(
+    spark: SparkSession, writer: DataStreamWriter, checkpoint_dir: str
+) -> None:
+    """Run one bounded replay, the one query runner every streaming
+    entry here goes through: ``writer`` (already given its output mode
+    and its foreachBatch, foreach or ``format(...)`` path sink) gets
+    the checkpoint and the availableNow trigger, starts, and is
+    awaited to completion — everything in the source at start is
+    processed as micro-batches, then the query stops.
+
+    The state partition count is frozen into the checkpoint on the
+    first run, so the query starts under the _STREAM_SHUFFLE_PARTITIONS
+    pin, scoped to this call: the caller's session gets its own value
+    back (or its default) on every exit path."""
+    with scoped_conf(
+        spark, **{"spark.sql.shuffle.partitions": _STREAM_SHUFFLE_PARTITIONS}
+    ):
+        query = (
+            writer.option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
 
 
 def _link_table_parts(table_path: str, dest_dir: str, prefix: str) -> list[str]:
@@ -202,8 +231,8 @@ def run_city_metrics_replay(
     slide_duration: str | None = None,
     snapshot_dir: str | None = None,
 ) -> ParquetUpsertSink:
-    """Execute the full streaming pipeline once with
-    ``trigger(availableNow=True)``: process everything currently in
+    """Execute the full streaming pipeline once as an availableNow
+    replay (_run_available_now): process everything currently in
     ``source_dir`` as micro-batches, upsert into the keyed parquet
     sink, checkpoint offsets, and stop. Restart-safe: rerunning with
     the same checkpoint processes nothing new; rerunning with a fresh
@@ -226,19 +255,11 @@ def run_city_metrics_replay(
     # The group cardinality here is |open windows| x |keys| — small —
     # so a handful of state partitions beats the batch default (each
     # state partition pays per-commit file I/O on every trigger).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            metrics.writeStream.outputMode("update")
-            .foreachBatch(sink.write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_available_now(
+        spark,
+        metrics.writeStream.outputMode("update").foreachBatch(sink.write_batch),
+        checkpoint_dir,
+    )
     return sink
 
 
@@ -269,19 +290,11 @@ def run_streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = ParquetUpsertSink(
         os.path.join(workdir, "out"), key_cols=("event_type", "window_start")
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            metrics.writeStream.outputMode("update")
-            .foreachBatch(sink.write_batch)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_available_now(
+        spark,
+        metrics.writeStream.outputMode("update").foreachBatch(sink.write_batch),
+        os.path.join(workdir, "ckpt"),
+    )
     return sink.read(spark)
 
 
@@ -318,19 +331,11 @@ def run_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(out_path)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(write)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_available_now(
+        spark,
+        agg.writeStream.outputMode("complete").foreachBatch(write),
+        os.path.join(workdir, "ckpt"),
+    )
     return spark.read.parquet(out_path).select(
         "event_type",
         "n_events",
@@ -352,55 +357,7 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow replay emits exactly the batch-join result, which the
     DuckDB oracle reproduces as a plain range join.
     """
-    workdir = _workdir("rtrh_ssj_")
-    src = os.path.join(sf_dir, "events.parquet")
-    purchases = (
-        events_parquet_stream(spark, src, wrapper_dir=os.path.join(workdir, "w1"))
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 minute")
-    )
-    signups = (
-        events_parquet_stream(spark, src, wrapper_dir=os.path.join(workdir, "w2"))
-        .filter(F.col("event_type") == "signup")
-        .select(
-            F.col("event_id").alias("signup_id"),
-            F.col("user_id").alias("s_user_id"),
-            F.col("ts").alias("signup_ts"),
-        )
-        .withWatermark("signup_ts", "1 minute")
-    )
-    joined = purchases.join(
-        signups,
-        (F.col("user_id") == F.col("s_user_id"))
-        & (F.col("signup_ts") <= F.col("purchase_ts"))
-        & (F.col("signup_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 7 DAYS")),
-        "inner",
-    ).select("purchase_id", "user_id", "signup_id", "signup_ts", "purchase_ts")
-
-    out_path = os.path.join(workdir, "out")
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_path)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            joined.writeStream.outputMode("append")
-            .foreachBatch(write)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.read.parquet(out_path)
+    return _purchase_signup_join_replay(spark, sf_dir, "inner")
 
 
 def run_stateful_sessionizer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -418,19 +375,11 @@ def run_stateful_sessionizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_path)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            sessions.writeStream.outputMode("append")
-            .foreachBatch(write)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_available_now(
+        spark,
+        sessions.writeStream.outputMode("append").foreachBatch(write),
+        os.path.join(workdir, "ckpt"),
+    )
     return spark.read.parquet(out_path)
 
 
@@ -463,19 +412,11 @@ def run_running_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_cols=("user_id",),
         partition_source="last_ts",
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            totals.writeStream.outputMode("update")
-            .foreachBatch(sink.write_batch)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_available_now(
+        spark,
+        totals.writeStream.outputMode("update").foreachBatch(sink.write_batch),
+        os.path.join(workdir, "ckpt"),
+    )
     return sink.read(spark)
 
 
@@ -522,19 +463,11 @@ def streaming_complete_topk_replay(spark: SparkSession, sf_dir: str) -> DataFram
     def _replace_snapshot(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(snapshot)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            counts.writeStream.outputMode("complete")
-            .foreachBatch(_replace_snapshot)
-            .option("checkpointLocation", os.path.join(workdir, "checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_available_now(
+        spark,
+        counts.writeStream.outputMode("complete").foreachBatch(_replace_snapshot),
+        os.path.join(workdir, "checkpoint"),
+    )
     return (
         spark.read.parquet(snapshot)
         .orderBy(F.desc("total_trips"), F.asc("event_type"))
@@ -588,19 +521,11 @@ def streaming_append_closed_windows(spark: SparkSession, sf_dir: str) -> DataFra
     def _append(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("append").parquet(out)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            metrics.writeStream.outputMode("append")
-            .foreachBatch(_append)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_available_now(
+        spark,
+        metrics.writeStream.outputMode("append").foreachBatch(_append),
+        os.path.join(workdir, "ckpt"),
+    )
     return spark.read.parquet(out).filter(
         ~F.col("event_type").isin("flush1", "flush2")
     )
@@ -643,26 +568,25 @@ def streaming_fanout_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             batch_df.unpersist()
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            metrics.writeStream.outputMode("update")
-            .foreachBatch(_fanout)
-            .option("checkpointLocation", os.path.join(workdir, "checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    from pyspark.sql import Window
-
+    _run_available_now(
+        spark,
+        metrics.writeStream.outputMode("update").foreachBatch(_fanout),
+        os.path.join(workdir, "checkpoint"),
+    )
     log = spark.read.option("recursiveFileLookup", "false").json(
         os.path.join(log_dir, "*")
     )
+    return _latest_epoch_per_key(log)
+
+
+def _latest_epoch_per_key(log: DataFrame) -> DataFrame:
+    """Latest-wins compaction of an epoch-stamped city-metrics change
+    log: per (event_type, window_start) the row of the highest epoch
+    (update mode re-emits a still-open window in later epochs), cast
+    back to the metrics schema — the log formats carry timestamps as
+    strings and may infer the numeric columns."""
     w = Window.partitionBy("event_type", "window_start").orderBy(F.desc("epoch"))
-    latest = (
+    return (
         log.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select(
@@ -673,7 +597,6 @@ def streaming_fanout_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("average_fare").cast("double").alias("average_fare"),
         )
     )
-    return latest
 
 
 def streaming_sliding_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -718,19 +641,11 @@ def streaming_jdbc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         wrapper_dir=os.path.join(workdir, "srcview"),
     )
     metrics = city_metrics_update_stream(events)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            metrics.writeStream.outputMode("update")
-            .foreachBatch(sink.write_batch)
-            .option("checkpointLocation", os.path.join(workdir, "checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_available_now(
+        spark,
+        metrics.writeStream.outputMode("update").foreachBatch(sink.write_batch),
+        os.path.join(workdir, "checkpoint"),
+    )
     return sink.read(spark)
 
 
@@ -799,63 +714,7 @@ def run_stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataF
     filter above the watermark operator. State stays bounded exactly
     as in the inner join: each side evicts once the global watermark
     passes the time bound."""
-    workdir = _workdir("rtrh_ssloj_")
-    src = os.path.join(sf_dir, "events.parquet")
-    w1 = os.path.join(workdir, "w1")
-    w2 = os.path.join(workdir, "w2")
-    for d, etype in ((w1, "purchase"), (w2, "signup")):
-        os.makedirs(d, exist_ok=True)
-        _link_table_parts(src, d, "events")
-        _write_watermark_flush_row(src, d, etype)
-    purchases = (
-        events_parquet_stream(spark, w1)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 minute")
-    )
-    signups = (
-        events_parquet_stream(spark, w2)
-        .filter(F.col("event_type") == "signup")
-        .select(
-            F.col("event_id").alias("signup_id"),
-            F.col("user_id").alias("s_user_id"),
-            F.col("ts").alias("signup_ts"),
-        )
-        .withWatermark("signup_ts", "1 minute")
-    )
-    joined = purchases.join(
-        signups,
-        (F.col("user_id") == F.col("s_user_id"))
-        & (F.col("signup_ts") <= F.col("purchase_ts"))
-        & (F.col("signup_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 7 DAYS")),
-        "left_outer",
-    ).select("purchase_id", "user_id", "signup_id", "signup_ts", "purchase_ts")
-
-    out_path = os.path.join(workdir, "out")
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        # drop the sentinel pair AFTER execution (a pre-join filter
-        # would push below EventTimeWatermark and undo the flush)
-        batch_df.filter(F.col("user_id") >= 0).write.mode("append").parquet(out_path)
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            joined.writeStream.outputMode("append")
-            .foreachBatch(write)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.read.parquet(out_path)
+    return _purchase_signup_join_replay(spark, sf_dir, "left_outer")
 
 
 def run_stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -868,17 +727,40 @@ def run_stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataF
     flush-sentinel determinism as the left-outer replay; user_id is
     coalesced across sides so right-only rows carry it. Oracle: the
     batch FULL JOIN."""
-    workdir = _workdir("rtrh_ssfoj_")
+    return _purchase_signup_join_replay(spark, sf_dir, "full_outer")
+
+
+def _purchase_signup_join_replay(
+    spark: SparkSession, sf_dir: str, how: str
+) -> DataFrame:
+    """The purchase/signup attribution replay behind the inner,
+    left-outer and full-outer stream-stream joins: purchases joined to
+    the same user's signups of the preceding 7 days, both sides
+    watermarked at 1 minute, appended to parquet and read back.
+
+    Each side reads its own staged copy of `events` (the file source
+    tracks files per query source). The outer joins also get the
+    watermark-flush sentinel on BOTH copies (see
+    _write_watermark_flush_row) and drop its user -1 rows in the sink;
+    the inner join needs no flush — it emits a pair as soon as both
+    rows are in, never on the watermark. user_id is coalesced across
+    sides so right-only rows of the full outer join carry it (on the
+    inner and left-outer joins it is the purchase side's)."""
+    workdir = _workdir(f"rtrh_ssj_{how}_")
     src = os.path.join(sf_dir, "events.parquet")
-    w1 = os.path.join(workdir, "w1")
-    w2 = os.path.join(workdir, "w2")
-    for d, etype in ((w1, "purchase"), (w2, "signup")):
-        os.makedirs(d, exist_ok=True)
+    flush = how != "inner"
+    sides = []
+    for name, etype in (("w1", "purchase"), ("w2", "signup")):
+        d = os.path.join(workdir, name)
+        os.makedirs(d)
         _link_table_parts(src, d, "events")
-        _write_watermark_flush_row(src, d, etype)
+        if flush:
+            _write_watermark_flush_row(src, d, etype)
+        sides.append(
+            events_parquet_stream(spark, d).filter(F.col("event_type") == etype)
+        )
     purchases = (
-        events_parquet_stream(spark, w1)
-        .filter(F.col("event_type") == "purchase")
+        sides[0]
         .select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id"),
@@ -887,8 +769,7 @@ def run_stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataF
         .withWatermark("purchase_ts", "1 minute")
     )
     signups = (
-        events_parquet_stream(spark, w2)
-        .filter(F.col("event_type") == "signup")
+        sides[1]
         .select(
             F.col("event_id").alias("signup_id"),
             F.col("user_id").alias("s_user_id"),
@@ -901,7 +782,7 @@ def run_stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataF
         (F.col("user_id") == F.col("s_user_id"))
         & (F.col("signup_ts") <= F.col("purchase_ts"))
         & (F.col("signup_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 7 DAYS")),
-        "full_outer",
+        how,
     ).select(
         "purchase_id",
         F.coalesce("user_id", "s_user_id").alias("user_id"),
@@ -909,26 +790,21 @@ def run_stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataF
         "signup_ts",
         "purchase_ts",
     )
-
     out_path = os.path.join(workdir, "out")
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        # sentinel rows (user -1 on either side) removed post-execution
-        batch_df.filter(F.col("user_id") >= 0).write.mode("append").parquet(out_path)
+        if flush:
+            # drop the sentinel rows (user -1 on either side) AFTER
+            # execution (a pre-join filter would push below
+            # EventTimeWatermark and undo the flush)
+            batch_df = batch_df.filter(F.col("user_id") >= 0)
+        batch_df.write.mode("append").parquet(out_path)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            joined.writeStream.outputMode("append")
-            .foreachBatch(write)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_available_now(
+        spark,
+        joined.writeStream.outputMode("append").foreachBatch(write),
+        os.path.join(workdir, "ckpt"),
+    )
     return spark.read.parquet(out_path)
 
 
@@ -1320,11 +1196,26 @@ def streaming_cdc_downstream_apply(spark: SparkSession, sf_dir: str) -> DataFram
     delete_epoch = epochs[-1] + 1
     sink.delete_keys(doomed, delete_epoch)
     versions = sink.snapshots()  # no retention bound: all versions live
+    return _apply_changes_and_prove(
+        sink.read_at(spark, versions[0]),
+        [
+            sink.read_changes_typed(spark, frm, to)
+            for frm, to in zip(versions, versions[1:])
+        ],
+        sink.read(spark),
+        "CDC",
+    )
 
+
+def _apply_changes_and_prove(
+    replica: DataFrame, feeds: list[DataFrame], live: DataFrame, label: str
+) -> DataFrame:
+    """Apply typed change feeds (``change_type`` 'upsert' rows carry
+    post-images, 'delete' rows pre-images) to ``replica`` in order —
+    upserts overwrite by key, deletes remove by key — and prove the
+    result equals ``live`` as a multiset. Returns ``live``."""
     key_cols = ["event_type", "window_start"]
-    replica = sink.read_at(spark, versions[0])
-    for frm, to in zip(versions, versions[1:]):
-        delta = sink.read_changes_typed(spark, frm, to)
+    for delta in feeds:
         upserts = delta.filter(F.col("change_type") == "upsert").drop("change_type")
         dels = delta.filter(F.col("change_type") == "delete").select(*key_cols)
         changed_keys = upserts.select(*key_cols).unionByName(dels)
@@ -1332,7 +1223,6 @@ def streaming_cdc_downstream_apply(spark: SparkSession, sf_dir: str) -> DataFram
             replica.join(F.broadcast(changed_keys), key_cols, "left_anti")
             .unionByName(upserts)
         )
-    live = sink.read(spark)
     # the composition proof: replica built ONLY from deltas == table.
     # r14 (guide §1.2): (a) the replica — a per-version chain of
     # broadcast-anti-join + union — is PERSISTED for the two proof
@@ -1348,7 +1238,7 @@ def streaming_cdc_downstream_apply(spark: SparkSession, sf_dir: str) -> DataFram
             replica.count() != live.count()
             or replica.exceptAll(live).count()
         ):
-            raise RuntimeError("CDC replica diverged from the live table")
+            raise RuntimeError(f"{label} replica diverged from the live table")
     finally:
         replica.unpersist()
     # proven equal as a multiset: return the sink read-back, so no
@@ -1403,39 +1293,20 @@ def streaming_cdf_source_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("start_epoch", str(epochs[0]))
         .load()
     )
-    query = (
-        stream.writeStream.format("parquet")
-        .option("path", feed_dir)
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        spark,
+        stream.writeStream.format("parquet").option("path", feed_dir),
+        os.path.join(workdir, "ckpt"),
     )
-    query.awaitTermination()
-
-    feed = spark.read.parquet(feed_dir)
-    key_cols = ["event_type", "window_start"]
-    upserts = feed.filter(F.col("change_type") == "upsert").drop("change_type")
-    dels = feed.filter(F.col("change_type") == "delete").select(*key_cols)
-    changed_keys = upserts.select(*key_cols).unionByName(dels)
-    replica = (
-        sink.read_at(spark, epochs[0])
-        .join(F.broadcast(changed_keys), key_cols, "left_anti")
-        .unionByName(upserts)
-    )
-    live = sink.read(spark)
     # same persisted-replica + one-pass multiset-equality proof as the
     # batch CDC consumer (r14): equal counts + empty replica∖live ⇒
-    # live∖replica empty
-    replica = replica.persist()
-    try:
-        if (
-            replica.count() != live.count()
-            or replica.exceptAll(live).count()
-        ):
-            raise RuntimeError("streaming-CDF replica diverged from the live table")
-    finally:
-        replica.unpersist()
-    return live  # proven equal as a multiset (see the batch consumer)
+    # live∖replica empty; the live read-back it equals is returned
+    return _apply_changes_and_prove(
+        sink.read_at(spark, epochs[0]),
+        [spark.read.parquet(feed_dir)],
+        sink.read(spark),
+        "streaming-CDF",
+    )
 
 
 def streaming_partition_evolution_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1473,19 +1344,11 @@ def streaming_partition_evolution_replay(spark: SparkSession, sf_dir: str) -> Da
             sink.evolve_partitioning("month")
         sink.write_batch(batch_df, epoch_id)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            metrics.writeStream.outputMode("update")
-            .foreachBatch(write)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_available_now(
+        spark,
+        metrics.writeStream.outputMode("update").foreachBatch(write),
+        os.path.join(workdir, "ckpt"),
+    )
     # cross-spec overwrite: re-put ONE pre-evolution window's rows
     # (identical values — content-invariant) as a post-evolution
     # batch; the merge must claim the key's daily copy and land it in
@@ -1562,8 +1425,6 @@ def streaming_foreach_row_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``open``, never per row; for bulk storage foreachBatch's
     DataFrame write stays strictly better, which is why the engine's
     real sinks all use it."""
-    from pyspark.sql import Window
-
     workdir = _workdir("rtrh_foreach_")
     out_dir = os.path.join(workdir, "rows")
 
@@ -1630,35 +1491,18 @@ def streaming_foreach_row_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         wrapper_dir=os.path.join(workdir, "srcview"),
     )
     metrics = city_metrics_update_stream(events)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            metrics.writeStream.outputMode("update")
-            .foreach(RowFileForeachWriter(out_dir))
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_available_now(
+        spark,
+        metrics.writeStream.outputMode("update").foreach(
+            RowFileForeachWriter(out_dir)
+        ),
+        os.path.join(workdir, "ckpt"),
+    )
     log = spark.read.schema(
         "event_type string, window_start string, last_updated string, "
         "total_trips long, average_fare double, epoch long"
     ).json(os.path.join(out_dir, "*.jsonl"))
-    w = Window.partitionBy("event_type", "window_start").orderBy(F.desc("epoch"))
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "event_type",
-            F.col("window_start").cast("timestamp").alias("window_start"),
-            F.col("last_updated").cast("timestamp").alias("last_updated"),
-            "total_trips",
-            "average_fare",
-        )
-    )
+    return _latest_epoch_per_key(log)
 
 
 def streaming_schema_evolution_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1700,19 +1544,11 @@ def streaming_schema_evolution_replay(spark: SparkSession, sf_dir: str) -> DataF
             )
         sink.write_batch(out, epoch_id)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            metrics.writeStream.outputMode("update")
-            .foreachBatch(write)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_available_now(
+        spark,
+        metrics.writeStream.outputMode("update").foreachBatch(write),
+        os.path.join(workdir, "ckpt"),
+    )
     return sink.read(spark)
 
 
@@ -1744,19 +1580,11 @@ def streaming_postgres_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         wrapper_dir=os.path.join(workdir, "srcview"),
     )
     metrics = city_metrics_update_stream(events)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTITIONS)
-    try:
-        query = (
-            metrics.writeStream.outputMode("update")
-            .foreachBatch(sink.write_batch)
-            .option("checkpointLocation", os.path.join(workdir, "checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _run_available_now(
+        spark,
+        metrics.writeStream.outputMode("update").foreachBatch(sink.write_batch),
+        os.path.join(workdir, "checkpoint"),
+    )
     return sink.read(spark)
 
 
@@ -1790,14 +1618,11 @@ def streaming_rate_source_buckets(spark: SparkSession, sf_dir: str) -> DataFrame
         .load()
     )
     shaped = src.select((F.col("value") % 10).alias("bucket"), "value")
-    query = (
-        shaped.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        spark,
+        shaped.writeStream.format("parquet").option("path", out),
+        os.path.join(workdir, "ckpt"),
     )
-    query.awaitTermination()
     return (
         spark.read.parquet(out)
         .groupBy("bucket")

@@ -498,6 +498,19 @@ def test_crash_matrix_dv_and_column_mapping_recovers(spark, tmp_path, monkeypatc
     )
 
 
+def test_crash_matrix_dv_and_column_mapping_smoke_four_points_recover(
+    spark, tmp_path, monkeypatch
+):
+    """Default-tier 4-point smoke of the DV + column-mapping sweep."""
+    _sweep(
+        spark,
+        tmp_path,
+        monkeypatch,
+        (_main_sink, _r9_steps, _r9_assert_final),
+        _four_points,
+    )
+
+
 # -- r10 surface: bloom index + z-order compact + MERGE evolution -----------
 
 
@@ -572,6 +585,19 @@ def test_crash_matrix_bloom_zorder_merge_recovers(spark, tmp_path, monkeypatch):
         monkeypatch,
         (_main_sink, _r10_steps, _r10_assert_final),
         _dense_then_stride(10, 7),
+    )
+
+
+def test_crash_matrix_bloom_zorder_merge_smoke_four_points_recover(
+    spark, tmp_path, monkeypatch
+):
+    """Default-tier 4-point smoke of the bloom + z-order + MERGE sweep."""
+    _sweep(
+        spark,
+        tmp_path,
+        monkeypatch,
+        (_main_sink, _r10_steps, _r10_assert_final),
+        _four_points,
     )
 
 

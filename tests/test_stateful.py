@@ -13,6 +13,7 @@ import shutil
 
 from pyspark.sql import types as T
 
+from real_time_ride_hailing_data_pipeline_spark.session import scoped_conf
 from real_time_ride_hailing_data_pipeline_spark.streaming import job as sj
 from real_time_ride_hailing_data_pipeline_spark.streaming.stateful import sessionize
 
@@ -54,9 +55,7 @@ def _run(spark, source_dir, out_dir, ckpt):
     def write(df, epoch):
         df.write.mode("append").parquet(out_dir)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "4"}):
         q = (
             sessions.writeStream.outputMode("append")
             .foreachBatch(write)
@@ -65,8 +64,6 @@ def _run(spark, source_dir, out_dir, ckpt):
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_transform_with_state_plan_builds_and_gate_is_explicit(spark, tmp_path):
