@@ -228,11 +228,16 @@ def _scratch_dir(kind: str) -> str:
     temp tree — or one new live Derby instance — per invocation when
     the driver/bench/verify call them repeatedly in a single JVM
     (ADVICE r4). All writes into these dirs are mode=overwrite, so
-    reuse is state-free."""
+    reuse is state-free. Each is removed at process exit with the
+    streaming replays' workdirs."""
     import tempfile
 
+    from real_time_ride_hailing_data_pipeline_spark.streaming import job as sj
+
     if kind not in _SCRATCH_DIRS:
-        _SCRATCH_DIRS[kind] = tempfile.mkdtemp(prefix=f"{kind}_")
+        _SCRATCH_DIRS[kind] = sj._remove_at_exit(
+            tempfile.mkdtemp(prefix=f"{kind}_")
+        )
     return _SCRATCH_DIRS[kind]
 
 
@@ -3394,7 +3399,9 @@ def streaming_ingest_concurrent_maintenance(spark: SparkSession, sf_dir: str) ->
         # empty and "succeeds" with missing keys — equally transient,
         # so a key-incomplete result retries the same way; only a
         # PERSISTENT loss (a real bug) raises (r13 — observed once in
-        # a plan-audit run).
+        # a plan-audit run). Each retried read_point re-lists the table
+        # itself (the sink's scan refreshes its path), so no
+        # session-wide cache drop is needed.
         got = None
         for attempt in range(4):
             try:
@@ -3412,11 +3419,9 @@ def streaming_ingest_concurrent_maintenance(spark: SparkSession, sf_dir: str) ->
                 )
                 if attempt == 3 or not is_swap_race:
                     raise
-                spark.catalog.clearCache()
                 continue
             if sorted(k for k, _ in got) == probes:
                 break
-            spark.catalog.clearCache()  # mid-swap empty listing
         if sorted(k for k, _ in got) != probes:
             raise RuntimeError(f"point lookup lost/duplicated keys: {got}")
         for k, v in got:

@@ -79,7 +79,12 @@ def _workdir(prefix: str) -> str:
     workdir's parquet lazily, possibly long after the query function
     returns."""
     root = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    d = tempfile.mkdtemp(prefix=prefix, dir=root)
+    return _remove_at_exit(tempfile.mkdtemp(prefix=prefix, dir=root))
+
+
+def _remove_at_exit(d: str) -> str:
+    """Register ``d`` on the one list of temp dirs removed at process
+    exit, and return it."""
     if not _WORKDIRS:
         atexit.register(_cleanup_workdirs)
     _WORKDIRS.append(d)

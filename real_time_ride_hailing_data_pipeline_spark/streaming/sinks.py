@@ -998,22 +998,12 @@ class ParquetUpsertSink:
         through the published logical schema. Type changes on shared
         columns always raise; without the opt-in, extra source
         columns raise loudly."""
-        if when_matched_update:
-            bad = set(when_matched_update) & (
-                set(self.key_cols) | {self.partition_source, "part_date"}
-            )
-            if bad:
-                raise ValueError(
-                    f"cannot SET key/partition column(s) {sorted(bad)} — "
-                    f"re-keying is a delete + insert"
-                )
-        if (
-            when_matched_update is None
-            and when_matched_delete_condition is None
-            and not when_not_matched_insert
-            and when_not_matched_by_source_delete is None
-        ):
-            raise ValueError("merge_into needs at least one WHEN clause")
+        self._check_merge_clauses(
+            when_matched_update,
+            when_matched_delete_condition,
+            when_not_matched_insert,
+            when_not_matched_by_source_delete,
+        )
         with self._writer_lock():
             with_retries(
                 lambda: self._merge_into(
@@ -1029,6 +1019,38 @@ class ParquetUpsertSink:
                 self.retries,
                 self.retry_delay_s,
             )
+
+    def _check_merge_clauses(
+        self, upd: dict | None, del_cond, ins: bool, nmbs_cond
+    ) -> None:
+        """Refuse a MERGE that SETs a key or partition column, or that
+        has no WHEN clause at all."""
+        if upd:
+            bad = set(upd) & (
+                set(self.key_cols) | {self.partition_source, "part_date"}
+            )
+            if bad:
+                raise ValueError(
+                    f"cannot SET key/partition column(s) {sorted(bad)} — "
+                    f"re-keying is a delete + insert"
+                )
+        if upd is None and del_cond is None and not ins and nmbs_cond is None:
+            raise ValueError("MERGE INTO needs at least one WHEN clause")
+
+    def _merge_source_extra(self, table, source, ins: bool) -> list[str]:
+        """Check a MERGE ``source`` schema against the ``table``'s — it
+        carries the key (every column when inserting) and changes no
+        type — and return its source-only columns."""
+        data_cols = [c for c in table.names if c != "part_date"]
+        missing = (set(data_cols) if ins else set(self.key_cols)) - set(
+            source.names
+        )
+        if missing:
+            raise ValueError(
+                f"merge source is missing column(s) {sorted(missing)}"
+            )
+        self._check_no_type_change(table, source)
+        return [c for c in source.names if c not in set(data_cols)]
 
     @staticmethod
     def _merge_cond(c):
@@ -1083,29 +1105,12 @@ class ParquetUpsertSink:
 
         existing = self._read_table(spark)
         data_cols = [c for c in existing.columns if c != "part_date"]
-        missing = (set(data_cols) if ins else set(self.key_cols)) - set(
-            staged.columns
-        )
-        if missing:
-            raise ValueError(
-                f"merge source is missing column(s) {sorted(missing)}"
-            )
-        extra = [c for c in staged.columns if c not in set(data_cols)]
+        extra = self._merge_source_extra(existing.schema, staged.schema, ins)
         if extra and not self.schema_evolution:
             raise ValueError(
                 f"merge source has column(s) {sorted(extra)} not in the "
                 f"table — construct the sink with schema_evolution=True "
                 f"to MERGE with additive schema evolution"
-            )
-        existing_types = {f.name: f.dataType for f in existing.schema.fields}
-        conflicts = [
-            (f.name, str(existing_types[f.name]), str(f.dataType))
-            for f in staged.schema.fields
-            if f.name in existing_types and f.dataType != existing_types[f.name]
-        ]
-        if conflicts:
-            raise ValueError(
-                f"column type change(s) are never merged implicitly: {conflicts}"
             )
         if extra:
             # additive MERGE evolution (the Delta withSchemaEvolution
@@ -2270,43 +2275,15 @@ class ParquetUpsertSink:
             # straight into the commit staging, one partitioned write
             rec = self._stage(batch, batch.schema, None, "merge", epoch_id)
             return rec["touched"], rec["emptied"]
-        # Stage the batch (the reference's S4 staging write, parquet
-        # instead of JDBC): the merge must not read and overwrite the
-        # same files, and retries re-read a stable input. Staged
-        # PARTITIONED by part_date (r13, guide §6/§1.2): the batch's
-        # touched-partition set then falls out of a driver-side
-        # LISTDIR instead of a distinct+collect Spark job per commit,
-        # and the merge's staged side arrives already clustered by the
-        # partition key. The read pins the batch's own schema so the
-        # partition column comes back as its exact type regardless of
-        # the session's partition-type-inference setting.
-        self._distribute(batch).write.mode("overwrite").partitionBy(
-            "part_date"
-        ).parquet(self.staging_path)
-        staged = (
-            spark.read.option("basePath", self.staging_path)
-            .schema(batch.schema)
-            .parquet(self.staging_path)
-        )
-
+        staged, touched = self._stage_batch(spark, batch, self.staging_path)
         existing = self._read_table(spark)
-        out_cols = self._evolved_columns(existing, staged)
-        # partitions the batch touches, under EVERY historical
-        # partition spec: after evolve_partitioning a batch key's old
-        # copy still lives in its old-granularity partition, and the
-        # keep side must read (and the overwrite must claim) it too.
-        # With a single spec this is exactly the batch's part_dates.
-        if len(self._transforms()) == 1:
-            # never-evolved table (the hot path): the batch's own
-            # part_dates ARE the staging's partition dirs — zero jobs
-            touched = [
-                None
-                if d.endswith("__HIVE_DEFAULT_PARTITION__")
-                else datetime.date.fromisoformat(d.split("=", 1)[1])
-                for d in sorted(os.listdir(self.staging_path))
-                if d.startswith("part_date=")
-            ]
-        else:
+        out_cols = self._evolved_columns(existing.schema, staged.schema)
+        if len(self._transforms()) > 1:
+            # partitions the batch touches, under EVERY historical
+            # partition spec: after evolve_partitioning a batch key's
+            # old copy still lives in its old-granularity partition,
+            # and the keep side must read (and the overwrite must
+            # claim) it too
             live_dirs = {
                 d for d in os.listdir(self.path) if d.startswith("part_date=")
             }
@@ -2318,25 +2295,58 @@ class ParquetUpsertSink:
                 if self._part_dirname(v) in live_dirs
                 or self._part_dirname(v) in batch_dirs
             ]
-        existing = existing.filter(self._part_date_filter(touched))
-        # overwrite-per-key: drop existing rows for keys present in
-        # the batch, keep the rest (broadcast: a micro-batch of
-        # aggregates is small; NULL-safe so NULL-keyed rows overwrite
-        # instead of duplicating)
-        keep = self._anti_join_keys(existing, staged.select(*self.key_cols))
-        # allowMissingColumns covers both evolution directions (batch
-        # adds a column -> kept rows NULL-fill it; batch omits one ->
-        # batch rows NULL-fill); without evolution the column sets are
-        # already proven equal so it never fires
-        merged = keep.unionByName(staged, allowMissingColumns=True).select(*out_cols)
         rec = self._stage(
-            merged,
+            self._keep_union_batch(
+                existing.filter(self._part_date_filter(touched)),
+                staged,
+                out_cols,
+            ),
             self._staged_logical_schema(existing, staged, out_cols),
             [self._part_dirname(v) for v in touched],
             "merge",
             epoch_id,
         )
         return rec["touched"], rec["emptied"]
+
+    def _stage_batch(
+        self, spark: SparkSession, batch: DataFrame, root: str
+    ) -> tuple[DataFrame, list]:
+        """Stage the batch under ``root`` (the reference's S4 staging
+        write, parquet instead of JDBC): the merge must not read and
+        overwrite the same files, and retries re-read a stable input.
+        PARTITIONED by part_date (r13, guide §6/§1.2), so the batch's
+        part_date values fall out of a driver-side LISTDIR instead of
+        a distinct+collect Spark job, and the staged side arrives
+        clustered by the partition key. The read pins the batch's own
+        schema, so the partition column keeps its exact type whatever
+        the session's partition-type inference. Returns the staged
+        frame and the batch's part_date values."""
+        self._distribute(batch).write.mode("overwrite").partitionBy(
+            "part_date"
+        ).parquet(root)
+        staged = (
+            spark.read.option("basePath", root).schema(batch.schema).parquet(root)
+        )
+        vals = [
+            None
+            if d.endswith("__HIVE_DEFAULT_PARTITION__")
+            else datetime.date.fromisoformat(d.split("=", 1)[1])
+            for d in sorted(os.listdir(root))
+            if d.startswith("part_date=")
+        ]
+        return staged, vals
+
+    def _keep_union_batch(
+        self, existing: DataFrame, staged: DataFrame, out_cols: list[str]
+    ) -> DataFrame:
+        """keep ∪ batch in ``out_cols`` order: ``existing`` (the touched
+        partitions' rows — the live scan, or the OCC pin) minus the
+        batch's keys (broadcast; NULL-safe, so NULL-keyed rows
+        overwrite instead of duplicating), plus the batch.
+        ``allowMissingColumns`` NULL-fills whichever side lacks an
+        evolved column; without evolution it never fires."""
+        keep = self._anti_join_keys(existing, staged.select(*self.key_cols))
+        return keep.unionByName(staged, allowMissingColumns=True).select(*out_cols)
 
     def _stage(
         self,
@@ -2580,41 +2590,49 @@ class ParquetUpsertSink:
             path or self._schema_file(), StructType(fields).jsonValue()
         )
 
-    def _evolved_columns(self, existing: DataFrame, staged: DataFrame) -> list[str]:
-        """Validate the batch schema against the table and return the
-        merged output column order (table order, new columns appended).
-        Key and partition columns are required unconditionally; a type
-        change on a shared column always raises; any other column-set
+    def _evolved_columns(self, table, batch) -> list[str]:
+        """Validate the ``batch`` schema against the ``table`` schema
+        (both include ``part_date``) and return the merged output
+        column order (table order, new columns appended). Key and
+        partition columns are required unconditionally; a type change
+        on a shared column always raises; any other column-set
         difference raises unless ``schema_evolution`` is on."""
         required = set(self.key_cols) | {"part_date"}
-        missing_required = required - set(staged.columns)
+        missing_required = required - set(batch.names)
         if missing_required:
             raise ValueError(
                 f"batch is missing key/partition column(s) {sorted(missing_required)}"
             )
-        existing_types = {f.name: f.dataType for f in existing.schema.fields}
-        conflicts = [
-            (f.name, str(existing_types[f.name]), str(f.dataType))
-            for f in staged.schema.fields
-            if f.name in existing_types and f.dataType != existing_types[f.name]
-        ]
-        if conflicts:
-            raise ValueError(
-                f"column type change(s) are never merged implicitly: {conflicts}"
-            )
-        if set(staged.columns) == set(existing.columns):
-            return staged.columns
+        self._check_no_type_change(table, batch)
+        if set(batch.names) == set(table.names):
+            return batch.names
         if not self.schema_evolution:
-            added = sorted(set(staged.columns) - set(existing.columns))
-            dropped = sorted(set(existing.columns) - set(staged.columns))
+            added = sorted(set(batch.names) - set(table.names))
+            dropped = sorted(set(table.names) - set(batch.names))
             raise ValueError(
                 f"batch schema differs from table (added={added}, "
                 f"omitted={dropped}); construct the sink with "
                 f"schema_evolution=True to merge additively"
             )
-        return list(existing.columns) + [
-            c for c in staged.columns if c not in set(existing.columns)
+        return list(table.names) + [
+            c for c in batch.names if c not in set(table.names)
         ]
+
+    @staticmethod
+    def _check_no_type_change(table, incoming) -> None:
+        """Refuse an ``incoming`` (batch or MERGE source) schema that
+        changes a shared column's type: silent coercion corrupts at
+        scale, so no evolution mode merges one."""
+        table_types = {f.name: f.dataType for f in table.fields}
+        conflicts = [
+            (f.name, str(table_types[f.name]), str(f.dataType))
+            for f in incoming.fields
+            if f.name in table_types and f.dataType != table_types[f.name]
+        ]
+        if conflicts:
+            raise ValueError(
+                f"column type change(s) are never merged implicitly: {conflicts}"
+            )
 
     # -- CHECK constraints (the Delta ALTER TABLE ADD CONSTRAINT shape) -----
     def _constraints_file(self) -> str:
@@ -2998,8 +3016,6 @@ class ParquetUpsertSink:
         the property that makes two-predicate scans O(matching files)
         at 100 TB. Mutually exclusive with ``sort_by``; file stats are
         recorded for all z-columns."""
-        if sort_by is not None and zorder_by is not None:
-            raise ValueError("pass sort_by or zorder_by, not both")
         with self._writer_lock():
             self._compact(
                 spark,
@@ -3084,16 +3100,9 @@ class ParquetUpsertSink:
         sort_by: str | list[str] | None = None,
         zorder_by: list[str] | None = None,
     ) -> None:
-        from_recorded = False
-        if sort_by is None and zorder_by is None:
-            rec = self._clustering()
-            if rec is not None:  # recorded clustering is the default
-                cols, mode = rec
-                from_recorded = True
-                if mode == "zorder":
-                    zorder_by = cols
-                else:
-                    sort_by = cols
+        sort_by, zorder_by, from_recorded = self._clustering_args(
+            sort_by, zorder_by
+        )
         # finish (or discard, if incomplete) a previous crashed commit
         staging = self._compact_staging()
         self._finish_compact(staging)
@@ -3114,11 +3123,9 @@ class ParquetUpsertSink:
             if "__HIVE_DEFAULT_PARTITION__" in vals:
                 cond = cond | F.col("part_date").isNull()
             current = current.filter(cond)
-        data_cols = list(current.columns)
-        writer_opts: dict[str, str] = {}
-        if target_file_bytes is None:
-            n_files = F.lit(files_per_partition)
-        else:
+        file_counts = None
+        max_records = None
+        if target_file_bytes is not None:
             sizes: dict[str, int] = {}
             for d in os.listdir(self.path):
                 if not d.startswith("part_date="):
@@ -3131,21 +3138,9 @@ class ParquetUpsertSink:
                     for f in os.listdir(pdir)
                     if not f.startswith(("_", "."))
                 )
-            counts = {
+            file_counts = {
                 k: max(1, -(-b // target_file_bytes)) for k, b in sizes.items()
             }
-            # per-date parallelism from a literal (date -> count) map;
-            # NULL partition keys land under the hive default dirname
-            entries: list = []
-            for k, v in sorted(counts.items()):
-                entries.extend([F.lit(k), F.lit(v)])
-            n_files = F.element_at(
-                F.create_map(*entries),
-                F.coalesce(
-                    F.col("part_date").cast("string"),
-                    F.lit("__HIVE_DEFAULT_PARTITION__"),
-                ),
-            )
             # the SIZE guarantee: hash buckets give parallelism but two
             # (date, bucket) groups can collide into one task, so the
             # writer additionally splits any oversized task output at
@@ -3153,23 +3148,11 @@ class ParquetUpsertSink:
             # encoded row size (a count() over column stats, no scan of
             # values). Belt and braces: buckets parallelize, the cap
             # bounds every file.
-            total_bytes = sum(sizes.values())
             total_rows = current.count() or 1
-            avg_row = max(1, total_bytes // total_rows)
-            writer_opts["maxRecordsPerFile"] = str(
-                max(1, target_file_bytes // avg_row)
-            )
-        if zorder_by is not None:
-            # true multi-dimensional Z-ORDER: range-partition + sort on
-            # the bit-interleaved rank key so every z-column's per-file
-            # range narrows (~domain / 2^(bits_that_dim_got)), then
-            # record per-file min/max for ALL z-columns — read_pruned
-            # and read_point prune on any dimension independently
-            sort_cols = list(zorder_by)
-            scope = only_partitions or [
-                d for d in os.listdir(self.path) if d.startswith("part_date=")
-            ]
-            n_ranges = max(1, files_per_partition * max(1, len(scope)))
+            avg_row = max(1, sum(sizes.values()) // total_rows)
+            max_records = max(1, target_file_bytes // avg_row)
+        bounds = None
+        if zorder_by is not None and from_recorded:
             # recorded-clustering maintenance must stay cheap under
             # the writer lock (ADVICE r10): a SCOPED auto-compaction
             # reuses the quantile boundaries the last FULL rewrite
@@ -3177,21 +3160,76 @@ class ParquetUpsertSink:
             # steer file layout — staleness costs pruning tightness,
             # never correctness); a full rewrite recomputes and
             # refreshes the cache.
-            bounds = (
-                self._clustering_bounds(sort_cols)
-                if from_recorded and only_partitions is not None
-                else None
+            if only_partitions is not None:
+                bounds = self._clustering_bounds(zorder_by)
+            else:
+                bounds = self._zorder_bounds(current, zorder_by)
+                self._save_clustering_bounds(zorder_by, bounds)
+        scope = only_partitions or [
+            d for d in os.listdir(self.path) if d.startswith("part_date=")
+        ]
+        self._rewrite(
+            current,
+            staging,
+            self._stored_schema(),
+            files_per_partition,
+            len(scope),
+            sort_by,
+            zorder_by,
+            bounds=bounds,
+            file_counts=file_counts,
+            max_records=max_records,
+        )
+        self._finish_compact(staging)
+
+    def _clustering_args(self, sort_by, zorder_by):
+        """``(sort_by, zorder_by, from_recorded)`` of one rewrite: the
+        arguments (never both), else the recorded clustering."""
+        if sort_by is not None and zorder_by is not None:
+            raise ValueError("pass sort_by or zorder_by, not both")
+        if sort_by is None and zorder_by is None:
+            rec = self._clustering()
+            if rec is not None:
+                cols, mode = rec
+                if mode == "zorder":
+                    return None, cols, True
+                return cols, None, True
+        return sort_by, zorder_by, False
+
+    def _rewrite(
+        self,
+        df: DataFrame,
+        root: str,
+        schema,
+        files_per_partition: int,
+        n_dirs: int,
+        sort_by: str | list[str] | None,
+        zorder_by: list[str] | None,
+        bounds: list[list[float]] | None = None,
+        file_counts: dict[str, int] | None = None,
+        max_records: int | None = None,
+    ) -> None:
+        """The compaction rewrite of ``compact`` and ``optimize``:
+        shuffle ``df`` (``n_dirs`` partitions' rows) into
+        ``files_per_partition`` files per partition, write it to
+        ``root`` under ``schema``'s physical names, record the
+        clustering columns' file stats and rebuild the blooms.
+        ``bounds``: cached z-order boundaries (None: computed).
+        ``file_counts`` (partition value -> files) and ``max_records``
+        (rows per file) carry ``compact``'s ``target_file_bytes``."""
+        if zorder_by is not None:
+            # true multi-dimensional Z-ORDER: range-partition + sort on
+            # the bit-interleaved rank key so every z-column's per-file
+            # range narrows (~domain / 2^(bits_that_dim_got)), then
+            # record per-file min/max for ALL z-columns — read_pruned
+            # and read_point prune on any dimension independently
+            sort_cols = list(zorder_by)
+            n_ranges = max(1, files_per_partition * max(1, n_dirs))
+            shuffled = (
+                df.withColumn("__z", self._zorder_expr(df, sort_cols, bounds))
+                .repartitionByRange(n_ranges, "part_date", F.col("__z"))
+                .sortWithinPartitions("part_date", "__z")
             )
-            if bounds is None:
-                bounds = self._zorder_bounds(current, sort_cols)
-                if from_recorded and only_partitions is None:
-                    self._save_clustering_bounds(sort_cols, bounds)
-            zed = current.withColumn(
-                "__z", self._zorder_expr(current, sort_cols, bounds)
-            )
-            shuffled = zed.repartitionByRange(
-                n_ranges, "part_date", F.col("__z")
-            ).sortWithinPartitions("part_date", "__z")
         elif sort_by is not None:
             # OPTIMIZE .. ZORDER-style clustered rewrite: range-
             # partition on (part_date, *sort_cols) so files WITHIN a
@@ -3204,42 +3242,47 @@ class ParquetUpsertSink:
             # same crash-safe swap) and power read_pruned()'s file
             # skipping — the Iceberg manifest-stats design.
             sort_cols = [sort_by] if isinstance(sort_by, str) else list(sort_by)
-            scope = only_partitions or [
-                d for d in os.listdir(self.path) if d.startswith("part_date=")
-            ]
-            n_ranges = max(1, files_per_partition * max(1, len(scope)))
-            shuffled = current.repartitionByRange(
+            n_ranges = max(1, files_per_partition * max(1, n_dirs))
+            shuffled = df.repartitionByRange(
                 n_ranges, "part_date", *[F.col(c) for c in sort_cols]
             ).sortWithinPartitions("part_date", *sort_cols)
+        elif file_counts is None:
+            # column-only repartition: AQE may coalesce the tiny
+            # shuffle, which can only MERGE buckets (fewer, larger
+            # files) — fine under the "at most N files" contract
+            shuffled = df.withColumn(
+                "__bucket",
+                F.pmod(F.xxhash64(*self.key_cols), F.lit(files_per_partition)),
+            ).repartition("part_date", "__bucket")
         else:
-            bucketed = current.withColumn(
-                "__bucket", F.pmod(F.xxhash64(*self.key_cols), n_files)
+            # per-date parallelism from a literal (date -> count) map;
+            # NULL partition keys land under the hive default dirname
+            entries: list = []
+            for k, v in sorted(file_counts.items()):
+                entries.extend([F.lit(k), F.lit(v)])
+            n_files = F.element_at(
+                F.create_map(*entries),
+                F.coalesce(
+                    F.col("part_date").cast("string"),
+                    F.lit("__HIVE_DEFAULT_PARTITION__"),
+                ),
             )
-            if target_file_bytes is None:
-                # column-only repartition: AQE may coalesce the tiny
-                # shuffle, which can only MERGE buckets (fewer, larger
-                # files) — fine under the "at most N files" contract
-                shuffled = bucketed.repartition("part_date", "__bucket")
-            else:
-                # explicit partition count: AQE coalescing would defeat
-                # the per-date counts (it merges everything small into one
-                # task); over-provision so distinct (date,bucket) groups
-                # rarely collide, and the writer cap handles those that do
-                total = sum(counts.values())
-                shuffled = bucketed.repartition(
-                    max(4 * total, 1), "part_date", "__bucket"
-                )
-        writer = (
-            self._to_physical(shuffled.select(*data_cols), self._stored_schema())
-            .write.mode("overwrite")
-        )
-        for k, v in writer_opts.items():
-            writer = writer.option(k, v)
-        writer.partitionBy("part_date").parquet(staging)
-        if sort_by is not None or zorder_by is not None:
-            self._write_file_stats(staging, sort_cols)
-        self._refresh_staged_blooms(staging)
-        self._finish_compact(staging)
+            # explicit partition count: AQE coalescing would defeat
+            # the per-date counts (it merges everything small into one
+            # task); over-provision so distinct (date,bucket) groups
+            # rarely collide, and the writer cap handles those that do
+            shuffled = df.withColumn(
+                "__bucket", F.pmod(F.xxhash64(*self.key_cols), n_files)
+            ).repartition(
+                max(4 * sum(file_counts.values()), 1), "part_date", "__bucket"
+            )
+        writer = self._to_physical(shuffled.select(*df.columns), schema).write
+        if max_records is not None:
+            writer = writer.option("maxRecordsPerFile", str(max_records))
+        writer.mode("overwrite").partitionBy("part_date").parquet(root)
+        if zorder_by is not None or sort_by is not None:
+            self._write_file_stats(root, sort_cols)
+        self._refresh_staged_blooms(root)
 
     # -- snapshot-isolated OPTIMIZE (optimistic concurrency) ----------------
     @staticmethod
@@ -3257,6 +3300,18 @@ class ParquetUpsertSink:
             ]
         except FileNotFoundError:
             return None
+
+    def _pin(self, pin_root: str, dirs: list[str]) -> dict:
+        """Hardlink-pin the live ``dirs`` under ``pin_root`` and return
+        their conflict fingerprints (None: not live)."""
+        os.makedirs(pin_root, exist_ok=True)
+        pinned = {}
+        for d in dirs:
+            src = os.path.join(self.path, d)
+            if os.path.isdir(src):
+                self._copytree_link(src, os.path.join(pin_root, d))
+            pinned[d] = self._dir_fingerprint(src)
+        return pinned
 
     def optimize(
         self,
@@ -3296,29 +3351,18 @@ class ParquetUpsertSink:
         stats recorded for every z-column). Mutually exclusive with
         ``sort_by``.
 
+        The clustering default and the rewrite (``_rewrite``) are
+        ``compact``'s, run over the pinned copies.
+
         Content-identical like ``compact`` (no new snapshot version).
         ``on_staged`` is a test seam invoked once after the first
         rewrite completes, before its commit — the window where a
         concurrent writer would land. Returns ``{"compacted": [...],
         "skipped": [...], "attempts": N}``; ``skipped`` names dirs
         still uncompacted after the last retry."""
-        if sort_by is not None and zorder_by is not None:
-            raise ValueError("pass sort_by or zorder_by, not both")
-        if sort_by is None and zorder_by is None:
-            rec = self._clustering()
-            if rec is not None:  # recorded clustering is the default
-                cols, mode = rec
-                if mode == "zorder":
-                    zorder_by = cols
-                else:
-                    sort_by = cols
+        sort_by, zorder_by, _ = self._clustering_args(sort_by, zorder_by)
         pin_root = self.path.rstrip("/") + "__optimize_pin"
         stage = self.path.rstrip("/") + "__optimize"
-        sort_cols = (
-            [sort_by]
-            if isinstance(sort_by, str)
-            else list(sort_by or zorder_by or [])
-        )
         scope = only_partitions
         compacted: list[str] = []
         attempts = 0
@@ -3349,12 +3393,7 @@ class ParquetUpsertSink:
                     if d.startswith("part_date=")
                     and os.path.isdir(os.path.join(self.path, d))
                 )
-                pinned_fp = {}
-                os.makedirs(pin_root, exist_ok=True)
-                for d in dirs:
-                    src = os.path.join(self.path, d)
-                    self._copytree_link(src, os.path.join(pin_root, d))
-                    pinned_fp[d] = self._dir_fingerprint(src)
+                pinned_fp = self._pin(pin_root, dirs)
             if not dirs:
                 shutil.rmtree(pin_root, ignore_errors=True)
                 return {
@@ -3364,44 +3403,15 @@ class ParquetUpsertSink:
                 }
             # -- rewrite (NO lock: reads only the immutable pin) ------
             schema = self._stored_schema()
-            reader = spark.read.option("basePath", pin_root)
-            if schema is not None:
-                reader = reader.schema(self._physical_schema(schema))
-            spark.catalog.refreshByPath(pin_root)
-            df = reader.parquet(*[os.path.join(pin_root, d) for d in dirs])
-            df = self._apply_dv(
-                spark,
-                df,
-                self._dv_map([os.path.join(pin_root, d) for d in dirs]),
+            self._rewrite(
+                self._read_pinned(spark, pin_root, dirs, schema),
+                stage,
+                schema,
+                files_per_partition,
+                len(dirs),
+                sort_by,
+                zorder_by,
             )
-            df = self._to_logical(df, schema)
-            data_cols = list(df.columns)
-            if zorder_by is not None:
-                n_ranges = max(1, files_per_partition * len(dirs))
-                shuffled = df.withColumn(
-                    "__z", self._zorder_expr(df, sort_cols)
-                ).repartitionByRange(
-                    n_ranges, "part_date", F.col("__z")
-                ).sortWithinPartitions("part_date", "__z")
-            elif sort_cols:
-                n_ranges = max(1, files_per_partition * len(dirs))
-                shuffled = df.repartitionByRange(
-                    n_ranges, "part_date", *[F.col(c) for c in sort_cols]
-                ).sortWithinPartitions("part_date", *sort_cols)
-            else:
-                shuffled = df.withColumn(
-                    "__bucket",
-                    F.pmod(F.xxhash64(*self.key_cols), F.lit(files_per_partition)),
-                ).repartition("part_date", "__bucket")
-            (
-                self._to_physical(shuffled.select(*data_cols), schema)
-                .write.mode("overwrite")
-                .partitionBy("part_date")
-                .parquet(stage)
-            )
-            if sort_cols:
-                self._write_file_stats(stage, sort_cols)
-            self._refresh_staged_blooms(stage)
             if on_staged is not None and not fired:
                 fired = True
                 on_staged()
@@ -3682,39 +3692,30 @@ class ParquetUpsertSink:
         (``_OCC_KEY``) and recovery records the ledger entry before
         the staging drops, so no crash window can re-apply a payload.
 
-        Scope guards (these shapes take the serialized ``write_batch``
-        path): first write to a new table, evolved partition specs,
-        active column mapping, and schema evolution — each raises
-        ValueError naming the fallback. Returns ``{"version": v,
-        "attempts": n, "touched": [...]}``."""
-        import uuid as _uuid
-
+        Validation, batch staging and the keep ∪ batch merge are
+        ``write_batch``'s (``_evolved_columns``, ``_stage_batch``,
+        ``_keep_union_batch``), reading the pin in place of the live
+        table. Scope guards (these shapes take the serialized
+        ``write_batch`` path): first write to a new table, evolved
+        partition specs, active column mapping, and schema evolution
+        (a column-set difference) — each raises ValueError naming the
+        fallback. Returns ``{"version": v, "attempts": n, "touched":
+        [...]}``."""
         spark = batch_df.sparkSession
-        if not self._table_exists():
-            raise ValueError(
-                "write_batch_occ needs an existing table; create it "
-                "with write_batch first"
-            )
-        if len(self._transforms()) != 1:
-            raise ValueError(
-                "write_batch_occ does not span partition-spec "
-                "evolution; use write_batch"
-            )
-        if self._colmap_active():
-            raise ValueError(
-                "write_batch_occ does not support column-mapped "
-                "tables; use write_batch"
-            )
+        self._check_occ_scope("write_batch_occ", "write_batch")
         schema = self._stored_schema()
-        stored_cols = {f.name for f in schema.fields} if schema else set()
-        batch_cols = set(batch_df.columns) | {"part_date"}
-        if schema is not None and stored_cols != batch_cols:
+        table = schema or self._read_table(spark).schema
+        batch = batch_df.withColumn(
+            "part_date", self._derive_part_date(self._transforms()[-1])
+        )
+        if set(batch.columns) != set(table.names):
             raise ValueError(
                 f"write_batch_occ is evolution-free: batch columns "
-                f"{sorted(batch_cols)} != table columns "
-                f"{sorted(stored_cols)}; use write_batch("
+                f"{sorted(batch.columns)} != table columns "
+                f"{sorted(table.names)}; use write_batch("
                 f"schema_evolution=True)"
             )
+        self._evolved_columns(table, batch.schema)  # the type check
         replayed = self._occ_replay_check(epoch_id, writer_id)
         if replayed is not None:
             return {"version": replayed, "attempts": 0, "touched": []}
@@ -3723,50 +3724,26 @@ class ParquetUpsertSink:
             # snapshot commit under the lock, same as write_batch
             with self._writer_lock_blocking():
                 self._finish_pending_epoch(spark)
-                committed = self.snapshots()
-                version = (
-                    max(committed) + 1
-                    if committed and max(committed) >= epoch_id
-                    else epoch_id
-                )
+                version = self._next_version(epoch_id)
                 self._snapshot(spark, version, touched=[])
                 self._occ_record_applied(epoch_id, version, writer_id)
             return {"version": version, "attempts": 1, "touched": []}
-        occ_root = (
-            f"{self.path.rstrip('/')}__occ_{os.getpid()}_{_uuid.uuid4().hex}"
+        occ_root = self._occ_root()
+        staged, vals = self._stage_batch(
+            spark, batch, os.path.join(occ_root, "batch")
         )
-        batch_dir = os.path.join(occ_root, "batch")
-        specs = self._transforms()
-        batch = batch_df.withColumn(
-            "part_date", self._derive_part_date(specs[-1])
-        )
-        batch.write.mode("overwrite").parquet(batch_dir)
-        staged = spark.read.parquet(batch_dir)
-        touched = sorted(
-            self._part_dirname(r[0])
-            for r in staged.select("part_date").distinct().collect()
-        )
-        out_cols = [f.name for f in schema.fields] if schema else None
+        touched = [self._part_dirname(v) for v in vals]
 
         def stage_keep_union_batch(pin_root: str) -> DataFrame:
             # audit per ATTEMPT against the constraints as pinned (a
             # constraint added mid-flight flips the metadata
             # fingerprint and forces this re-audit via retry)
             self._audit_batch(staged)
-            pin_dirs = [
-                os.path.join(pin_root, d)
-                for d in touched
-                if os.path.isdir(os.path.join(pin_root, d))
-            ]
-            if pin_dirs:
-                existing = self._read_pinned(spark, pin_root, pin_dirs, schema)
-                keep = self._anti_join_keys(
-                    existing, staged.select(*self.key_cols)
-                )
-                out = keep.unionByName(staged)
-            else:
-                out = staged
-            return out.select(*out_cols) if out_cols is not None else out
+            return self._keep_union_batch(
+                self._read_pinned(spark, pin_root, touched, table),
+                staged,
+                table.names,
+            )
 
         return self._occ_commit(
             spark,
@@ -3780,17 +3757,62 @@ class ParquetUpsertSink:
             writer_id=writer_id,
         )
 
+    def _check_occ_scope(self, entry: str, fallback: str) -> None:
+        """The OCC writers' scope: an existing table with one
+        partition spec and no column mapping (else ``fallback``)."""
+        if not self._table_exists():
+            raise ValueError(
+                f"{entry} needs an existing table; use {fallback}"
+            )
+        if len(self._transforms()) != 1:
+            raise ValueError(
+                f"{entry} does not span partition-spec evolution; "
+                f"use {fallback}"
+            )
+        if self._colmap_active():
+            raise ValueError(
+                f"{entry} does not support column-mapped tables; "
+                f"use {fallback}"
+            )
+
+    def _occ_root(self) -> str:
+        """A fresh private OCC work dir, named for ``_occ_gc``."""
+        import uuid
+
+        return f"{self.path.rstrip('/')}__occ_{os.getpid()}_{uuid.uuid4().hex}"
+
     def _read_pinned(
-        self, spark: SparkSession, pin_root: str, pin_dirs: list[str], schema
+        self, spark: SparkSession, pin_root: str, dirs: list[str], schema
     ) -> DataFrame:
-        """The pinned partitions' current LOGICAL rows (deletion
-        vectors folded) — the stable read side of an OCC merge."""
+        """The pinned copies of ``dirs`` as LOGICAL rows (deletion
+        vectors folded) — the stable read side of an OCC commit and of
+        OPTIMIZE. A dir not live at pin time has no copy and reads
+        empty."""
+        paths = [
+            os.path.join(pin_root, d)
+            for d in dirs
+            if os.path.isdir(os.path.join(pin_root, d))
+        ]
+        if not paths:
+            return spark.createDataFrame([], schema)
         reader = spark.read.option("basePath", pin_root)
         if schema is not None:
             reader = reader.schema(self._physical_schema(schema))
-        df = reader.parquet(*pin_dirs)
-        df = self._apply_dv(spark, df, self._dv_map(pin_dirs))
+        # a retry re-pins under the same root: the session's listing of
+        # the previous pin is stale
+        spark.catalog.refreshByPath(pin_root)
+        df = reader.parquet(*paths)
+        df = self._apply_dv(spark, df, self._dv_map(paths))
         return self._to_logical(df, schema)
+
+    def _next_version(self, epoch_id: int) -> int:
+        """An OCC commit's snapshot version: next after the newest
+        committed one, or ``epoch_id`` when that is newer — monotone
+        in COMMIT order even when callers' epochs race."""
+        committed = self.snapshots()
+        if committed and max(committed) >= epoch_id:
+            return max(committed) + 1
+        return epoch_id
 
     def _occ_commit(
         self,
@@ -3809,10 +3831,11 @@ class ParquetUpsertSink:
         """The generic OCC protocol (shared by ``write_batch_occ`` and
         ``merge_into_occ``): pin → ``stage_fn(pin_root)`` builds the
         touched partitions' complete post-commit rows from the
-        immutable pin, staged by ``_stage`` into a private root →
-        conflict-checked rename onto the canonical staging, installed
-        by the same ``_finish_pending_epoch`` as every serialized
-        commit.
+        immutable pin with the serialized twin's code, staged by
+        ``_stage`` into a private root → conflict-checked rename onto
+        the canonical staging at the ``_next_version`` version,
+        installed by the same ``_finish_pending_epoch`` as every
+        serialized commit. Only this lock handling is OCC's own.
         ``occ_root`` is the caller's private work dir (it may already
         hold the staged source); removed here on every exit path.
 
@@ -3872,15 +3895,7 @@ class ParquetUpsertSink:
                         )
                     shutil.rmtree(pin_root, ignore_errors=True)
                     shutil.rmtree(merged, ignore_errors=True)
-                    os.makedirs(pin_root, exist_ok=True)
-                    pinned_fp = {}
-                    for d in touched:
-                        src = os.path.join(self.path, d)
-                        if os.path.isdir(src):
-                            self._copytree_link(
-                                src, os.path.join(pin_root, d)
-                            )
-                        pinned_fp[d] = self._dir_fingerprint(src)
+                    pinned_fp = self._pin(pin_root, touched)
                     meta_fp = self._meta_fingerprint()
                 # -- stage (NO lock: reads only the immutable pin) ----
                 out = stage_fn(pin_root)
@@ -3907,12 +3922,7 @@ class ParquetUpsertSink:
                                 f"{attempts} times on {touched}"
                             )
                         continue
-                    committed = self.snapshots()
-                    version = (
-                        max(committed) + 1
-                        if committed and max(committed) >= epoch_id
-                        else epoch_id
-                    )
+                    version = self._next_version(epoch_id)
                     # the idempotence KEY rides in the staging: a crash
                     # anywhere after the rename replays through
                     # _finish_pending_epoch, which records the ledger
@@ -3989,70 +3999,39 @@ class ParquetUpsertSink:
         serialized ``merge_into``. ``epoch_id`` is the idempotence key
         (a replayed committed key is a version-guard no-op returning
         the original version — conditional payloads are not naturally
-        idempotent). Returns ``{"version", "attempts", "touched"}``."""
-        import uuid as _uuid
-
+        idempotent). The WHEN/SET and source checks and the clause
+        engine are ``merge_into``'s, applied to the pin in place of
+        the live table. Returns ``{"version", "attempts",
+        "touched"}``."""
         spark = source_df.sparkSession
-        if when_matched_update:
-            bad = set(when_matched_update) & (
-                set(self.key_cols) | {self.partition_source, "part_date"}
-            )
-            if bad:
-                raise ValueError(
-                    f"cannot SET key/partition column(s) {sorted(bad)} — "
-                    f"re-keying is a delete + insert"
-                )
-        if (
-            when_matched_update is None
-            and when_matched_delete_condition is None
-            and not when_not_matched_insert
-        ):
-            raise ValueError("merge_into_occ needs at least one WHEN clause")
+        self._check_merge_clauses(
+            when_matched_update,
+            when_matched_delete_condition,
+            when_not_matched_insert,
+            None,
+        )
         if self.partition_source not in self.key_cols:
             raise ValueError(
                 "merge_into_occ needs key→partition locality "
                 "(partition_source in key_cols); use merge_into"
             )
-        if not self._table_exists():
-            raise ValueError(
-                "merge_into_occ needs an existing table; use merge_into"
-            )
-        if len(self._transforms()) != 1:
-            raise ValueError(
-                "merge_into_occ does not span partition-spec evolution; "
-                "use merge_into"
-            )
-        if self._colmap_active():
-            raise ValueError(
-                "merge_into_occ does not support column-mapped tables; "
-                "use merge_into"
-            )
+        self._check_occ_scope("merge_into_occ", "merge_into")
         replayed = self._occ_replay_check(epoch_id, writer_id)
         if replayed is not None:
             return {"version": replayed, "attempts": 0, "touched": []}
         schema = self._stored_schema()
-        data_cols = [
-            f.name for f in (schema.fields if schema else []) if f.name != "part_date"
-        ]
-        missing = (
-            set(data_cols)
-            if when_not_matched_insert
-            else set(self.key_cols)
-        ) - set(source_df.columns)
-        if missing:
-            raise ValueError(
-                f"merge source is missing column(s) {sorted(missing)}"
-            )
-        extra = [c for c in source_df.columns if c not in set(data_cols)]
+        table = schema or self._read_table(spark).schema
+        extra = self._merge_source_extra(
+            table, source_df.schema, when_not_matched_insert
+        )
         if extra:
             raise ValueError(
                 f"merge_into_occ is evolution-free: source column(s) "
                 f"{sorted(extra)} not in the table; use merge_into with "
                 f"schema_evolution=True"
             )
-        occ_root = (
-            f"{self.path.rstrip('/')}__occ_{os.getpid()}_{_uuid.uuid4().hex}"
-        )
+        data_cols = [c for c in table.names if c != "part_date"]
+        occ_root = self._occ_root()
         batch_dir = os.path.join(occ_root, "batch")
         source_df.write.mode("overwrite").parquet(batch_dir)
         staged = spark.read.parquet(batch_dir)
@@ -4075,24 +4054,10 @@ class ParquetUpsertSink:
         touched = sorted(
             {self._part_dirname(v) for v in candidates} | ins_dirs
         )
-        out_cols = [f.name for f in schema.fields] if schema else None
 
         def stage_merge_clauses(pin_root: str) -> DataFrame:
-            pin_dirs = [
-                os.path.join(pin_root, d)
-                for d in touched
-                if os.path.isdir(os.path.join(pin_root, d))
-            ]
-            if pin_dirs:
-                scoped = self._read_pinned(spark, pin_root, pin_dirs, schema)
-            else:
-                scoped = (
-                    spark.createDataFrame([], schema)
-                    if schema is not None
-                    else staged.limit(0)
-                )
             out = self._apply_merge_clauses(
-                scoped,
+                self._read_pinned(spark, pin_root, touched, table),
                 staged,
                 data_cols,
                 spec,
@@ -4104,7 +4069,7 @@ class ParquetUpsertSink:
                 None,
             )
             self._audit_batch(out)  # constraints hold AFTER the merge
-            return out.select(*out_cols) if out_cols is not None else out
+            return out
 
         return self._occ_commit(
             spark,

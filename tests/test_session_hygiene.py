@@ -3,9 +3,10 @@
 
 Whole-registry runs (the driver, the bench, the oracle and plan sweeps)
 execute every entry in ONE SparkSession. An entry that leaves a
-persisted RDD, an active StreamingQuery, a changed conf or an untracked
-temp directory behind changes every later entry's plan and timing, and
-a temp directory nothing removes outlives the process.
+persisted RDD, an active StreamingQuery, a registered streaming
+listener, a changed conf or an untracked temp directory behind changes
+every later entry's plan and timing, and a temp directory nothing
+removes outlives the process.
 """
 
 from __future__ import annotations
@@ -38,8 +39,9 @@ def _rtrh_dirs() -> set[str]:
 
 
 def _removed_at_exit() -> set[str]:
-    """Temp dirs an exit hook removes: every replay workdir, and the
-    data dir of the embedded Postgres server (one per process)."""
+    """Temp dirs an exit hook removes: every replay workdir and
+    ``queries._scratch_dir`` tree, and the data dir of the embedded
+    Postgres server (one per process)."""
     pg = EmbeddedPostgres._instance
     return set(sj._WORKDIRS) | ({pg._base} if pg is not None else set())
 
@@ -51,8 +53,13 @@ def _persisted_rdd_ids(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
 
+def _listener_count(spark) -> int:
+    return len(spark.streams._jsqm.listListeners())
+
+
 def _assert_entry_is_hygienic(spark, sf_dir, name) -> None:
     rdds = _persisted_rdd_ids(spark)
+    listeners = _listener_count(spark)
     parts = spark.conf.get(_PARTS, None)
     dirs = _rtrh_dirs()
 
@@ -61,6 +68,7 @@ def _assert_entry_is_hygienic(spark, sf_dir, name) -> None:
     left = _persisted_rdd_ids(spark) - rdds
     assert not left, f"{name}: persisted RDDs left: {sorted(left)}"
     assert not spark.streams.active, f"{name}: streaming query left running"
+    assert _listener_count(spark) == listeners, f"{name}: listener left registered"
     assert spark.conf.get(_PARTS, None) == parts, f"{name}: {_PARTS} changed"
     untracked = _rtrh_dirs() - dirs - _removed_at_exit()
     assert not untracked, f"{name}: temp dirs nothing removes: {sorted(untracked)}"
@@ -155,6 +163,13 @@ def test_every_streaming_entry_leaves_session_clean(spark, sf_dir, name):
         # only where its dependency exists
         pytest.skip(f"{name} is not registered in this environment")
     _assert_entry_is_hygienic(spark, sf_dir, name)
+
+
+def test_scratch_dir_entry_leaves_session_clean(spark, sf_dir, monkeypatch):
+    # a fresh per-kind map, so the entry makes its scratch dir here even
+    # when an earlier test in this process made it first
+    monkeypatch.setattr(q, "_SCRATCH_DIRS", {})
+    _assert_entry_is_hygienic(spark, sf_dir, "csv_source_agg")
 
 
 def test_scoped_conf_restores_a_set_key(spark):

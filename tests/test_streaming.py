@@ -436,7 +436,7 @@ def test_fanout_log_equals_upsert_table(spark):
     assert log_rows == table_rows and len(log_rows) > 0
 
 
-def test_snapshot_time_travel_reads(spark):
+def test_snapshot_time_travel_reads(spark, tmp_path):
     """Snapshot retention invariants: read_at(last epoch) equals the
     live table; the epoch-0 snapshot differs from it (later commits
     changed state); the history view carries one epoch partition per
@@ -447,14 +447,13 @@ def test_snapshot_time_travel_reads(spark):
         run_city_metrics_replay,
     )
     import os as _os
-    import tempfile as _tempfile
     import time as _time
 
     from pyspark.sql import functions as F2
 
     from real_time_ride_hailing_data_pipeline_spark import catalog as _cat
 
-    workdir = _tempfile.mkdtemp(prefix="rtrh_tt_test_")
+    workdir = str(tmp_path)
     src_dir = _os.path.join(workdir, "src")
     _os.makedirs(src_dir)
     events = _cat.load_table(spark, SF_DIR, "events")
@@ -3281,6 +3280,34 @@ def test_merge_into_occ_guards(spark, tmp_path):
             ),
             9,
         )
+
+
+@pytest.mark.parametrize(
+    "write", ["write_batch", "write_batch_occ", "merge_into", "merge_into_occ"]
+)
+def test_write_rejects_column_type_change(spark, tmp_path, write):
+    """A batch that changes a column's type (``total`` long -> double)
+    is refused by every write entry, serialized and OCC alike, with the
+    same error, before any table file changes; the table still reads
+    its seeded rows."""
+    sink, d1, _ = _occ_seed(spark, tmp_path)
+
+    def table_files():
+        return {
+            (os.path.join(root, f), os.stat(os.path.join(root, f)).st_mtime_ns)
+            for root, _, files in os.walk(sink.path)
+            for f in files
+        }
+
+    seeded = sorted(tuple(r) for r in sink.read(spark).collect())
+    before = table_files()
+    batch = spark.createDataFrame(
+        [("a", d1, 1.5)], "k string, window_start timestamp, total double"
+    )
+    with pytest.raises(ValueError, match="column type change"):
+        getattr(sink, write)(batch, 1)
+    assert table_files() == before
+    assert sorted(tuple(r) for r in sink.read(spark).collect()) == seeded
 
 
 # -- OCC hardening (r12, ADVICE r11 items 1-4) --------------------------------
