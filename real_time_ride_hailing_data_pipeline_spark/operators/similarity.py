@@ -115,17 +115,28 @@ def brute_force_topk_batch(
       collected once (Q is small by contract — it rides a broadcast
       either way) and captured in the closure; each corpus batch
       computes an (n × Q) cosine matrix in one ``X @ Q.T`` and keeps,
-      per query, every row within ``1e-6 + 1e-9`` of its batch-local
-      ``k + screen_margin``-th best. LOSSLESS w.r.t. the REFINE'S
-      ranking, which orders by round(sim, 6) DESC then id ASC: two
-      rows up to 1e-6 apart in raw cosine can round to the SAME 6-dp
-      value and tie-break by id, so the band must cover the full
-      rounding granularity (1e-6) plus fp64-vs-exact drift (~1e-13 ≪
-      1e-9) — a bare fp-drift band would screen out a lower-id row
-      that the exact ranking tie-breaks INTO the top-k (ADVICE r12,
-      matching bucketed_cosine_pairs' 1e-6 margin). Candidate volume
-      is O((k + margin + ties-within-1e-6) × Q × batches),
-      independent of corpus size.
+      per query, every row whose cosine can reach within ``1e-6 +
+      1e-9`` of its batch-local ``k + screen_margin``-th best.
+      LOSSLESS w.r.t. the REFINE'S ranking, which orders by
+      round(sim, 6) DESC then id ASC: two rows up to 1e-6 apart in
+      raw cosine can round to the SAME 6-dp value and tie-break by
+      id, so the band must cover the full rounding granularity (1e-6)
+      plus fp drift (1e-9) — a bare fp-drift band would screen out a
+      lower-id row that the exact ranking tie-breaks INTO the top-k
+      (ADVICE r12, matching bucketed_cosine_pairs' 1e-6 margin). The
+      refine's cosine is not the fp64 one either: ``decimal_dot``
+      rounds each of its d products to 12 dp, and each running sum to
+      11 dp (Spark types DECIMAL(38,12) + DECIMAL(30,12) as
+      DECIMAL(38,11)), so x·q, ‖x‖² and ‖q‖² are each off by up to
+      ``e = d·(0.5e-11 + 0.5e-12)``, which moves the cosine by up to
+      ``(e/(‖x‖‖q‖) + 1 − s)/s``, ``s = sqrt((1 − e/‖x‖²)(1 −
+      e/‖q‖²))`` — nothing for unit-scale vectors, ~1e-3 for six
+      components near 1e-4. The screen therefore finds the cut on
+      each row's lowest possible refine cosine (fp64 − bound) and
+      keeps a row when its highest possible one (fp64 + bound)
+      reaches it. Candidate volume is O((k + margin +
+      ties-within-the-band) × Q × batches), independent of corpus
+      size.
     - **Refine (JVM, exact DECIMAL):** candidates join back to their
       vectors (corpus by id — a broadcast-able candidate set; query
       side broadcast) and only they pay the exact-decimal dot
@@ -187,33 +198,43 @@ def brute_force_topk_batch(
             vecs = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
             norms = np.sqrt((vecs * vecs).sum(axis=1))
             norms = np.where(norms == 0.0, np.inf, norms)
-            sims = (vecs @ qmat.T) / np.outer(norms, qnorms)  # n x Q
+            denom = np.outer(norms, qnorms)
+            sims = (vecs @ qmat.T) / denom  # n x Q
             # belt-and-braces: any residual non-finite sim (NaN/inf in
             # the raw vectors — out of contract) must never poison the
             # partition cut; rank it last instead
             np.nan_to_num(sims, copy=False, nan=-np.inf)
+            # per-(row, query) bound on |fp64 − refine| cosine (see
+            # docstring); a zero-norm side (inf norm) bounds to 0
+            e = vecs.shape[1] * 5.5e-12
+            with np.errstate(divide="ignore"):
+                s = np.outer(
+                    np.sqrt(np.clip(1 - e / norms**2, 0, None)),
+                    np.sqrt(np.clip(1 - e / qnorms**2, 0, None)),
+                )
+                err = (e / denom + 1 - s) / s
+            lo, hi = sims - err, sims + err
             masks = (
                 pdf[mask_col].to_numpy() if mask_arrays is not None else None
             )
             out_q, out_id = [], []
             for j in range(sims.shape[1]):
-                col = sims[:, j]
                 if masks is None:
                     top = min(m, sims.shape[0])
-                    cut = np.partition(col, -top)[-top] - eps
-                    keep = np.nonzero(col >= cut)[0]
+                    cut = np.partition(lo[:, j], -top)[-top] - eps
+                    keep = np.nonzero(hi[:, j] >= cut)[0]
                 else:
                     # this query sees only its allowed subset: cut over
                     # the masked sims, keep masked survivors — per
                     # (batch, query) exactly the unmasked screen run on
                     # the subset, so the losslessness proof carries over
                     mj = np.isin(masks, mask_arrays[j])
-                    colm = col[mj]
-                    if colm.size == 0:
+                    lom = lo[mj, j]
+                    if lom.size == 0:
                         continue
-                    top = min(m, colm.size)
-                    cut = np.partition(colm, -top)[-top] - eps
-                    keep = np.nonzero(mj & (col >= cut))[0]
+                    top = min(m, lom.size)
+                    cut = np.partition(lom, -top)[-top] - eps
+                    keep = np.nonzero(mj & (hi[:, j] >= cut))[0]
                 out_q.extend([qids[j]] * len(keep))
                 out_id.extend(ids[keep].tolist())
             yield pd.DataFrame({query_id_col: out_q, id_col: out_id})

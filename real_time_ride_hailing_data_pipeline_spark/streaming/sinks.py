@@ -30,8 +30,9 @@ Scale notes:
   key -> union the batch -> write back. The anti-join is
   broadcast-able (a micro-batch of aggregates is small) so the merge
   never shuffles the table side.
-- Three-step write (stage batch -> materialize merged content ->
-  commit): mirrors the reference's staging table, keeps
+- Three-step write (persist batch -> materialize merged content ->
+  commit): the persisted micro-batch stands in for the reference's
+  staging table, so its plan runs once; the merged staging keeps
   read-and-overwrite-same-path safe, and makes a crash mid-commit
   recoverable — the merged copy (pre-batch keys included) is durable
   before the first target file is replaced, and the retry re-commits
@@ -40,7 +41,7 @@ Scale notes:
 
 from __future__ import annotations
 
-import datetime
+import contextlib
 import json
 import os
 import shutil
@@ -564,7 +565,6 @@ class ParquetUpsertSink:
         from under it. This is the local/HDFS shape; on an object
         store the same contract is a conditional-put on the lock
         object."""
-        import contextlib
         import threading
         import uuid
 
@@ -660,12 +660,15 @@ class ParquetUpsertSink:
         """MERGE one micro-batch: MATERIALIZE the merged touched-
         partition content (keep ∪ batch) to a staging directory, then
         commit by installing the touched partitions from that durable
-        copy. Idempotent: applying the same batch N times = applying it
-        once. A first write (no live partition) has an empty keep side,
-        so the batch itself is staged — one partitioned write, like any
-        commit — and the table directory is never truncated: the
-        partition specs, constraints, clustering, bloom declarations
-        and OCC ledger recorded on an empty or drained table stay.
+        copy. The micro-batch's plan runs ONCE: the batch is persisted
+        for the commit and every later step reads the cached rows (see
+        ``_persisted``). Idempotent: applying the same batch N times =
+        applying it once. A first write (no live partition) has an
+        empty keep side, so the batch itself is staged — one
+        partitioned write, like any commit — and the table directory is
+        never truncated: the partition specs, constraints, clustering,
+        bloom declarations and OCC ledger recorded on an empty or
+        drained table stay.
 
         Crash safety: the target is not touched until the full merged
         content (pre-batch keys included) is durable under
@@ -697,26 +700,31 @@ class ParquetUpsertSink:
         return self._finish_pending_epoch(spark)
 
     def _merge(self, batch_df: DataFrame, epoch_id: int) -> None:
+        """One ``write_batch`` attempt: recover (a replayed epoch
+        returns before anything is persisted), audit and stage the
+        persisted batch, install."""
         spark = batch_df.sparkSession
         if self._recover(spark) == epoch_id:
             return
-        if batch_df.isEmpty():
-            # update-mode can emit empty micro-batches (e.g. the final
-            # commit batch of an availableNow replay); a partitioned
-            # write of zero rows produces an unreadable empty dir, and
-            # there is nothing to merge. The table is untouched, but a
-            # committed epoch still gets its snapshot (identical to the
-            # previous one — with the manifest layout that is ONE tiny
-            # JSON write, zero data copies) so read_history's
-            # one-commit-per-epoch contract holds for empty commits too.
-            if self._table_exists():
-                self._snapshot(spark, epoch_id, touched=[])
-            return
-        self._audit_batch(batch_df)  # refuse BEFORE any table mutation
         batch = batch_df.withColumn(
             "part_date", self._derive_part_date(self._transforms()[-1])
         )
-        touched, _ = self._stage_merge(spark, batch, epoch_id)
+        with self._persisted(batch) as (batch, vals):
+            if not vals:
+                # update-mode can emit empty micro-batches (e.g. the
+                # final commit batch of an availableNow replay); a
+                # partitioned write of zero rows produces an unreadable
+                # empty dir, and there is nothing to merge. The table
+                # is untouched, but a committed epoch still gets its
+                # snapshot (identical to the previous one — ONE tiny
+                # JSON write, zero data copies) so read_history's
+                # one-commit-per-epoch contract holds for empty
+                # commits too.
+                if self._table_exists():
+                    self._snapshot(spark, epoch_id, touched=[])
+                return
+            self._audit_batch(batch)  # refuse BEFORE any table mutation
+            touched, _ = self._stage_merge(spark, batch, vals, epoch_id)
         self._finish_pending_epoch(spark)
         self._auto_compact(spark, touched)
 
@@ -1093,13 +1101,10 @@ class ParquetUpsertSink:
             if ins_rows.isEmpty():
                 return
             self._audit_batch(ins_rows)
-            self._stage_merge(
-                spark,
-                ins_rows.withColumn(
-                    "part_date", self._derive_part_date(specs[-1])
-                ),
-                epoch_id,
+            ins_rows = ins_rows.withColumn(
+                "part_date", self._derive_part_date(specs[-1])
             )
+            self._stage(ins_rows, ins_rows.schema, None, "merge", epoch_id)
             self._finish_pending_epoch(spark)
             return
 
@@ -1132,12 +1137,12 @@ class ParquetUpsertSink:
         live = {
             d for d in os.listdir(self.path) if d.startswith("part_date=")
         }
-        ins_dirs: set[str] = set()
-        if ins:
-            _, current_vals = self._touched_candidates(staged)
-            ins_dirs = {self._part_dirname(v) for v in current_vals}
+        if ins or locality:  # one candidates job serves both
+            candidates, current_vals = self._touched_candidates(staged)
+        ins_dirs = (
+            {self._part_dirname(v) for v in current_vals} if ins else set()
+        )
         if locality:
-            candidates, _ = self._touched_candidates(staged)
             touched_vals = [
                 v for v in candidates if self._part_dirname(v) in live
             ]
@@ -2262,22 +2267,23 @@ class ParquetUpsertSink:
         return upserts.unionByName(deletes)
 
     def _stage_merge(
-        self, spark: SparkSession, batch: DataFrame, epoch_id: int
+        self, spark: SparkSession, batch: DataFrame, vals: list, epoch_id: int
     ) -> tuple[list[str], list[str]]:
         """Compute keep ∪ batch for the touched partitions and stage it
         as ``epoch_id``'s certified commit (see ``_stage``) WITHOUT
-        touching the target. Returns (touched dir names, emptied dir
-        names) — the snapshot delta and the dirs a post-evolution
-        overwrite drained."""
+        touching the target — ONE partitioned write. ``batch`` and
+        ``vals`` come from ``_persisted``: the batch side reads the
+        cached rows, never the batch's plan. Returns (touched dir
+        names, emptied dir names) — the snapshot delta and the dirs a
+        post-evolution overwrite drained."""
         if not self._table_exists():
             # no live partition: the keep side is empty, so the batch
-            # under its own schema IS the merged content — staged
-            # straight into the commit staging, one partitioned write
+            # under its own schema IS the merged content
             rec = self._stage(batch, batch.schema, None, "merge", epoch_id)
             return rec["touched"], rec["emptied"]
-        staged, touched = self._stage_batch(spark, batch, self.staging_path)
         existing = self._read_table(spark)
-        out_cols = self._evolved_columns(existing.schema, staged.schema)
+        out_cols = self._evolved_columns(existing.schema, batch.schema)
+        touched = vals
         if len(self._transforms()) > 1:
             # partitions the batch touches, under EVERY historical
             # partition spec: after evolve_partitioning a batch key's
@@ -2287,8 +2293,8 @@ class ParquetUpsertSink:
             live_dirs = {
                 d for d in os.listdir(self.path) if d.startswith("part_date=")
             }
-            candidates, current_vals = self._touched_candidates(staged)
-            batch_dirs = {self._part_dirname(v) for v in current_vals}
+            batch_dirs = {self._part_dirname(v) for v in vals}
+            candidates, _ = self._touched_candidates(batch)
             touched = [
                 v
                 for v in candidates
@@ -2298,43 +2304,34 @@ class ParquetUpsertSink:
         rec = self._stage(
             self._keep_union_batch(
                 existing.filter(self._part_date_filter(touched)),
-                staged,
+                batch,
                 out_cols,
             ),
-            self._staged_logical_schema(existing, staged, out_cols),
+            self._staged_logical_schema(existing, batch, out_cols),
             [self._part_dirname(v) for v in touched],
             "merge",
             epoch_id,
         )
         return rec["touched"], rec["emptied"]
 
-    def _stage_batch(
-        self, spark: SparkSession, batch: DataFrame, root: str
-    ) -> tuple[DataFrame, list]:
-        """Stage the batch under ``root`` (the reference's S4 staging
-        write, parquet instead of JDBC): the merge must not read and
-        overwrite the same files, and retries re-read a stable input.
-        PARTITIONED by part_date (r13, guide §6/§1.2), so the batch's
-        part_date values fall out of a driver-side LISTDIR instead of
-        a distinct+collect Spark job, and the staged side arrives
-        clustered by the partition key. The read pins the batch's own
-        schema, so the partition column keeps its exact type whatever
-        the session's partition-type inference. Returns the staged
-        frame and the batch's part_date values."""
-        self._distribute(batch).write.mode("overwrite").partitionBy(
-            "part_date"
-        ).parquet(root)
-        staged = (
-            spark.read.option("basePath", root).schema(batch.schema).parquet(root)
-        )
-        vals = [
-            None
-            if d.endswith("__HIVE_DEFAULT_PARTITION__")
-            else datetime.date.fromisoformat(d.split("=", 1)[1])
-            for d in sorted(os.listdir(root))
-            if d.startswith("part_date=")
-        ]
-        return staged, vals
+    @staticmethod
+    @contextlib.contextmanager
+    def _persisted(batch: DataFrame):
+        """``batch`` (with ``part_date``) persisted for one commit,
+        with its sorted part_date values. A foreachBatch frame re-runs
+        its incremental plan (source scan, aggregation, state store)
+        on every action, so ONE ``distinct().collect()`` over the
+        persisted frame materializes it, tells an empty batch (no
+        values) apart and yields the touched values; the audit, the
+        keep ∪ batch stage and every OCC retry then read the cached
+        rows. Released on every exit: an empty batch, a refused one,
+        a crash or a retry."""
+        batch = batch.persist()
+        try:
+            vals = [r[0] for r in batch.select("part_date").distinct().collect()]
+            yield batch, sorted(vals, key=lambda v: (v is None, str(v)))
+        finally:
+            batch.unpersist()
 
     def _keep_union_batch(
         self, existing: DataFrame, staged: DataFrame, out_cols: list[str]
@@ -3469,7 +3466,6 @@ class ParquetUpsertSink:
         a live holder means 'brief metadata moment in progress', so
         the right move is a short jittered wait, not the single-writer
         refusal. Same lock file, same crash recovery."""
-        import contextlib
         import random
         import time
 
@@ -3692,10 +3688,12 @@ class ParquetUpsertSink:
         (``_OCC_KEY``) and recovery records the ledger entry before
         the staging drops, so no crash window can re-apply a payload.
 
-        Validation, batch staging and the keep ∪ batch merge are
-        ``write_batch``'s (``_evolved_columns``, ``_stage_batch``,
+        Validation, the persisted batch and the keep ∪ batch merge are
+        ``write_batch``'s (``_evolved_columns``, ``_persisted``,
         ``_keep_union_batch``), reading the pin in place of the live
-        table. Scope guards (these shapes take the serialized
+        table: the batch's plan runs once, and every attempt reads the
+        cached rows, released when ``_occ_commit`` returns or raises.
+        Scope guards (these shapes take the serialized
         ``write_batch`` path): first write to a new table, evolved
         partition specs, active column mapping, and schema evolution
         (a column-set difference) — each raises ValueError naming the
@@ -3719,43 +3717,41 @@ class ParquetUpsertSink:
         replayed = self._occ_replay_check(epoch_id, writer_id)
         if replayed is not None:
             return {"version": replayed, "attempts": 0, "touched": []}
-        if batch_df.isEmpty():
-            # empty micro-batch: nothing to pin or merge — one empty
-            # snapshot commit under the lock, same as write_batch
-            with self._writer_lock_blocking():
-                self._finish_pending_epoch(spark)
-                version = self._next_version(epoch_id)
-                self._snapshot(spark, version, touched=[])
-                self._occ_record_applied(epoch_id, version, writer_id)
-            return {"version": version, "attempts": 1, "touched": []}
-        occ_root = self._occ_root()
-        staged, vals = self._stage_batch(
-            spark, batch, os.path.join(occ_root, "batch")
-        )
-        touched = [self._part_dirname(v) for v in vals]
+        with self._persisted(batch) as (batch, vals):
+            if not vals:
+                # empty micro-batch: nothing to pin or merge — one
+                # empty snapshot commit under the lock, same as
+                # write_batch
+                with self._writer_lock_blocking():
+                    self._finish_pending_epoch(spark)
+                    version = self._next_version(epoch_id)
+                    self._snapshot(spark, version, touched=[])
+                    self._occ_record_applied(epoch_id, version, writer_id)
+                return {"version": version, "attempts": 1, "touched": []}
+            touched = [self._part_dirname(v) for v in vals]
 
-        def stage_keep_union_batch(pin_root: str) -> DataFrame:
-            # audit per ATTEMPT against the constraints as pinned (a
-            # constraint added mid-flight flips the metadata
-            # fingerprint and forces this re-audit via retry)
-            self._audit_batch(staged)
-            return self._keep_union_batch(
-                self._read_pinned(spark, pin_root, touched, table),
-                staged,
-                table.names,
+            def stage_keep_union_batch(pin_root: str) -> DataFrame:
+                # audit per ATTEMPT against the constraints as pinned
+                # (a constraint added mid-flight flips the metadata
+                # fingerprint and forces this re-audit via retry)
+                self._audit_batch(batch)
+                return self._keep_union_batch(
+                    self._read_pinned(spark, pin_root, touched, table),
+                    batch,
+                    table.names,
+                )
+
+            return self._occ_commit(
+                spark,
+                epoch_id,
+                touched,
+                stage_keep_union_batch,
+                occ_root=self._occ_root(),
+                entry_schema=schema,
+                max_retries=max_retries,
+                on_staged=on_staged,
+                writer_id=writer_id,
             )
-
-        return self._occ_commit(
-            spark,
-            epoch_id,
-            touched,
-            stage_keep_union_batch,
-            occ_root=occ_root,
-            entry_schema=schema,
-            max_retries=max_retries,
-            on_staged=on_staged,
-            writer_id=writer_id,
-        )
 
     def _check_occ_scope(self, entry: str, fallback: str) -> None:
         """The OCC writers' scope: an existing table with one

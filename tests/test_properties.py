@@ -665,6 +665,38 @@ def test_batch_topk_screen_keeps_ties_at_6dp_rounding(spark):
     assert got == [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0)], got
 
 
+def test_batch_topk_screen_covers_decimal_refine_error(spark):
+    """The refine's ``decimal_dot`` rounds every product to 12 dp and
+    every running sum to 11 dp, so for tiny components its cosine
+    drifts from the fp64 screen's by far more than the 6-dp band: here
+    id 6 (one component 4.67e-05 -> 4.7e-05) sits ~2e-6 BELOW the
+    query's own copy (id 7) in fp64, yet refines ABOVE it. A screen
+    band without the decimal error bound kept only id 7 at
+    ``screen_margin=0``."""
+    from real_time_ride_hailing_data_pipeline_spark.operators import (
+        similarity as sim,
+    )
+
+    a = [9.84e-05, 8.23e-05, 4.67e-05, 3.36e-05, -1.84e-05, -2.54e-05]
+    b = [9.84e-05, 8.23e-05, 4.7e-05, 3.36e-05, -1.84e-05, -2.54e-05]
+    df = spark.createDataFrame(
+        [(6, b), (7, a)], "vec_id long, embedding array<float>"
+    ).coalesce(1)  # one screen batch
+    qdf = spark.createDataFrame([(9, a)], "query_id long, embedding array<float>")
+    exact = {
+        r["vec_id"]: r["sim"]
+        for r in df.crossJoin(qdf.select(F.col("embedding").alias("q")))
+        .select("vec_id", sim.cosine_similarity_expr("embedding", "q").alias("sim"))
+        .collect()
+    }
+    assert exact[6] > exact[7]  # the refine's ranking
+    got = [
+        tuple(r)
+        for r in sim.brute_force_topk_batch(df, qdf, k=1, screen_margin=0).collect()
+    ]
+    assert got == [(9, 1, 6, exact[6])], got
+
+
 def test_batch_topk_supports_non_long_ids(spark):
     """ADVICE r12 (low): the screen's output schema derives from the
     INPUT id types — string doc ids and int query ids pass through

@@ -11,6 +11,7 @@ removes outlives the process.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import tempfile
 
@@ -20,6 +21,10 @@ from real_time_ride_hailing_data_pipeline_spark import queries as q
 from real_time_ride_hailing_data_pipeline_spark.session import scoped_conf
 from real_time_ride_hailing_data_pipeline_spark.sources.pgwire import EmbeddedPostgres
 from real_time_ride_hailing_data_pipeline_spark.streaming import job as sj
+from real_time_ride_hailing_data_pipeline_spark.streaming.sinks import (
+    ConstraintViolationError,
+    ParquetUpsertSink,
+)
 
 _PARTS = "spark.sql.shuffle.partitions"
 _UNSET_KEY = "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold"
@@ -170,6 +175,49 @@ def test_scratch_dir_entry_leaves_session_clean(spark, sf_dir, monkeypatch):
     # when an earlier test in this process made it first
     monkeypatch.setattr(q, "_SCRATCH_DIRS", {})
     _assert_entry_is_hygienic(spark, sf_dir, "csv_source_agg")
+
+
+def test_write_batch_releases_its_persisted_batch(spark, tmp_path, monkeypatch):
+    """``write_batch`` persists the micro-batch for one commit and
+    releases it on every exit: an empty batch, a refused batch, a crash
+    inside the stage and the replay of the epoch that crash left
+    staged."""
+    sink = ParquetUpsertSink(
+        str(tmp_path / "t"), key_cols=("k", "window_start"), retries=0
+    )
+    schema = "k string, window_start timestamp, total bigint"
+    d = dt.datetime(2024, 1, 15, 10, 0)
+    sink.write_batch(spark.createDataFrame([("a", d, 1)], schema), 0)
+    sink.add_constraint(spark, "positive", "total > 0")
+    before = _persisted_rdd_ids(spark)
+
+    def assert_released(step):
+        left = _persisted_rdd_ids(spark) - before
+        assert not left, f"{step}: persisted RDDs left: {sorted(left)}"
+
+    sink.write_batch(spark.createDataFrame([], schema), 1)
+    assert_released("empty batch")
+
+    with pytest.raises(ConstraintViolationError, match="positive"):
+        sink.write_batch(spark.createDataFrame([("b", d, -1)], schema), 2)
+    assert_released("constraint violation")
+
+    stage = sink._stage
+
+    def stage_then_crash(*args, **kwargs):
+        stage(*args, **kwargs)
+        raise RuntimeError("crash after the stage")
+
+    monkeypatch.setattr(sink, "_stage", stage_then_crash)
+    batch = spark.createDataFrame([("c", d, 3)], schema)
+    with pytest.raises(RuntimeError, match="crash after the stage"):
+        sink.write_batch(batch, 3)
+    assert_released("crash inside _stage")
+
+    monkeypatch.undo()
+    sink.write_batch(batch, 3)  # recovery installs the staged epoch
+    assert_released("replayed epoch")
+    assert sorted(r["k"] for r in sink.read(spark).collect()) == ["a", "c"]
 
 
 def test_scoped_conf_restores_a_set_key(spark):

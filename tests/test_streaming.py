@@ -318,7 +318,7 @@ def test_parquet_upsert_recovers_from_crash_mid_commit(spark, tmp_path):
     # dies before the staging cleanup.
     b2 = spark.createDataFrame([("view", T0, T0 + dt.timedelta(minutes=1), 7, 11.0)], schema)
     batch = b2.withColumn("part_date", F.to_date("window_start"))
-    sink._stage_merge(spark, batch, 1)
+    sink._stage_merge(spark, batch, [T0.date()], 1)
     part_dir = glob.glob(os.path.join(sink.path, "part_date=*"))[0]
     shutil.rmtree(part_dir)
     batch.write.mode("append").partitionBy("part_date").parquet(sink.path)
@@ -858,14 +858,14 @@ def test_schema_evolution_crash_between_schema_publish_and_overwrite(spark, tmp_
     restart's epoch replay completes the evolution from the durable
     staging."""
     sink = _evo_sink(tmp_path, schema_evolution=True)
-    _, _, v1, v2 = _evo_batches(spark)
+    _, d2, v1, v2 = _evo_batches(spark)
     sink.write_batch(v1, 0)
 
     # stage the evolving batch and publish the schema, but "crash"
     # before the overwrite touches the table (exactly _commit's
     # schema-first window)
     batch = v2.withColumn("part_date", F.to_date("window_start"))
-    sink._stage_merge(spark, batch, 1)
+    sink._stage_merge(spark, batch, [d2.date()], 1)
     merged = spark.read.parquet(sink.merged_path)
     sink._write_schema_file(merged.schema)
 
@@ -3310,6 +3310,52 @@ def test_write_rejects_column_type_change(spark, tmp_path, write):
     assert sorted(tuple(r) for r in sink.read(spark).collect()) == seeded
 
 
+def _marked_batch(spark, marks: str, d1, d2):
+    """100 rows over 4 partitions whose plan leaves one marker file in
+    ``marks`` per task invocation of its ``mapInPandas`` step — a count
+    that survives the partial passes an accumulator would lose."""
+
+    def mark(batches):
+        import uuid
+
+        open(os.path.join(marks, uuid.uuid4().hex), "w").close()
+        yield from batches
+
+    ids = spark.range(100, numPartitions=4).mapInPandas(mark, "id long")
+    return ids.select(
+        F.concat(F.lit("r"), F.col("id").cast("string")).alias("k"),
+        F.when(F.col("id") % 2 == 0, F.lit(d1)).otherwise(F.lit(d2))
+        .alias("window_start"),
+        F.col("id").alias("total"),
+    )
+
+
+@pytest.mark.parametrize("write", ["first", "merge", "occ"])
+def test_write_runs_the_batch_plan_once(spark, tmp_path, write):
+    """A commit runs the micro-batch's plan exactly once (4 task
+    invocations for 4 partitions): the empty-batch check, the audit
+    and the keep ∪ batch stage read the persisted batch — for a first
+    write, a merge into a live table and an OCC merge alike."""
+    if write == "first":
+        sink = ParquetUpsertSink(str(tmp_path / "t"), key_cols=("k", "window_start"))
+        d1, d2 = dt.datetime(2024, 1, 15, 10, 0), dt.datetime(2024, 1, 16, 11, 0)
+        seeded = 0
+    else:
+        sink, d1, d2 = _occ_seed(spark, tmp_path)
+        seeded = 4
+    sink.add_constraint(spark, "non_negative", "total >= 0")
+    marks = tmp_path / "marks"
+    marks.mkdir()
+    batch = _marked_batch(spark, str(marks), d1, d2)
+    if write == "occ":
+        sink.write_batch_occ(batch, 1)
+    else:
+        sink.write_batch(batch, 1)
+    assert len(os.listdir(marks)) == 4
+    assert sink.read(spark).count() == seeded + 100
+    assert sink.read(spark).filter("k = 'r7'").first()["window_start"] == d2
+
+
 # -- OCC hardening (r12, ADVICE r11 items 1-4) --------------------------------
 
 
@@ -3805,6 +3851,28 @@ def test_merge_into_scope_and_emptied_partition(spark, tmp_path):
         for r in sink.read_changes_typed(spark, 0, 1).collect()
     )
     assert typed == [("delete", "a"), ("delete", "b")]
+
+
+def test_merge_into_runs_one_candidates_job(spark, tmp_path, monkeypatch):
+    """A MERGE with inserts on, whose key carries the partition source,
+    derives its insert dirs and its candidate dirs from ONE
+    ``_touched_candidates`` job over the staged source."""
+    sink = _evo_sink(tmp_path)
+    d1, d2 = _merge_seed(spark, sink)
+    calls = []
+    candidates = sink._touched_candidates
+    monkeypatch.setattr(
+        sink, "_touched_candidates", lambda rel: calls.append(1) or candidates(rel)
+    )
+    source = spark.createDataFrame(
+        [("a", d1, 11), ("e", d2, 90)],
+        "k string, window_start timestamp, total bigint",
+    )
+    sink.merge_into(source, 1, when_matched_update={"total": "s.total"})
+    assert len(calls) == 1
+    assert sorted((r["k"], r["total"]) for r in sink.read(spark).collect()) == [
+        ("a", 11), ("b", 30), ("c", 50), ("d", 70), ("e", 90),
+    ]
 
 
 def test_merge_into_validation_and_version_guard(spark, tmp_path):
