@@ -37,12 +37,15 @@ RATIO4 = "cast(((2 * {n} * 10000 + {d}) DIV (2 * {d})) / 10000.0 as double)"
 
 def decimal_dot(a: str, b: str) -> str:
     """Spark SQL: exact decimal dot product of two array<float|double>
-    columns (rule 2 above). The merge lambda re-casts because Spark
-    widens DECIMAL(38,12)+DECIMAL(30,12) to DECIMAL(38,11)."""
+    columns (rule 2 above). The accumulator is DECIMAL(37,12) because
+    Spark types DECIMAL(37,12)+DECIMAL(30,12) as DECIMAL(38,12) and
+    the re-cast back is exact; a DECIMAL(38,12) accumulator would be
+    widened to DECIMAL(38,11) by every addition, rounding each running
+    sum to 11 dp."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> "
         f"  cast(cast(x as double) * cast(y as double) as decimal(30,12))), "
-        f"cast(0 as decimal(38,12)), (acc, v) -> cast(acc + v as decimal(38,12)))"
+        f"cast(0 as decimal(37,12)), (acc, v) -> cast(acc + v as decimal(37,12)))"
     )
 
 

@@ -125,13 +125,11 @@ def brute_force_topk_batch(
       lower-id row that the exact ranking tie-breaks INTO the top-k
       (ADVICE r12, matching bucketed_cosine_pairs' 1e-6 margin). The
       refine's cosine is not the fp64 one either: ``decimal_dot``
-      rounds each of its d products to 12 dp, and each running sum to
-      11 dp (Spark types DECIMAL(38,12) + DECIMAL(30,12) as
-      DECIMAL(38,11)), so x·q, ‖x‖² and ‖q‖² are each off by up to
-      ``e = d·(0.5e-11 + 0.5e-12)``, which moves the cosine by up to
-      ``(e/(‖x‖‖q‖) + 1 − s)/s``, ``s = sqrt((1 − e/‖x‖²)(1 −
-      e/‖q‖²))`` — nothing for unit-scale vectors, ~1e-3 for six
-      components near 1e-4. The screen therefore finds the cut on
+      rounds each of its d products to 12 dp (its sums are exact), so
+      x·q, ‖x‖² and ‖q‖² are each off by up to ``e = d·0.5e-12``,
+      which moves the cosine by up to ``(e/(‖x‖‖q‖) + 1 − s)/s``,
+      ``s = sqrt((1 − e/‖x‖²)(1 − e/‖q‖²))`` — nothing for
+      unit-scale vectors, ~1e-4 for six components near 1e-4. The screen therefore finds the cut on
       each row's lowest possible refine cosine (fp64 − bound) and
       keeps a row when its highest possible one (fp64 + bound)
       reaches it. Candidate volume is O((k + margin +
@@ -206,7 +204,7 @@ def brute_force_topk_batch(
             np.nan_to_num(sims, copy=False, nan=-np.inf)
             # per-(row, query) bound on |fp64 − refine| cosine (see
             # docstring); a zero-norm side (inf norm) bounds to 0
-            e = vecs.shape[1] * 5.5e-12
+            e = vecs.shape[1] * 0.5e-12
             with np.errstate(divide="ignore"):
                 s = np.outer(
                     np.sqrt(np.clip(1 - e / norms**2, 0, None)),

@@ -4019,11 +4019,10 @@ def streaming_restore_version_replay(spark: SparkSession, sf_dir: str) -> DataFr
     """RESTORE VERSION AS OF on the upsert sink
     (streaming/job.py:streaming_restore_version, r8): roll the live
     table back to the first streaming commit as a NEW version —
-    crash-safe through the migration staging's durable
-    _MIGRATE+_RESTORE pair (any entry point completes a crashed
-    restore; an incomplete staging is discarded), history preserved,
-    the restore manifest reusing the source version's immutable
-    copies. The oracle is the first batch's aggregation — the value
+    crash-safe through the sink's one commit staging (any entry point
+    or read completes a recorded restore; an unrecorded staging is
+    discarded), history preserved, the restored partitions hardlinked
+    from the source version's immutable copies. The oracle is the first batch's aggregation — the value
     hash proves the rollback is exact, not just that a commit
     happened. Cite: the reference can only UPSERT forward
     (/root/reference/spark_jobs/streaming_job.py:37-44); undo of a bad

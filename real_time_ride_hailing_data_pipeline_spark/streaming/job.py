@@ -628,7 +628,7 @@ def streaming_jdbc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     executed — reference streaming_job.py:26-53): the same availableNow
     replay, but foreachBatch stages each micro-batch into an embedded
     Derby database and runs the ANSI MERGE INTO over
-    java.sql.DriverManager (sinks.JdbcUpsertSink, dialect='ansi').
+    java.sql.DriverManager (sinks.JdbcUpsertSink).
     Returns the merged table read back through spark.read.jdbc; equal
     to the batch aggregation — the same batch/streaming parity oracle
     as the parquet sink, now through a real database transaction."""
@@ -970,8 +970,8 @@ def streaming_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     value hash proves the rollback is exact. The function pins the
     log contract: history is PRESERVED (the pre-restore newest still
     serves its full content; the restore appears as its own version)
-    and the restore epoch's manifest reuses the source version's
-    immutable copies (zero new log data — checked structurally)."""
+    and the restore version's copies hardlink the source version's
+    data files (zero new data bytes — checked by inode)."""
     sink = _two_batch_snapshot_replay(spark, sf_dir)
     pre = sink.snapshots()  # may include a trailing empty-commit epoch
     e0, e1 = pre[0], pre[-1]
@@ -981,10 +981,19 @@ def streaming_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(f"history not preserved: {sink.snapshots()}")
     if sink.read_at(spark, e1).count() != pre_full:
         raise RuntimeError("pre-restore newest version no longer serves")
-    if set(sink._load_manifest(new_epoch).values()) - {
-        *sink._load_manifest(e0).values()
-    }:
-        raise RuntimeError("restore manifest must reuse source copies")
+
+    def inodes(epoch):
+        return {
+            d: {
+                os.stat(os.path.join(sink._epoch_copy(e, d), f)).st_ino
+                for f in os.listdir(sink._epoch_copy(e, d))
+                if f.endswith(".parquet")
+            }
+            for d, e in sink._load_manifest(epoch).items()
+        }
+
+    if inodes(new_epoch) != inodes(e0):
+        raise RuntimeError("restore must hardlink the source version's files")
     return sink.read(spark)
 
 

@@ -36,7 +36,16 @@ Scale notes:
   read-and-overwrite-same-path safe, and makes a crash mid-commit
   recoverable — the merged copy (pre-batch keys included) is durable
   before the first target file is replaced, and the retry re-commits
-  from it (epoch-marked, removed only after success).
+  from it (removed only after success).
+- One staging, one record, one install for every table rewrite: data
+  commits (merge, delete, update, MERGE INTO, OCC) and maintenance
+  (compaction, OPTIMIZE, partition migration, RESTORE) alike stage
+  their rewritten partitions under ``<path>__merged`` and publish ONE
+  commit record last (``_COMMIT.json``: op, touched and emptied dirs,
+  schema, and optionally the snapshot epoch, the OCC key and a spec
+  history). The record is the staging's only completeness marker, and
+  ``_finish_pending_epoch`` is the only install step — for the commit
+  itself and for the recovery every entry point and read runs.
 """
 
 from __future__ import annotations
@@ -300,12 +309,16 @@ class ParquetUpsertSink:
     def migrate_partitions(self, spark: SparkSession) -> None:
         """Rewrite the WHOLE table into the current partition spec
         (the optional eager half of evolution — OPTIMIZE-style layout
-        homogenization). Crash-safe through the compaction staging:
-        the staged copy carries a ``_MIGRATE`` manifest listing its
-        partition set, and the swap removes old-spec directories NOT
-        in that list — from the persisted list, never from what
-        remains in a partially-drained staging, so a crashed swap can
-        never delete an already-installed partition on re-entry."""
+        homogenization). Stages like every commit: the rewritten table
+        under ``<path>__merged`` and a record whose touched dirs are
+        the live ∪ staged ones, whose emptied dirs are the live dirs
+        the new spec no longer uses, and which carries the collapsed
+        spec history. The install swaps the staged dirs in, removes
+        the emptied ones, publishes the single spec and re-publishes
+        the newest version over the new layout — content-identical,
+        so no version is added (a minted one would collide with the
+        stream's next epoch id). A crash before the record discards
+        the staging; after it, any entry point or read finishes it."""
         with self._writer_lock():
             # an unapplied merge/delete commit must land BEFORE the
             # re-layout: migrating first would delete the old-spec dirs
@@ -315,172 +328,17 @@ class ParquetUpsertSink:
             if not self._table_exists():
                 return
             current = self._read_table(spark)
-            data_cols = [c for c in current.columns if c != "part_date"]
-            staging = self._migrate_staging()
-            (
-                self._distribute(
-                    self._to_physical(
-                        current.select(*data_cols).withColumn(
-                            "part_date",
-                            self._derive_part_date(self._transforms()[-1]),
-                        ),
-                        self._stored_schema(),
-                    )
-                )
-                .write.mode("overwrite")
-                .partitionBy("part_date")
-                .parquet(staging)
+            spec = self._transforms()[-1]
+            self._stage(
+                current.select(
+                    *[c for c in current.columns if c != "part_date"]
+                ).withColumn("part_date", self._derive_part_date(spec)),
+                self._stored_schema(),
+                self._part_dirs(),
+                "migrate",
+                specs=[spec],
             )
-            staged_dirs = sorted(
-                d for d in os.listdir(staging) if d.startswith("part_date=")
-            )
-            # a re-snapshot marker precedes the layout mutation: the
-            # snapshot log's newest manifest still points at old-spec
-            # directories, and until it is rewritten time travel would
-            # double-count every migrated row. The marker survives a
-            # crash anywhere in between; every entry point heals it.
-            if self.snapshot_dir is not None and self.snapshots():
-                open(self._migrate_resnapshot_marker(), "w").close()
-            # the manifest is the completeness marker: a staging with
-            # _SUCCESS but no _MIGRATE crashed before this point and is
-            # DISCARDED on recovery (an ordinary compact staging would
-            # be swapped — a migration must never half-apply, since the
-            # swap also deletes old-spec directories)
-            self._atomic_json_write(
-                os.path.join(staging, "_MIGRATE"), staged_dirs
-            )
-            self._finish_migrate()
-            self._heal_migration_snapshot(spark)
-
-    def _migrate_resnapshot_marker(self) -> str:
-        return os.path.join(self.snapshot_dir, "_MIGRATE_RESNAPSHOT")
-
-    def _heal_migration_snapshot(self, spark: SparkSession) -> None:
-        """Rewrite the NEWEST snapshot version to the post-migration
-        layout (marker-gated; no-op otherwise): the migration is
-        content-identical, so the current version's rows are unchanged
-        — but its manifest must point at the new-spec partition copies
-        or every future manifest inherits stale old-spec pointers and
-        time travel double-counts migrated rows. The rewritten
-        manifest is EXACTLY the live partition set (no inheritance —
-        inheriting would resurrect partitions a delete dropped at this
-        version)."""
-        if self.snapshot_dir is None:
-            return
-        marker = self._migrate_resnapshot_marker()
-        if not os.path.exists(marker):
-            return
-        snaps = self.snapshots()
-        if snaps:
-            epoch = snaps[-1]
-            live = sorted(
-                d for d in os.listdir(self.path) if d.startswith("part_date=")
-            )
-            epoch_files = os.path.join(
-                self.snapshot_dir, "files", f"epoch={epoch}"
-            )
-            for d in live:
-                dst = os.path.join(epoch_files, d)
-                shutil.rmtree(dst, ignore_errors=True)
-                self._copytree_link(os.path.join(self.path, d), dst)
-            self._publish_manifest(
-                epoch,
-                {d: epoch for d in live},
-                op=self._manifest_op(epoch),
-                sidecars={
-                    d: self._dir_entry(os.path.join(self.path, d)) for d in live
-                },
-            )
-            self._expire_snapshots()
-        os.remove(marker)
-
-    def _migrate_staging(self) -> str:
-        return self.path.rstrip("/") + "__migrate"
-
-    def _finish_migrate(self) -> None:
-        """Complete (or discard) a migration OR restore staging: swap
-        every staged partition in, then remove partition directories
-        not in the staged set — taken from the durable ``_MIGRATE``
-        list, never from what remains in a partially-drained staging
-        (which would misclassify already-installed partitions as
-        old-spec). A RESTORE staging additionally carries a
-        ``_RESTORE`` payload (target epoch, its manifest parts, schema,
-        spec history); publishing it AFTER the swap and BEFORE the
-        staging drop makes the whole restore re-enterable from any
-        crash point — every recovery entry point (read/merge/delete/
-        compact/migrate) already funnels through here. The live table
-        was just re-laid-out wholesale, so the consolidated cache is
-        rebuilt BEFORE the staging drops: a crash in between re-enters
-        this commit and converges it."""
-        staging = self._migrate_staging()
-        if not os.path.isdir(staging):
-            return
-        manifest = os.path.join(staging, "_MIGRATE")
-        if not (
-            os.path.exists(os.path.join(staging, "_SUCCESS"))
-            and os.path.exists(manifest)
-        ):
-            shutil.rmtree(staging, ignore_errors=True)  # incomplete
-            return
-        with open(manifest) as fh:
-            staged_dirs = set(json.load(fh))
-        restore_file = os.path.join(staging, "_RESTORE")
-        restore = None
-        if os.path.exists(restore_file):
-            with open(restore_file) as fh:
-                restore = json.load(fh)
-        for d in sorted(staged_dirs):
-            src = os.path.join(staging, d)
-            if not os.path.isdir(src):
-                continue  # already installed by a crashed earlier pass
-            dst = os.path.join(self.path, d)
-            shutil.rmtree(dst, ignore_errors=True)
-            shutil.move(src, dst)
-        if os.path.isdir(self.path):
-            for d in os.listdir(self.path):
-                if d.startswith("part_date=") and d not in staged_dirs:
-                    shutil.rmtree(
-                        os.path.join(self.path, d), ignore_errors=True
-                    )
-        self._refresh_consolidated()
-        if restore is not None:
-            # RESTORE commit point: the restored version's schema
-            # becomes the authoritative table schema, the spec history
-            # is PRESERVED (restored dirs may live under older specs —
-            # collapsing would break cross-spec candidate derivation),
-            # and the new epoch's manifest points at the SOURCE
-            # version's existing immutable copies (zero new log data);
-            # its folded metadata is the cache just rebuilt from the
-            # restored dirs (identical files and sidecars). All
-            # idempotent JSON publishes — a crash replays them.
-            self._atomic_json_write(self._schema_file(), restore["schema"])
-            self._atomic_json_write(
-                self._epoch_schema_path(restore["epoch"]), restore["schema"]
-            )
-            self._atomic_json_write(
-                self._partspec_file(), restore["specs"]
-            )
-            if self.snapshot_dir is not None:
-                self._publish_manifest(
-                    restore["epoch"],
-                    restore["parts"],
-                    op="restore",
-                    sidecars=self._consolidated(),
-                )
-                # a restore is a commit like any other: apply the
-                # retention bound here too, or a max_snapshots table
-                # exceeds it until the next ordinary commit (ADVICE r8)
-                self._expire_snapshots()
-            shutil.rmtree(staging, ignore_errors=True)
-            return
-        shutil.rmtree(staging, ignore_errors=True)
-        # post-MIGRATION the layout is homogeneous under the current
-        # spec — collapse the history so merges/deletes return to the
-        # single-spec hot path (one collect, no dead old-spec
-        # candidate derivations)
-        self._atomic_json_write(
-            self._partspec_file(), self._transforms()[-1:]
-        )
+            self._finish_pending_epoch(spark)
 
     def restore(
         self, spark: SparkSession, epoch_id: int, as_epoch: int | None = None
@@ -489,14 +347,16 @@ class ParquetUpsertSink:
         (the Delta ``RESTORE TABLE .. VERSION AS OF`` shape) as a NEW
         commit: history is preserved — every retained version still
         reads, and the restore itself appears in the log as
-        ``as_epoch`` (default: newest + 1) whose manifest points at
-        the SOURCE version's existing immutable copies (no new data in
-        the log; the live-table rewrite is O(restored partitions),
-        never O(history)). Crash-safe through the migration staging:
-        the durable ``_MIGRATE`` + ``_RESTORE`` pair makes a crashed
-        restore complete at the next entry point, and an incomplete
-        staging is discarded (the restore simply never happened —
-        re-run it). Returns the committed epoch id."""
+        ``as_epoch`` (default: newest + 1) with op ``restore``. The
+        source version's immutable copies are HARDLINKED into the
+        commit staging (O(files) inodes, zero bytes) under a record
+        carrying the new epoch and the source version's schema; the
+        install swaps them in, removes the live dirs the source version
+        lacks, restores the schema and snapshots the new version like
+        any commit. A crash before the record discards the staging
+        (the restore simply never happened — re-run it); after it, any
+        entry point or read finishes it. Returns the committed epoch
+        id."""
         if self.snapshot_dir is None:
             raise ValueError("sink was built without snapshot_dir")
         with self._writer_lock():
@@ -514,31 +374,21 @@ class ParquetUpsertSink:
                     f"as_epoch {new_epoch} must exceed the newest "
                     f"retained epoch {retained[-1]}"
                 )
-            parts = self._load_manifest(epoch_id)
-            staging = self._migrate_staging()
-            shutil.rmtree(staging, ignore_errors=True)
-            os.makedirs(staging, exist_ok=True)
-            for d, e in parts.items():
+            for d, e in self._load_manifest(epoch_id).items():
                 self._copytree_link(
-                    self._epoch_copy(e, d), os.path.join(staging, d)
+                    self._epoch_copy(e, d), os.path.join(self.merged_path, d)
                 )
-            self._atomic_json_write(
-                os.path.join(staging, "_RESTORE"),
-                {
-                    "epoch": new_epoch,
-                    "parts": parts,
-                    "schema": self._epoch_schema(epoch_id).jsonValue(),
-                    "specs": self._transforms(),
-                },
+            # every live dir and every dir the newest version names is
+            # touched: those the source version lacks are emptied, so
+            # the new manifest names exactly the restored set
+            self._publish_record(
+                self.merged_path,
+                [*self._part_dirs(), *self._load_manifest(retained[-1])],
+                "restore",
+                self._epoch_schema(epoch_id),
+                epoch=new_epoch,
             )
-            open(os.path.join(staging, "_SUCCESS"), "w").close()
-            # the _MIGRATE list is the completeness marker (LAST): a
-            # staging lacking it is discarded on recovery
-            self._atomic_json_write(
-                os.path.join(staging, "_MIGRATE"), sorted(parts)
-            )
-            self._finish_migrate()
-            self._invalidate_listing(spark)
+            self._finish_pending_epoch(spark)
             return new_epoch
 
     # -- single-writer guard ----------------------------------------------
@@ -672,12 +522,13 @@ class ParquetUpsertSink:
 
         Crash safety: the target is not touched until the full merged
         content (pre-batch keys included) is durable under
-        ``<path>__merged`` with an epoch marker. A crash mid-commit
-        therefore loses nothing — the retry (in-process via
-        ``with_retries``, or the streaming restart replaying the same
-        epoch) detects the completed staging for this epoch and re-runs
-        only the commit, restoring any partially-installed partition.
-        The staging is removed only after the snapshot publishes.
+        ``<path>__merged`` with its commit record (epoch included). A
+        crash mid-commit therefore loses nothing — the retry
+        (in-process via ``with_retries``, or the streaming restart
+        replaying the same epoch) finds the recorded staging for this
+        epoch and re-runs only the install, restoring any
+        partially-installed partition. The staging is removed only
+        after the snapshot publishes.
         """
         with self._writer_lock():
             with_retries(
@@ -688,16 +539,13 @@ class ParquetUpsertSink:
 
     def _recover(self, spark: SparkSession) -> int | None:
         """Finish whatever a crashed operation left pending, before an
-        entry point touches the table: a compaction or migration swap
-        (a merge into a partition a stale swap is about to clobber
-        would be lost), a migration's re-snapshot, then a complete
-        merge/delete/OCC staging (commit -> snapshot -> drop). Returns
-        the epoch that staging committed, or None — when it is the
+        entry point touches the table: the one commit staging (any
+        rewrite — a merge into a partition a stale staging is about to
+        clobber would be lost), else a deletion-vector delta. Returns
+        the epoch that commit snapshotted, or None — when it is the
         caller's own epoch, the replayed call is already applied."""
-        self._finish_compact(self._compact_staging())
-        self._finish_migrate()
-        self._heal_migration_snapshot(spark)
-        return self._finish_pending_epoch(spark)
+        epoch = self._finish_pending_epoch(spark)
+        return self._finish_pending_dv(spark) if epoch is None else epoch
 
     def _merge(self, batch_df: DataFrame, epoch_id: int) -> None:
         """One ``write_batch`` attempt: recover (a replayed epoch
@@ -784,7 +632,7 @@ class ParquetUpsertSink:
         partitions CONTAINING a doomed key are rewritten (a key-semi-
         join finds them — O(touched partitions) work at any table
         size, with the keys broadcast), the survivors are durably
-        staged with the epoch marker before the first target file is
+        staged with their commit record before the first target file is
         replaced, and a replayed epoch recovers from the staging. A
         partition whose every row is deleted is DROPPED: removed from
         the table directory explicitly (dynamic overwrite cannot
@@ -830,9 +678,7 @@ class ParquetUpsertSink:
             # written before evolve_partitioning lives in its
             # old-granularity partition
             candidates, _ = self._touched_candidates(staged_keys)
-            live = {
-                d for d in os.listdir(self.path) if d.startswith("part_date=")
-            }
+            live = set(self._part_dirs())
             touched_vals = [
                 v for v in candidates if self._part_dirname(v) in live
             ]
@@ -864,7 +710,7 @@ class ParquetUpsertSink:
             self._stored_schema() or existing.schema,
             [self._part_dirname(v) for v in touched_vals],
             "delete",
-            epoch_id,
+            epoch=epoch_id,
         )
         self._finish_pending_epoch(spark)
 
@@ -887,7 +733,7 @@ class ParquetUpsertSink:
         never moves a row between keys or partitions — that is a
         delete + insert). CHECK constraints audit the updated content
         before any table mutation. Crash-safe and replay-idempotent
-        through the same epoch-marked staging as merges and deletes;
+        through the same recorded staging as merges and deletes;
         the commit appears in DESCRIBE HISTORY as ``op='update'``."""
         bad = set(set_exprs) & (set(self.key_cols) | {self.partition_source, "part_date"})
         if bad:
@@ -942,7 +788,7 @@ class ParquetUpsertSink:
             self._stored_schema() or existing.schema,  # see _delete
             [self._part_dirname(v) for v in touched_vals],
             "update",
-            epoch_id,
+            epoch=epoch_id,
         )
         self._finish_pending_epoch(spark)
 
@@ -991,7 +837,7 @@ class ParquetUpsertSink:
         targets, or NOT-MATCHED-BY-SOURCE matches (discovered with one
         pruned scan) are rewritten — at 100 TB a merge costs O(touched
         partitions), never O(table). Crash-safe through the same
-        epoch-marked staging as every commit; a replay of an
+        recorded staging as every commit; a replay of an
         already-COMMITTED epoch is a version-guard no-op (conditional
         payloads are not naturally idempotent — same contract as
         ``update_where``).
@@ -1104,7 +950,7 @@ class ParquetUpsertSink:
             ins_rows = ins_rows.withColumn(
                 "part_date", self._derive_part_date(specs[-1])
             )
-            self._stage(ins_rows, ins_rows.schema, None, "merge", epoch_id)
+            self._stage(ins_rows, ins_rows.schema, None, "merge", epoch=epoch_id)
             self._finish_pending_epoch(spark)
             return
 
@@ -1134,9 +980,7 @@ class ParquetUpsertSink:
 
         # exact copy-on-write scope (see docstring)
         locality = self.partition_source in self.key_cols
-        live = {
-            d for d in os.listdir(self.path) if d.startswith("part_date=")
-        }
+        live = set(self._part_dirs())
         if ins or locality:  # one candidates job serves both
             candidates, current_vals = self._touched_candidates(staged)
         ins_dirs = (
@@ -1202,7 +1046,7 @@ class ParquetUpsertSink:
             )
         else:
             stored = self._stored_schema() or existing.schema  # see _delete
-        self._stage(merged, stored, touched_dirs, "merge", epoch_id)
+        self._stage(merged, stored, touched_dirs, "merge", epoch=epoch_id)
         self._finish_pending_epoch(spark)
 
     def _apply_merge_clauses(
@@ -1338,9 +1182,7 @@ class ParquetUpsertSink:
             # prune the discovery scan to partitions the keys derive
             # (same locality contract as the copy-on-write delete)
             candidates, _ = self._touched_candidates(staged_keys)
-            live = {
-                d for d in os.listdir(self.path) if d.startswith("part_date=")
-            }
+            live = set(self._part_dirs())
             touched_vals = [
                 v for v in candidates if self._part_dirname(v) in live
             ]
@@ -1570,8 +1412,8 @@ class ParquetUpsertSink:
     def _manifest_committed_at(self, epoch_id: int) -> float:
         """Commit time of a snapshot: the timestamp recorded INSIDE the
         manifest at first publish. Manifests are rewritten with
-        identical parts on idempotent epoch replays and by
-        _heal_migration_snapshot; using the file's mtime would refresh
+        identical parts on idempotent epoch replays and by a
+        migration's re-publish; using the file's mtime would refresh
         the clock on every rewrite and silently extend time-based
         retention."""
         return float(self._manifest(epoch_id)["committed_at"])
@@ -1691,11 +1533,7 @@ class ParquetUpsertSink:
         dir when None) rebuilt from disk; a dir that no longer exists
         is dropped."""
         if dirs is None:
-            dirs = (
-                [d for d in os.listdir(self.path) if d.startswith("part_date=")]
-                if os.path.isdir(self.path)
-                else []
-            )
+            dirs = self._part_dirs()
         for d in dirs:
             pdir = os.path.join(self.path, d)
             if os.path.isdir(pdir):
@@ -1750,22 +1588,22 @@ class ParquetUpsertSink:
         commit — the manifest write (last, atomic rename) is the commit
         point. Idempotent: a replayed epoch overwrites its own copies
         and manifest with identical content. Expired epochs beyond
-        ``max_snapshots`` are vacuumed after each commit."""
+        ``max_snapshots`` are vacuumed after each commit. ``touched``
+        None publishes EXACTLY the live layout, inheriting nothing (a
+        migration's re-publish of the newest version)."""
         if self.snapshot_dir is None:
             return
         prev_epochs = [e for e in self.snapshots() if e < epoch_id]
         prev = (
             self._manifest(prev_epochs[-1])
-            if prev_epochs
+            if prev_epochs and touched is not None
             else {"parts": {}, "sidecars": {}}
         )
-        if not prev_epochs:
-            # first snapshot: capture every current table partition so
-            # the manifest is complete even when the sink attached to a
+        if touched is None or not prev_epochs:
+            # the whole live layout — also every first snapshot, so the
+            # manifest is complete even when the sink attached to a
             # pre-existing table
-            touched = [
-                d for d in os.listdir(self.path) if d.startswith("part_date=")
-            ]
+            touched = self._part_dirs()
         epoch_files = os.path.join(self.snapshot_dir, "files", f"epoch={epoch_id}")
         manifest: dict[str, int] = dict(prev["parts"])
         sidecars: dict[str, dict] = dict(prev["sidecars"])
@@ -2270,7 +2108,7 @@ class ParquetUpsertSink:
         self, spark: SparkSession, batch: DataFrame, vals: list, epoch_id: int
     ) -> tuple[list[str], list[str]]:
         """Compute keep ∪ batch for the touched partitions and stage it
-        as ``epoch_id``'s certified commit (see ``_stage``) WITHOUT
+        as ``epoch_id``'s recorded commit (see ``_stage``) WITHOUT
         touching the target — ONE partitioned write. ``batch`` and
         ``vals`` come from ``_persisted``: the batch side reads the
         cached rows, never the batch's plan. Returns (touched dir
@@ -2279,7 +2117,7 @@ class ParquetUpsertSink:
         if not self._table_exists():
             # no live partition: the keep side is empty, so the batch
             # under its own schema IS the merged content
-            rec = self._stage(batch, batch.schema, None, "merge", epoch_id)
+            rec = self._stage(batch, batch.schema, None, "merge", epoch=epoch_id)
             return rec["touched"], rec["emptied"]
         existing = self._read_table(spark)
         out_cols = self._evolved_columns(existing.schema, batch.schema)
@@ -2290,9 +2128,7 @@ class ParquetUpsertSink:
             # old copy still lives in its old-granularity partition,
             # and the keep side must read (and the overwrite must
             # claim) it too
-            live_dirs = {
-                d for d in os.listdir(self.path) if d.startswith("part_date=")
-            }
+            live_dirs = set(self._part_dirs())
             batch_dirs = {self._part_dirname(v) for v in vals}
             candidates, _ = self._touched_candidates(batch)
             touched = [
@@ -2310,7 +2146,7 @@ class ParquetUpsertSink:
             self._staged_logical_schema(existing, batch, out_cols),
             [self._part_dirname(v) for v in touched],
             "merge",
-            epoch_id,
+            epoch=epoch_id,
         )
         return rec["touched"], rec["emptied"]
 
@@ -2351,46 +2187,51 @@ class ParquetUpsertSink:
         schema,
         touched: list[str] | None,
         op: str,
-        epoch_id: int | None = None,
         root: str | None = None,
+        **fields,
     ) -> dict:
-        """Stage a commit under ``root`` (default: the canonical merge
+        """Stage a commit under ``root`` (default: the canonical commit
         staging; OCC writers pass their private one): ``frame`` — the
         complete post-commit rows of the touched partitions — written
-        partitioned under ``schema``'s physical names; the LOGICAL
-        schema stash (column-mapping metadata included: ``_commit``
-        publishes the authoritative schema from it, and the physical
-        parquet names alone cannot reconstruct the mapping); file
-        stats and blooms refreshed for the staged dirs; and the
-        ``_TOUCHED`` record ``{touched, emptied, op}`` (``touched``
-        None = the dirs the write produced; emptied = touched dirs
-        with no staged content — a delete, or a post-evolution merge
-        that drained an old-spec dir — recorded now because a
-        partially-installed staging cannot be inspected for this
-        after a crash). Given ``epoch_id``, the epoch marker publishes
-        LAST: with Spark's ``_SUCCESS`` it certifies a complete
-        staging, which ``_finish_pending_epoch`` commits. Both markers
-        publish atomically (a torn ``_EPOCH`` would wedge every later
-        recovery). Returns the ``_TOUCHED`` record."""
+        partitioned under ``schema``'s physical names, file stats and
+        blooms refreshed for the staged dirs, then the commit record
+        (``_publish_record``). Returns the record."""
         root = self.merged_path if root is None else root
         self._distribute(self._to_physical(frame, schema)).write.mode(
             "overwrite"
         ).partitionBy("part_date").parquet(root)
-        self._write_schema_file(
-            schema, os.path.join(root, "_LOGICAL_SCHEMA.json")
-        )
         self._refresh_staged_stats(root)
         self._refresh_staged_blooms(root)
-        staged = {d for d in os.listdir(root) if d.startswith("part_date=")}
-        touched = sorted(staged) if touched is None else touched
+        return self._publish_record(root, touched, op, schema, **fields)
+
+    def _record_file(self, root: str | None = None) -> str:
+        return os.path.join(root or self.merged_path, "_COMMIT.json")
+
+    def _publish_record(
+        self, root: str, touched: list[str] | None, op: str, schema, **fields
+    ) -> dict:
+        """Publish a staging's commit record — atomically and LAST, so
+        it is the staging's one completeness marker (a staging without
+        it crashed mid-write and is discarded): ``op``; ``touched``,
+        the given dirs plus every staged one; ``emptied``, the touched
+        dirs with no staged content (a delete, a post-evolution merge
+        that drained an old-spec dir, the old layout of a migration),
+        recorded now because a partially-installed staging cannot be
+        inspected for this after a crash; the LOGICAL ``schema``
+        (column-mapping metadata included — the physical parquet names
+        alone cannot reconstruct the mapping; None publishes nothing);
+        and ``fields`` — ``epoch`` to snapshot, ``occ`` key, ``specs``
+        history. Returns the record."""
+        staged = set(self._part_dirs(root))
+        touched = sorted(set(touched or ()) | staged)
         rec = {
+            "op": op,
             "touched": touched,
             "emptied": [d for d in touched if d not in staged],
-            "op": op,
+            "schema": self._schema_json(schema),
+            **fields,
         }
-        self._atomic_json_write(os.path.join(root, "_TOUCHED"), rec)
-        if epoch_id is not None:
-            self._atomic_json_write(os.path.join(root, "_EPOCH"), epoch_id)
+        self._atomic_json_write(self._record_file(root), rec)
         return rec
 
     def _staged_logical_schema(
@@ -2426,103 +2267,80 @@ class ParquetUpsertSink:
                 fields.append(StructField(c, src.dataType, True, md))
         return StructType(fields)
 
-    def _commit(self, spark: SparkSession) -> dict:
-        """Install the touched partitions from the durable merged copy
-        by per-partition FILESYSTEM SWAP: each staged dir is
-        HARDLINKED into the target — O(files) inode work, zero bytes
-        copied. The staged content
-        already IS the complete new bytes of every touched partition,
-        so a second Spark write would re-shuffle and re-encode the
-        same data. The staging stays intact: it is dropped only after
-        the snapshot publishes (``_finish_pending_epoch``), so a crash
-        anywhere in between replays this commit from the epoch-marked
-        staging — re-linking is idempotent, and a partition is always
-        either installed or still staged. On an object store the links
-        become per-partition server-side copies.
-
-        The authoritative schema publishes from the staging's stash
-        BEFORE the first target file is replaced: a crash in between
-        leaves a schema file ahead of some partitions' physical files,
-        which reads handle exactly (missing columns NULL-fill); the
-        reverse order could leave an evolved table whose stale schema
-        file silently drops the new column from every read. Returns
-        the staging's ``_TOUCHED`` record ``{touched, emptied, op}``."""
-        staged_dirs = sorted(
-            d for d in os.listdir(self.merged_path) if d.startswith("part_date=")
-        )
-        if staged_dirs:
-            stash = os.path.join(self.merged_path, "_LOGICAL_SCHEMA.json")
-            with open(stash) as fh:
-                self._atomic_json_write(self._schema_file(), json.load(fh))
-            for d in staged_dirs:
-                dst = os.path.join(self.path, d)
-                shutil.rmtree(dst, ignore_errors=True)
-                self._copytree_link(os.path.join(self.merged_path, d), dst)
-        # partitions a DELETE emptied have no staged content to swap
-        # in; the stage-time _TOUCHED record names them. rmtree is a
-        # no-op replay.
-        with open(os.path.join(self.merged_path, "_TOUCHED")) as fh:
-            staged = json.load(fh)
-        for d in staged["emptied"]:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-        # consolidated-cache write-through over the AUTHORITATIVE
-        # touched list, BEFORE the staging drops: a crash in between
-        # re-enters this commit and converges
-        self._refresh_consolidated(
-            sorted(set(staged["touched"]) | set(staged["emptied"]))
-        )
-        # the swap deleted target files in place; DataFrames planned
-        # after this commit must not be scheduled against the session's
-        # stale file listing (see _invalidate_listing)
-        self._invalidate_listing(spark)
-        return staged
-
-    def _staged_epoch(self) -> int | None:
-        """Epoch id of a COMPLETE merged/delete staging surviving a
-        crashed commit, else None (leftovers are deleted on success)."""
-        marker = os.path.join(self.merged_path, "_EPOCH")
-        success = os.path.join(self.merged_path, "_SUCCESS")
-        if not (os.path.exists(marker) and os.path.exists(success)):
-            return None
+    def _staged_record(self) -> dict | None:
+        """The commit staging's record, or None when no staging exists
+        or it never published one."""
         try:
-            with open(marker) as fh:
-                return int(fh.read().strip())
-        except (ValueError, FileNotFoundError):
-            # a torn/empty marker (pre-atomic-write staging that
-            # crashed mid-publish) means the staging never certified
-            # complete — treat as incomplete and let the epoch restage
+            with open(self._record_file()) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
             return None
 
     def _finish_pending_epoch(self, spark: SparkSession) -> int | None:
-        """Commit the certified staging — ``_commit``, snapshot, the
-        OCC ledger record, and only THEN drop the staging — and return
-        its epoch, or None when no certified staging exists. The one
-        install step of every staged commit (merge, delete, update,
-        MERGE INTO, OCC) and of its crash recovery: a staging that
-        survives a crash anywhere in here replays the same steps. The
-        staging outlives the manifest publish because a crash in
-        between must replay this commit, not the caller's (possibly
-        empty, manifest-diverging) stage path. Shared by every entry
-        point through ``_recover`` (migrate must never re-layout a
-        table with an unapplied commit pending)."""
-        epoch = self._staged_epoch()
-        if epoch is None:
-            # at most one staging kind can survive a crash (both are
-            # created under the writer lock within a single operation);
-            # a pending deletion-vector delta is the other kind
-            return self._finish_pending_dv(spark)
-        staged = self._commit(spark)
-        self._snapshot(spark, epoch, staged["touched"], op=staged["op"])
-        # an OCC commit's idempotence key rides in the staging: record
-        # it before the staging drops, so a replayed OCC call returns
-        # the committed version instead of re-applying a
-        # non-idempotent payload (exactly-once OCC replay)
-        try:
-            with open(os.path.join(self.merged_path, "_OCC_KEY")) as fh:
-                key = json.load(fh)  # {"epoch": e, "writer": ns}
-            self._occ_record_applied(int(key["epoch"]), epoch, key["writer"])
-        except (FileNotFoundError, ValueError):
-            pass  # not an OCC commit
+        """The ONE install step of every table rewrite — data commits
+        (merge, delete, update, MERGE INTO, OCC) and maintenance
+        (compaction, OPTIMIZE, migration, RESTORE) — and of its crash
+        recovery. Installs the recorded staging and returns the epoch
+        it snapshotted (None: no epoch, or nothing pending); a staging
+        without a record crashed mid-write and is discarded.
+
+        1. the recorded schema publishes, and the spec history when
+           the record carries one — BEFORE the first target file is
+           replaced, so a reader racing a live install NULL-fills a
+           not-yet-installed evolved column (the reverse order would
+           drop an installed one from its read);
+        2. each staged dir is HARDLINKED into the table (O(files)
+           inode work, zero bytes copied — the staged content already
+           IS the complete new bytes of the partition; on an object
+           store, per-partition server-side copies), and the emptied
+           dirs are removed;
+        3. the consolidated cache is written through over the touched
+           and emptied dirs;
+        4. with an ``epoch``, that version is snapshotted and the OCC
+           key recorded in the idempotence ledger (a replayed OCC call
+           then returns the version instead of re-applying a
+           non-idempotent payload). Without one the rewrite is
+           content-identical and adds no version; a migration (its
+           record carries the spec it collapses to) moved rows between
+           dirs, so the newest version is re-published over exactly the
+           live layout — inheriting its old pointers would double-count
+           migrated rows, or resurrect partitions a delete dropped.
+           Compaction and OPTIMIZE restage dirs under their own names
+           and leave the log alone;
+        5. the staging drops.
+
+        Every step is idempotent and the staging outlives all of them,
+        so a crash anywhere in here replays this install — never the
+        caller's (possibly empty, manifest-diverging) stage path."""
+        rec = self._staged_record()
+        if rec is None:
+            shutil.rmtree(self.merged_path, ignore_errors=True)
+            return None
+        if rec["schema"] is not None:
+            self._atomic_json_write(self._schema_file(), rec["schema"])
+        if "specs" in rec:
+            self._atomic_json_write(self._partspec_file(), rec["specs"])
+        for d in self._part_dirs(self.merged_path):
+            dst = os.path.join(self.path, d)
+            shutil.rmtree(dst, ignore_errors=True)
+            self._copytree_link(os.path.join(self.merged_path, d), dst)
+        for d in rec["emptied"]:
+            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        self._refresh_consolidated(rec["touched"])
+        # the swap deleted target files in place; DataFrames planned
+        # after this install must not be scheduled against the
+        # session's stale file listing (see _invalidate_listing)
+        self._invalidate_listing(spark)
+        epoch = rec.get("epoch")
+        if epoch is not None:
+            self._snapshot(spark, epoch, rec["touched"], op=rec["op"])
+            if "occ" in rec:
+                self._occ_record_applied(
+                    rec["occ"]["epoch"], epoch, rec["occ"]["writer"]
+                )
+        elif "specs" in rec and self.snapshots():
+            newest = self.snapshots()[-1]
+            self._snapshot(spark, newest, None, op=self._manifest_op(newest))
         shutil.rmtree(self.merged_path, ignore_errors=True)
         return epoch
 
@@ -2533,6 +2351,14 @@ class ParquetUpsertSink:
             name.startswith("part_date=") or name.endswith(".parquet")
             for name in os.listdir(self.path)
         )
+
+    def _part_dirs(self, root: str | None = None) -> list[str]:
+        """Sorted partition dir names under ``root`` (default: the
+        table); none when it does not exist."""
+        root = self.path if root is None else root
+        if not os.path.isdir(root):
+            return []
+        return sorted(d for d in os.listdir(root) if d.startswith("part_date="))
 
     # -- authoritative table schema (see schema_evolution in __init__) ----
     def _schema_file(self) -> str:
@@ -2567,25 +2393,27 @@ class ParquetUpsertSink:
         staged commit publishes one."""
         return self._load_schema(self._schema_file())
 
-    def _write_schema_file(self, schema, path: str | None = None) -> None:
-        """Publish ``schema`` as the table's ``_schema.json`` — or, given
-        ``path``, record it in a staging for ``_commit`` to publish."""
+    @staticmethod
+    def _schema_json(schema) -> dict | None:
+        """``schema`` as the JSON every schema file records (None
+        stays None)."""
         from pyspark.sql.types import DateType, NullType, StructField, StructType
 
+        if schema is None:
+            return None
         # partition-column type is INFERRED from directory names on the
         # staging read; a commit touching only the hive-default (NULL)
         # partition infers VOID, which would poison the authoritative
         # schema (partitionBy refuses VOID; joins lose the date type).
         # part_date is DATE by construction (to_date), so pin it.
-        fields = [
-            StructField(f.name, DateType(), True)
-            if f.name == "part_date" and isinstance(f.dataType, NullType)
-            else f
-            for f in schema.fields
-        ]
-        self._atomic_json_write(
-            path or self._schema_file(), StructType(fields).jsonValue()
-        )
+        return StructType(
+            [
+                StructField(f.name, DateType(), True)
+                if f.name == "part_date" and isinstance(f.dataType, NullType)
+                else f
+                for f in schema.fields
+            ]
+        ).jsonValue()
 
     def _evolved_columns(self, table, batch) -> list[str]:
         """Validate the ``batch`` schema against the ``table`` schema
@@ -2907,16 +2735,15 @@ class ParquetUpsertSink:
         ).withColumn("__dv_pos", F.col("_metadata.row_index"))
         return self._to_logical(df, schema)
 
-    def _compact_staging(self) -> str:
-        return self.path.rstrip("/") + "__compact"
-
     def read(self, spark: SparkSession) -> DataFrame:
         """The materialized table (without the physical partition col).
-        Finishes any pending compaction swap first — a crash mid-swap
-        must never serve (or let a writer extend) a torn table.
+        Finishes a pending commit staging first — whatever rewrite a
+        crash interrupted (a merge, a compaction, a migration, a
+        restore) must never serve (or let a writer extend) a torn
+        table.
 
         The repair runs under the writer lock: an unlocked repair
-        could race a LIVE writer's own swap of the same staging
+        could race a LIVE writer's own install of the same staging
         (reader rmtree-ing a partition the writer just installed —
         permanent loss). If a live writer holds the lock, the repair
         is ITS job — skip and read."""
@@ -2924,23 +2751,13 @@ class ParquetUpsertSink:
         return self._read_table(spark).drop("part_date")
 
     def _repair_for_read(self, spark: SparkSession) -> None:
-        """Finish a crashed compaction/migration swap before serving a
+        """Finish a crashed rewrite's commit staging before serving a
         read (no-op when none pending; skipped when a live writer owns
         the lock — the repair is its job)."""
-        staging = self._compact_staging()
-        if (
-            os.path.isdir(staging)
-            or os.path.isdir(self._migrate_staging())
-            or (
-                self.snapshot_dir is not None
-                and os.path.exists(self._migrate_resnapshot_marker())
-            )
-        ):
+        if os.path.isdir(self.merged_path):
             try:
                 with self._writer_lock():
-                    self._finish_compact(staging)
-                    self._finish_migrate()
-                    self._heal_migration_snapshot(spark)
+                    self._finish_pending_epoch(spark)
             except ConcurrentWriterError:
                 pass  # the live writer owns (and will finish) the swap
 
@@ -2991,17 +2808,18 @@ class ParquetUpsertSink:
         ``files_per_partition`` — so every date compacts in parallel
         across up to ``files_per_partition`` tasks (a plain
         ``repartition(n, "part_date")`` would serialize each date into
-        one task, a straggler at 100 TB). The commit is a per-
-        partition RENAME from the completed staging copy, and it is
-        re-runnable: the staging (with Spark's ``_SUCCESS`` marker) is
-        durable before the first target partition is touched, and a
-        crash mid-swap is repaired at EVERY table entry point —
-        ``compact()``, ``write_batch()`` and ``read()`` all finish the
-        pending swap from staging before touching the table
-        (``_finish_compact``), so a post-crash merge can never land in
-        a partition a stale staging is about to clobber. A partition
-        is therefore always fully present in the target or pending in
-        a complete staging — never lost.
+        one task, a straggler at 100 TB). The rewrite stages like any
+        commit — the rewritten dirs under ``<path>__merged`` and a
+        record naming only them, with no epoch: compaction is
+        content-identical, adds no version and never changes the set
+        of live dirs (a partition whose rows deletion vectors all hide
+        stages nothing and stays as it is). The one install step
+        (``_finish_pending_epoch``) swaps them in, and a crash
+        mid-swap is finished at EVERY entry point and read before the
+        table is touched, so a post-crash merge can never land in a
+        partition a stale staging is about to clobber. A partition is
+        therefore always fully present in the target or pending in a
+        recorded staging — never lost.
 
         ``zorder_by`` is the multi-DIMENSIONAL clustering axis
         (``OPTIMIZE .. ZORDER BY (a, b)``): where ``sort_by=[a, b]``
@@ -3100,10 +2918,9 @@ class ParquetUpsertSink:
         sort_by, zorder_by, from_recorded = self._clustering_args(
             sort_by, zorder_by
         )
-        # finish (or discard, if incomplete) a previous crashed commit
-        staging = self._compact_staging()
-        self._finish_compact(staging)
-        self._finish_migrate()
+        # finish (or discard, if unrecorded) a crashed commit: the
+        # rewrite stages where it did
+        self._recover(spark)
         # schema-aware read: after an evolution commit the untouched
         # partitions physically lack the new column; compacting through
         # the authoritative schema NULL-fills and rewrites them, so
@@ -3111,8 +2928,8 @@ class ParquetUpsertSink:
         current = self._read_table(spark)
         if only_partitions is not None:
             # partition-scoped rewrite: the staging then contains only
-            # these dirs and _finish_compact swaps only what is staged,
-            # so everything else is untouched by construction
+            # these dirs and the install swaps only what is staged, so
+            # everything else is untouched by construction
             vals = [d.split("=", 1)[1] for d in only_partitions]
             cond = F.col("part_date").cast("string").isin(
                 [v for v in vals if v != "__HIVE_DEFAULT_PARTITION__"]
@@ -3124,9 +2941,7 @@ class ParquetUpsertSink:
         max_records = None
         if target_file_bytes is not None:
             sizes: dict[str, int] = {}
-            for d in os.listdir(self.path):
-                if not d.startswith("part_date="):
-                    continue
+            for d in self._part_dirs():
                 if only_partitions is not None and d not in only_partitions:
                     continue
                 pdir = os.path.join(self.path, d)
@@ -3162,22 +2977,21 @@ class ParquetUpsertSink:
             else:
                 bounds = self._zorder_bounds(current, zorder_by)
                 self._save_clustering_bounds(zorder_by, bounds)
-        scope = only_partitions or [
-            d for d in os.listdir(self.path) if d.startswith("part_date=")
-        ]
+        schema = self._stored_schema()
         self._rewrite(
             current,
-            staging,
-            self._stored_schema(),
+            self.merged_path,
+            schema,
             files_per_partition,
-            len(scope),
+            len(only_partitions or self._part_dirs()),
             sort_by,
             zorder_by,
             bounds=bounds,
             file_counts=file_counts,
             max_records=max_records,
         )
-        self._finish_compact(staging)
+        self._publish_record(self.merged_path, None, "compact", schema)
+        self._finish_pending_epoch(spark)
 
     def _clustering_args(self, sort_by, zorder_by):
         """``(sort_by, zorder_by, from_recorded)`` of one rewrite: the
@@ -3334,13 +3148,14 @@ class ParquetUpsertSink:
           read — into a private staging. Deletion vectors pinned with
           the copies fold into the rewrite; ``sort_by`` writes fresh
           file stats exactly like ``compact(sort_by=...)``.
-        - **commit** (brief lock): per-partition conflict check — a
-          dir whose live fingerprint still equals the pinned one is
-          swapped in through the crash-safe ``_finish_compact``
-          staging protocol (recovery-covered at every entry point); a
-          dir a writer touched mid-rewrite is SKIPPED (its newer
-          content wins — rows are never lost) and retried from a
-          fresh pin up to ``max_retries`` times.
+        - **commit** (brief lock): per-partition conflict check — each
+          dir whose live fingerprint still equals the pinned one moves
+          into the commit staging under a record naming only the moved
+          dirs, with no epoch, and the one install step swaps them in
+          (recovery-covered at every entry point and read); a dir a
+          writer touched mid-rewrite is SKIPPED (its newer content
+          wins — rows are never lost) and retried from a fresh pin up
+          to ``max_retries`` times.
 
         ``zorder_by`` z-clusters the rewrite (multi-dimensional — the
         ``compact(zorder_by=...)`` semantics under this optimistic
@@ -3380,16 +3195,8 @@ class ParquetUpsertSink:
                         "skipped": [],
                         "attempts": attempts,
                     }
-                dirs = sorted(
-                    d
-                    for d in (
-                        scope
-                        if scope is not None
-                        else os.listdir(self.path)
-                    )
-                    if d.startswith("part_date=")
-                    and os.path.isdir(os.path.join(self.path, d))
-                )
+                live = self._part_dirs()
+                dirs = live if scope is None else sorted(set(scope) & set(live))
                 pinned_fp = self._pin(pin_root, dirs)
             if not dirs:
                 shutil.rmtree(pin_root, ignore_errors=True)
@@ -3414,30 +3221,33 @@ class ParquetUpsertSink:
                 on_staged()
             # -- commit (brief BLOCKING lock): conflict-check + swap
             with self._writer_lock_blocking():
-                staging = self._compact_staging()
-                self._finish_compact(staging)  # clear any pending swap
-                skipped = []
-                swapped: list[str] = []
-                os.makedirs(staging, exist_ok=True)
-                for d in dirs:
-                    src = os.path.join(stage, d)
-                    live = os.path.join(self.path, d)
-                    if (
-                        not os.path.isdir(src)
-                        or self._dir_fingerprint(live) != pinned_fp[d]
-                    ):
-                        # a writer landed here mid-rewrite (or the pin
-                        # folded the dir away): its newer content wins
-                        skipped.append(d)
-                        continue
-                    shutil.move(src, os.path.join(staging, d))
-                    swapped.append(d)
+                self._recover(spark)  # clear any pending commit first
+                # a writer landed in a skipped dir mid-rewrite (or the
+                # pin folded the dir away): its newer content wins
+                skipped = [
+                    d
+                    for d in dirs
+                    if not os.path.isdir(os.path.join(stage, d))
+                    or self._dir_fingerprint(os.path.join(self.path, d))
+                    != pinned_fp[d]
+                ]
+                swapped = [d for d in dirs if d not in skipped]
                 if swapped:
-                    open(os.path.join(staging, "_SUCCESS"), "w").close()
-                    self._finish_compact(staging)  # crash-safe from here
-                    self._invalidate_listing(spark)
-                else:
-                    shutil.rmtree(staging, ignore_errors=True)
+                    os.makedirs(self.merged_path)
+                    for d in swapped:
+                        shutil.move(
+                            os.path.join(stage, d),
+                            os.path.join(self.merged_path, d),
+                        )
+                    # the schema as of this lock, never the rewrite's:
+                    # an evolution may have landed beside the rewrite
+                    self._publish_record(
+                        self.merged_path,
+                        None,
+                        "optimize",
+                        self._stored_schema(),
+                    )
+                    self._finish_pending_epoch(spark)
                 shutil.rmtree(stage, ignore_errors=True)
                 shutil.rmtree(pin_root, ignore_errors=True)
                 compacted.extend(swapped)
@@ -3684,9 +3494,9 @@ class ParquetUpsertSink:
         when callers' epochs race; ``epoch_id`` itself is the
         IDEMPOTENCE key, recorded in a bounded ledger — a replayed key
         returns the original version without re-applying. EXACTLY
-        once under crashes: the key rides inside the staging
-        (``_OCC_KEY``) and recovery records the ledger entry before
-        the staging drops, so no crash window can re-apply a payload.
+        once under crashes: the key rides in the staging's commit
+        record and the install records the ledger entry before the
+        staging drops, so no crash window can re-apply a payload.
 
         Validation, the persisted batch and the keep ∪ batch merge are
         ``write_batch``'s (``_evolved_columns``, ``_persisted``,
@@ -3723,7 +3533,7 @@ class ParquetUpsertSink:
                 # empty snapshot commit under the lock, same as
                 # write_batch
                 with self._writer_lock_blocking():
-                    self._finish_pending_epoch(spark)
+                    self._recover(spark)
                     version = self._next_version(epoch_id)
                     self._snapshot(spark, version, touched=[])
                     self._occ_record_applied(epoch_id, version, writer_id)
@@ -3841,14 +3651,14 @@ class ParquetUpsertSink:
         raises ``ConcurrentWriterError`` on any drift: an evolution
         landing between the caller's validation and the pin — or
         between a conflicted pin and its retry — would otherwise stage
-        (and then PUBLISH) the pre-evolution ``_LOGICAL_SCHEMA.json``,
+        (and then PUBLISH) the pre-evolution schema in its record,
         silently reverting the evolution. A retry cannot help because
         the staging closure is bound to the stale schema; the caller
         must re-enter with fresh validation. The value is used
         VERBATIM (None means the caller validated against a table
         whose ``_schema.json`` was deleted out of band, which the pin
-        check enforces too; the stage then stashes the staged rows'
-        schema, and the commit republishes it)."""
+        check enforces too; the record then carries the staged rows'
+        schema, and the install republishes it)."""
         schema = entry_schema
         pin_root = os.path.join(occ_root, "pin")
         merged = os.path.join(occ_root, "merged")
@@ -3895,7 +3705,7 @@ class ParquetUpsertSink:
                     meta_fp = self._meta_fingerprint()
                 # -- stage (NO lock: reads only the immutable pin) ----
                 out = stage_fn(pin_root)
-                self._stage(
+                rec = self._stage(
                     out, schema or out.schema, touched, op, root=merged
                 )
                 if on_staged is not None and not fired:
@@ -3918,32 +3728,28 @@ class ParquetUpsertSink:
                                 f"{attempts} times on {touched}"
                             )
                         continue
-                    version = self._next_version(epoch_id)
-                    # the idempotence KEY rides in the staging: a crash
-                    # anywhere after the rename replays through
-                    # _finish_pending_epoch, which records the ledger
-                    # entry BEFORE dropping the staging — so a replayed
-                    # OCC call always sees the key and never re-applies
-                    # a non-idempotent payload (exactly-once, not
-                    # at-least-once)
+                    # the version and the idempotence KEY ride in the
+                    # record, written before the rename: a crash
+                    # anywhere after it replays _finish_pending_epoch,
+                    # which records the ledger entry BEFORE dropping
+                    # the staging — so a replayed OCC call always sees
+                    # the key and never re-applies a non-idempotent
+                    # payload (exactly-once, not at-least-once).
+                    # _recover above left no canonical staging behind.
                     self._atomic_json_write(
-                        os.path.join(merged, "_OCC_KEY"),
-                        {"epoch": epoch_id, "writer": writer_id},
+                        self._record_file(merged),
+                        {
+                            **rec,
+                            "epoch": self._next_version(epoch_id),
+                            "occ": {"epoch": epoch_id, "writer": writer_id},
+                        },
                     )
-                    self._atomic_json_write(
-                        os.path.join(merged, "_EPOCH"), version
-                    )
-                    # an INCOMPLETE canonical staging (no certified
-                    # epoch) is a discarded crash artifact; recovery
-                    # above finished any complete one
-                    if os.path.isdir(self.merged_path):
-                        shutil.rmtree(self.merged_path, ignore_errors=True)
                     os.rename(merged, self.merged_path)
                     # from here the serialized commit's install step
-                    # owns the commit (commit -> snapshot -> ledger ->
+                    # owns the commit (swap -> snapshot -> ledger ->
                     # drop); a crash anywhere replays it through
                     # _recover at every entry point
-                    self._finish_pending_epoch(spark)
+                    version = self._finish_pending_epoch(spark)
                 # the commit lock is RELEASED before the scoped
                 # compaction: an O(bytes) rewrite inside the lock turns
                 # the brief metadata moment into a rewrite-length hold
@@ -4978,29 +4784,6 @@ class ParquetUpsertSink:
             F.col(column).isin(values),
         )
 
-    def _finish_compact(self, staging: str) -> None:
-        """Swap every partition out of a COMPLETE compaction staging
-        into the target, then drop the staging. No-op when no staging
-        exists; an incomplete staging (no ``_SUCCESS`` — the write
-        itself crashed) is discarded, leaving the target untouched."""
-        if not os.path.isdir(staging):
-            return
-        if not os.path.exists(os.path.join(staging, "_SUCCESS")):
-            shutil.rmtree(staging, ignore_errors=True)
-            return
-        for d in os.listdir(staging):
-            if not d.startswith("part_date="):
-                continue
-            dst = os.path.join(self.path, d)
-            shutil.rmtree(dst, ignore_errors=True)
-            shutil.move(os.path.join(staging, d), dst)
-        # full cache rebuild (a compact staging keeps no touched list,
-        # and a recovery re-entry cannot know which dirs the crashed
-        # pass already swapped), BEFORE the staging drops — compaction
-        # is already O(table), the rebuild is O(partitions) metadata
-        self._refresh_consolidated()
-        shutil.rmtree(staging, ignore_errors=True)
-
 
 def postgres_merge_sql(
     table: str,
@@ -5218,21 +5001,17 @@ class JdbcUpsertSink:
     (streaming_job.py:8-61, additive ON CONFLICT on city only).
     Cite: staging write streaming_job.py:26-34, merge statement :37-44.
 
-    Two dialects:
-
-    - ``"postgres"`` — the reference's target; emits
-      ``INSERT .. ON CONFLICT DO UPDATE`` (``merge_sql()``). No
-      Postgres is reachable in this sandbox, so that path is
-      SQL-generation + unit tests only.
-    - ``"ansi"`` — standard ``MERGE INTO`` (``merge_sql_ansi()``),
-      executed END-TO-END in-process against embedded Apache Derby
-      (``derby*.jar`` ships inside pyspark's own classpath and
-      supports ANSI MERGE since 10.11). ``write_batch`` stages the
-      micro-batch with ``DataFrameWriter.jdbc`` and runs the MERGE
-      through ``java.sql.DriverManager`` on the driver JVM — the same
-      two-step transaction a production Postgres deployment runs,
-      minus nothing. tests/test_streaming.py drives it through a real
-      ``foreachBatch`` replay.
+    The MERGE is standard ``MERGE INTO`` (``merge_sql_ansi()``),
+    executed END-TO-END in-process against embedded Apache Derby
+    (``derby*.jar`` ships inside pyspark's own classpath and supports
+    ANSI MERGE since 10.11): ``write_batch`` stages the micro-batch
+    with ``DataFrameWriter.jdbc`` and runs the MERGE through
+    ``java.sql.DriverManager`` on the driver JVM — the same two-step
+    transaction a production deployment runs, minus nothing.
+    tests/test_streaming.py drives it through a real ``foreachBatch``
+    replay. The reference's Postgres ``INSERT .. ON CONFLICT`` form
+    (``postgres_merge_sql``) runs end to end in
+    ``PostgresUpsertSink``.
 
     The MERGE statement is driver-side control flow over
     already-aggregated micro-batch output (a few rows per key per
@@ -5249,16 +5028,12 @@ class JdbcUpsertSink:
         user: str = "postgres",
         password: str = "postgres",
         driver: str = "org.postgresql.Driver",
-        dialect: str = "postgres",
     ) -> None:
-        if dialect not in ("postgres", "ansi"):
-            raise ValueError(f"unknown dialect {dialect!r}")
         self.url = url
         self.table = table
         self.staging_table = staging_table
         self.key_cols = list(key_cols)
         self.properties = {"user": user, "password": password, "driver": driver}
-        self.dialect = dialect
 
     @classmethod
     def embedded_derby(
@@ -5277,19 +5052,10 @@ class JdbcUpsertSink:
             user="",
             password="",
             driver="org.apache.derby.iapi.jdbc.AutoloadedDriver",
-            dialect="ansi",
-        )
-
-    def merge_sql(self, value_cols: tuple[str, ...] = ("total_trips", "average_fare", "last_updated")) -> str:
-        """Postgres form: conflict on the full (key, window) primary
-        key, every value column overwritten (no addition). Shared with
-        PostgresUpsertSink, which EXECUTES it against a real server."""
-        return postgres_merge_sql(
-            self.table, self.staging_table, self.key_cols, list(value_cols)
         )
 
     def merge_sql_ansi(self, value_cols: tuple[str, ...]) -> str:
-        """ANSI/Derby form of the same overwrite-per-key MERGE.
+        """The overwrite-per-key MERGE in ANSI/Derby form.
 
         Two dialect constraints, both verified against embedded Derby:
         SET targets are unqualified (the target table is implied by
@@ -5345,20 +5111,14 @@ class JdbcUpsertSink:
             )
 
     def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """Stage via DataFrameWriter.jdbc, then MERGE.
-
-        Executes fully for ``dialect="ansi"`` (embedded Derby or any
-        MERGE-capable database on the classpath). For
-        ``dialect="postgres"`` no database is reachable in this
-        sandbox, so after staging it raises with the exact statement a
-        connector should run.
-        """
+        """Stage via DataFrameWriter.jdbc, then MERGE (embedded Derby
+        or any MERGE-capable database on the classpath)."""
         writer = batch_df.write
         # Spark's DerbyDialect maps StringType to CLOB, which Derby
         # cannot compare with `=` — pin strings to VARCHAR so they can
         # serve as MERGE keys.
         str_cols = [f.name for f in batch_df.schema.fields if f.dataType.typeName() == "string"]
-        if str_cols and self.dialect == "ansi":
+        if str_cols:
             writer = writer.option(
                 "createTableColumnTypes",
                 ", ".join(f"{c} VARCHAR(1024)" for c in str_cols),
@@ -5366,11 +5126,6 @@ class JdbcUpsertSink:
         writer.jdbc(
             self.url, self.staging_table, mode="overwrite", properties=self.properties
         )
-        if self.dialect != "ansi":
-            raise NotImplementedError(
-                "JDBC merge execution needs a reachable database; run "
-                f"merge_sql() through your connector: \n{self.merge_sql()}"
-            )
         spark = batch_df.sparkSession
         value_cols = tuple(c for c in batch_df.columns if c not in self.key_cols)
         self._ensure_target(spark)

@@ -666,13 +666,15 @@ def test_batch_topk_screen_keeps_ties_at_6dp_rounding(spark):
 
 
 def test_batch_topk_screen_covers_decimal_refine_error(spark):
-    """The refine's ``decimal_dot`` rounds every product to 12 dp and
-    every running sum to 11 dp, so for tiny components its cosine
-    drifts from the fp64 screen's by far more than the 6-dp band: here
-    id 6 (one component 4.67e-05 -> 4.7e-05) sits ~2e-6 BELOW the
-    query's own copy (id 7) in fp64, yet refines ABOVE it. A screen
-    band without the decimal error bound kept only id 7 at
+    """The refine's ``decimal_dot`` rounds every product to 12 dp, so
+    for tiny components its cosine drifts from the fp64 screen's by
+    far more than the 6-dp band: here id 6 (one component 4.67e-05 ->
+    4.7e-05) sits ~2e-6 BELOW the query's own copy (id 7) in fp64, yet
+    refines to the same 1.0 and wins the id tie-break. A screen band
+    without the decimal error bound kept only id 7 at
     ``screen_margin=0``."""
+    import numpy as np
+
     from real_time_ride_hailing_data_pipeline_spark.operators import (
         similarity as sim,
     )
@@ -689,12 +691,50 @@ def test_batch_topk_screen_covers_decimal_refine_error(spark):
         .select("vec_id", sim.cosine_similarity_expr("embedding", "q").alias("sim"))
         .collect()
     }
-    assert exact[6] > exact[7]  # the refine's ranking
+    f64 = lambda v: np.asarray(v, dtype=np.float32).astype(np.float64)  # noqa: E731
+    q = f64(a)
+    fp64 = {
+        i: float(v @ q / np.sqrt((v @ v) * (q @ q)))
+        for i, v in ((6, f64(b)), (7, q))
+    }
+    assert fp64[7] - fp64[6] > 1e-6 + 1e-9  # outside the 6-dp band
+    assert (-exact[6], 6) < (-exact[7], 7)  # the refine's ranking
     got = [
         tuple(r)
         for r in sim.brute_force_topk_batch(df, qdf, k=1, screen_margin=0).collect()
     ]
     assert got == [(9, 1, 6, exact[6])], got
+
+
+def test_decimal_dot_sums_exactly_at_12dp(spark):
+    """``decimal_dot``'s running sum keeps all 12 decimal places: over
+    the vectors above it equals the exact sum of the 12-dp-rounded
+    products (2.0764E-8) — the engine-identical value DuckDB's
+    ``list_sum`` gives — not a sum rounded to 11 dp at every step
+    (2.0770E-8)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    from real_time_ride_hailing_data_pipeline_spark.functions.exact import (
+        decimal_dot,
+    )
+
+    a = [9.84e-05, 8.23e-05, 4.67e-05, 3.36e-05, -1.84e-05, -2.54e-05]
+    b = [9.84e-05, 8.23e-05, 4.7e-05, 3.36e-05, -1.84e-05, -2.54e-05]
+    got = (
+        spark.createDataFrame([(a, b)], "x array<float>, q array<float>")
+        .select(F.expr(decimal_dot("x", "q")).alias("d"))
+        .collect()[0]["d"]
+    )
+    exact = sum(
+        Decimal(repr(float(np.float32(u)) * float(np.float32(v)))).quantize(
+            Decimal("1e-12"), ROUND_HALF_UP
+        )
+        for u, v in zip(a, b)
+    )
+    assert exact == Decimal("2.0764E-8")
+    assert got == exact, got
 
 
 def test_batch_topk_supports_non_long_ids(spark):

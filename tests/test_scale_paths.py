@@ -487,16 +487,18 @@ def test_zorder_layout_writes_disjoint_z_ranges(spark, tmp_path):
     assert back.count() == events.count()
 
 
-def test_torn_compaction_repaired_at_every_entry_point(spark, tmp_path):
+def test_torn_compaction_repaired_at_every_entry_point(
+    spark, tmp_path, monkeypatch
+):
     """ADVICE r6 (medium): a compact() that crashes mid-swap — target
-    partition rmtree'd, staged replacement not yet moved in — must be
+    partition rmtree'd, staged replacement not yet linked in — must be
     repaired by write_batch() and read(), not only by the NEXT
     compact(). Without that, a merge into the torn partition's date
     lands in the live table and the next compact()'s recovery moves
     the stale staged copy over it — silent data loss."""
     import datetime as dt
     import glob as g
-    import shutil as sh
+    import os
 
     from real_time_ride_hailing_data_pipeline_spark.streaming.sinks import (
         ParquetUpsertSink,
@@ -514,27 +516,32 @@ def test_torn_compaction_repaired_at_every_entry_point(spark, tmp_path):
         rows = [(f"k{i}", t0 + dt.timedelta(minutes=i), t0, i + 1, 1.0)]
         sink.write_batch(spark.createDataFrame(rows, schema), i)
     before = {tuple(r) for r in sink.read(spark).collect()}
-
-    # Simulate the crash: build the compaction staging exactly as
-    # compact() does (complete, _SUCCESS present), then tear the
-    # target partition as if the swap died after rmtree(dst).
-    staging = str(tmp_path / "t") + "__compact"
-    spark.read.parquet(str(tmp_path / "t")).write.mode("overwrite").partitionBy(
-        "part_date"
-    ).parquet(staging)
     part_dir = g.glob(str(tmp_path / "t" / "part_date=*"))[0]
-    sh.rmtree(part_dir)
+
+    def tear():
+        # crash the real compact() mid-swap: its staging is complete
+        # and recorded, the target partition removed, the staged
+        # replacement not yet linked in
+        def crash(src, dst):
+            raise RuntimeError("crash mid-swap")
+
+        monkeypatch.setattr(
+            ParquetUpsertSink, "_copytree_link", staticmethod(crash)
+        )
+        with pytest.raises(RuntimeError, match="mid-swap"):
+            sink.compact(spark)
+        monkeypatch.undo()
+        assert not os.path.isdir(part_dir)
+        assert sink._staged_record()["op"] == "compact"
 
     # (a) a read on the torn table serves the complete content
+    tear()
     assert {tuple(r) for r in sink.read(spark).collect()} == before
 
     # re-tear and (b) merge a NEW row into the torn partition's date:
     # the pending swap must be finished BEFORE the merge, and the new
     # row must survive a subsequent compact()
-    spark.read.parquet(str(tmp_path / "t")).write.mode("overwrite").partitionBy(
-        "part_date"
-    ).parquet(staging)
-    sh.rmtree(part_dir)
+    tear()
     new_row = ("k_new", t0 + dt.timedelta(minutes=30), t0, 99, 9.0)
     sink.write_batch(spark.createDataFrame([new_row], schema), 3)
     sink.compact(spark)

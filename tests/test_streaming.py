@@ -26,6 +26,7 @@ from real_time_ride_hailing_data_pipeline_spark.streaming import job as sj
 from real_time_ride_hailing_data_pipeline_spark.streaming.sinks import (
     JdbcUpsertSink,
     ParquetUpsertSink,
+    postgres_merge_sql,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -271,7 +272,12 @@ def test_streaming_registry_query_matches_batch(spark):
 def test_jdbc_merge_sql_is_keyed_and_non_additive():
     """S5 corrected semantics: conflict target is the full composite
     key and no value column is additive."""
-    sql = JdbcUpsertSink(url="jdbc:postgresql://nowhere/db").merge_sql()
+    sql = postgres_merge_sql(
+        "city_metrics",
+        "city_metrics_staging",
+        ["city", "window_start"],
+        ["total_trips", "average_fare", "last_updated"],
+    )
     assert "ON CONFLICT (city, window_start)" in sql
     assert "+" not in sql  # overwrite-per-key, never additive
     assert "total_trips = EXCLUDED.total_trips" in sql
@@ -322,7 +328,8 @@ def test_parquet_upsert_recovers_from_crash_mid_commit(spark, tmp_path):
     part_dir = glob.glob(os.path.join(sink.path, "part_date=*"))[0]
     shutil.rmtree(part_dir)
     batch.write.mode("append").partitionBy("part_date").parquet(sink.path)
-    assert {r["event_type"] for r in sink.read(spark).collect()} == {"view"}  # corrupted
+    # corrupted (the writers' reader: read() would finish the staging)
+    assert {r["event_type"] for r in sink._read_table(spark).collect()} == {"view"}
 
     # restart replays epoch 1: recovery must come from the staging
     sink.write_batch(b2, 1)
@@ -852,25 +859,29 @@ def test_schema_evolution_guards(spark, tmp_path):
 
 def test_schema_evolution_crash_between_schema_publish_and_overwrite(spark, tmp_path):
     """The schema file publishes BEFORE the destructive overwrite
-    (sinks.py:_commit). A crash in that window leaves the schema file
-    ahead of the physical files: reads must NULL-fill the not-yet-
-    written column (never error, never drop data), and the streaming
-    restart's epoch replay completes the evolution from the durable
-    staging."""
+    (sinks.py:_finish_pending_epoch). A crash in that window leaves
+    the schema file ahead of the physical files: reads must NULL-fill
+    the not-yet-written column (never error, never drop data), and the
+    streaming restart's epoch replay completes the evolution from the
+    durable staging."""
     sink = _evo_sink(tmp_path, schema_evolution=True)
     _, d2, v1, v2 = _evo_batches(spark)
     sink.write_batch(v1, 0)
 
     # stage the evolving batch and publish the schema, but "crash"
-    # before the overwrite touches the table (exactly _commit's
+    # before the overwrite touches the table (exactly the install's
     # schema-first window)
     batch = v2.withColumn("part_date", F.to_date("window_start"))
     sink._stage_merge(spark, batch, [d2.date()], 1)
     merged = spark.read.parquet(sink.merged_path)
-    sink._write_schema_file(merged.schema)
+    sink._atomic_json_write(sink._schema_file(), sink._schema_json(merged.schema))
 
-    # torn state: schema knows fare_cents, no file carries it yet
-    torn = {r["k"]: (r["total"], r["fare_cents"]) for r in sink.read(spark).collect()}
+    # torn state: schema knows fare_cents, no file carries it yet (the
+    # writers' reader: read() would finish the staging first)
+    torn = {
+        r["k"]: (r["total"], r["fare_cents"])
+        for r in sink._read_table(spark).collect()
+    }
     assert torn == {"a": (10, None), "b": (20, None)}
 
     # restart replays epoch 1 from the durable staging
@@ -999,12 +1010,13 @@ def test_delete_crash_between_commit_and_snapshot_recovers(spark, tmp_path):
     sink._snapshot = lambda *a, **k: (_ for _ in ()).throw(RuntimeError("crash"))
     with pytest.raises(RuntimeError, match="crash"):
         sink.delete_keys(keys, 1)
-    # torn state: live table post-delete, no epoch-1 snapshot, staging kept
-    assert sorted(r["k"] for r in sink.read(spark).collect()) == ["a", "c"]
+    # torn state: no epoch-1 snapshot, the recorded staging kept
     assert sink.snapshots() == [0]
-    assert os.path.exists(os.path.join(sink.merged_path, "_EPOCH"))
+    assert sink._staged_record()["epoch"] == 1
 
     sink._snapshot = orig_snapshot
+    # live table post-delete (the read finishes the recorded commit)
+    assert sorted(r["k"] for r in sink.read(spark).collect()) == ["a", "c"]
     sink.delete_keys(keys, 1)  # the streaming restart's replay
     assert sink.snapshots() == [0, 1]
     assert sorted(r["k"] for r in sink.read_at(spark, 1).collect()) == ["a", "c"]
@@ -1335,11 +1347,34 @@ def test_partition_evolution_delete_across_specs(spark, tmp_path):
     assert typed == [("delete", "a")]
 
 
-def test_partition_migration_homogenizes_layout(spark, tmp_path):
+def _crash_mid_swap(monkeypatch):
+    """Make every sink crash in its install right after a staged dir's
+    target was removed, before the staged copy is linked in."""
+
+    def crash(src, dst):
+        raise RuntimeError("crash mid-swap")
+
+    monkeypatch.setattr(ParquetUpsertSink, "_copytree_link", staticmethod(crash))
+
+
+def _crash_before_record(monkeypatch, sink):
+    """Make ``sink`` crash where a staging's commit record would
+    publish: the staged data is complete, the record never lands."""
+    publish = sink._atomic_json_write
+
+    def crash(path, obj):
+        if path == sink._record_file():
+            raise RuntimeError("crash before the record")
+        publish(path, obj)
+
+    monkeypatch.setattr(sink, "_atomic_json_write", crash)
+
+
+def test_partition_migration_homogenizes_layout(spark, tmp_path, monkeypatch):
     """migrate_partitions rewrites history into the current spec:
     all-monthly directories afterwards, content identical, and an
-    INCOMPLETE migration staging (no _MIGRATE manifest — the crash
-    window before publish) is discarded on the next entry rather than
+    INCOMPLETE migration staging (no commit record — the crash window
+    before publish) is discarded on the next entry rather than
     half-applied (a half-applied migration would delete old-spec dirs
     without installing their replacements)."""
     from real_time_ride_hailing_data_pipeline_spark.streaming.sinks import (
@@ -1360,13 +1395,18 @@ def test_partition_migration_homogenizes_layout(spark, tmp_path):
     before = sorted(tuple(r) for r in sink.read(spark).collect())
     sink.evolve_partitioning("month")
 
-    # simulate the crash window: a staging with _SUCCESS but no
-    # _MIGRATE manifest must be discarded, table untouched
-    fake = sink._migrate_staging()
-    os.makedirs(os.path.join(fake, "part_date=2024-01-01"))
-    open(os.path.join(fake, "_SUCCESS"), "w").close()
+    # crash the real migration in that window: its rewrite is staged,
+    # its record never published — the staging must be discarded,
+    # table untouched
+    _crash_before_record(monkeypatch, sink)
+    with pytest.raises(RuntimeError, match="before the record"):
+        sink.migrate_partitions(spark)
+    monkeypatch.undo()
+    assert "part_date=2024-01-01" in os.listdir(sink.merged_path)
+    assert sink._staged_record() is None
     assert sorted(tuple(r) for r in sink.read(spark).collect()) == before
-    assert not os.path.isdir(fake)
+    assert not os.path.isdir(sink.merged_path)
+    assert sink._transforms() == ["day", "month"]
 
     sink.migrate_partitions(spark)
     dirs = sorted(d for d in os.listdir(path) if d.startswith("part_date="))
@@ -1423,6 +1463,55 @@ def test_partition_migration_rewrites_newest_snapshot(spark, tmp_path):
     assert typed == [("upsert", "a", 11)]
     # spec history collapsed back to the single-spec hot path
     assert sink._transforms() == ["month"]
+
+
+def test_maintenance_rewrites_add_no_version_and_keep_live_set(spark, tmp_path):
+    """compact and optimize are content-identical rewrites: they add no
+    version, leave every manifest as it was and never change the set
+    of live dirs — a partition whose rows deletion vectors all hide
+    stays. migrate_partitions adds no version either (a minted one
+    would collide with the stream's next epoch id): it re-publishes
+    the newest version over EXACTLY the live layout, so each key reads
+    once there and the partition that version's delete dropped is not
+    inherited back from the version before it."""
+    sink = _evo_sink(tmp_path)
+    d1 = dt.datetime(2024, 1, 15, 10, 0)
+    d2 = dt.datetime(2024, 1, 16, 11, 0)
+    d3 = dt.datetime(2024, 2, 16, 9, 0)
+    keys = "k string, window_start timestamp"
+    sink.write_batch(
+        spark.createDataFrame(
+            [("a", d1, 1), ("b", d2, 2), ("c", d3, 3)],
+            "k string, window_start timestamp, total bigint",
+        ),
+        0,
+    )
+    sink.delete_keys(
+        spark.createDataFrame([("c", d3)], keys), 1, mode="merge_on_read"
+    )
+    sink.delete_keys(spark.createDataFrame([("b", d2)], keys), 2)
+    # 2024-02-16 holds only DV-hidden rows
+    live = ["part_date=2024-01-15", "part_date=2024-02-16"]
+    assert sink._part_dirs() == live
+    manifests = {e: sink._manifest(e) for e in sink.snapshots()}
+    sink.compact(spark, files_per_partition=1)
+    sink.optimize(spark, files_per_partition=1, max_retries=0)
+    assert sink._part_dirs() == live
+    assert {e: sink._manifest(e) for e in sink.snapshots()} == manifests
+    assert [r["k"] for r in sink.read(spark).collect()] == ["a"]
+
+    sink.evolve_partitioning("month")
+    sink.migrate_partitions(spark)
+    assert sink.snapshots() == [0, 1, 2]
+    assert sink._part_dirs() == ["part_date=2024-01-01"]
+    assert sorted(sink._load_manifest(2)) == sink._part_dirs()
+    assert [r["k"] for r in sink.read_at(spark, 2).collect()] == ["a"]
+    assert sorted(r["k"] for r in sink.read_at(spark, 1).collect()) == ["a", "b"]
+    assert sorted(r["k"] for r in sink.read_at(spark, 0).collect()) == [
+        "a",
+        "b",
+        "c",
+    ]
 
 
 def test_read_merge_read_loop_serves_fresh_listing(spark, tmp_path):
@@ -1549,22 +1638,29 @@ def test_vacuum_ages_by_first_publish_not_mtime(spark, tmp_path):
     assert sink.snapshots() == [1]  # epoch 0 expired despite fresh mtime
 
 
-def test_staged_epoch_tolerates_torn_marker(spark, tmp_path):
-    """A crash that left _SUCCESS but a torn/empty _EPOCH (pre-atomic
-    stagings) must read as 'staging incomplete' and restage — not
-    raise ValueError forever (a permanent wedge needing manual
-    cleanup)."""
+def test_staging_without_record_is_discarded_and_restaged(
+    spark, tmp_path, monkeypatch
+):
+    """A commit that crashed after writing its staging but before its
+    commit record published must read as 'staging incomplete': the
+    next entry discards it and the replayed epoch restages — the
+    unrecorded debris never installs and never wedges recovery."""
     sink = _evo_sink(tmp_path)
     d1 = dt.datetime(2024, 1, 15, 10, 0)
     schema = "k string, window_start timestamp, total bigint"
     sink.write_batch(spark.createDataFrame([("a", d1, 1)], schema), 0)
-    os.makedirs(sink.merged_path, exist_ok=True)
-    open(os.path.join(sink.merged_path, "_SUCCESS"), "w").close()
-    open(os.path.join(sink.merged_path, "_EPOCH"), "w").close()  # torn
-    assert sink._staged_epoch() is None
-    # and the next commit proceeds normally over the debris
+    _crash_before_record(monkeypatch, sink)
+    with pytest.raises(RuntimeError, match="before the record"):
+        sink.write_batch(spark.createDataFrame([("a", d1, 5)], schema), 1)
+    monkeypatch.undo()
+    assert sink._part_dirs(sink.merged_path) == ["part_date=2024-01-15"]
+    assert sink._staged_record() is None
+    assert sink.snapshots() == [0]
+    # and the replayed epoch proceeds normally over the debris
     sink.write_batch(spark.createDataFrame([("a", d1, 5)], schema), 1)
     assert {(r["k"], r["total"]) for r in sink.read(spark).collect()} == {("a", 5)}
+    assert sink.snapshots() == [0, 1]
+    assert not os.path.isdir(sink.merged_path)
 
 
 def test_read_at_timestamp_resolves_by_recorded_commit_time(spark, tmp_path):
@@ -1647,47 +1743,48 @@ def test_restore_across_schema_evolution_restores_schema(spark, tmp_path):
 
 
 def test_restore_crash_windows_recover(spark, tmp_path, monkeypatch):
-    """The two restore-specific crash windows: (a) staging complete
-    (_MIGRATE published) but swap unfinished — ANY next entry point
-    completes the restore including its manifest publish; (b) staging
-    incomplete (no _MIGRATE) — discarded, the restore never happened."""
+    """The two restore-specific crash windows, hit by crashing the real
+    restore: (a) staging complete (its commit record published) but
+    the install unfinished — ANY next entry point, a plain read
+    included, completes the restore including its manifest publish;
+    (b) staging incomplete (no record) — discarded, the restore never
+    happened."""
     sink = _evo_sink(tmp_path)
     d1 = dt.datetime(2024, 1, 15, 10, 0)
     schema = "k string, window_start timestamp, total bigint"
     sink.write_batch(spark.createDataFrame([("a", d1, 1)], schema), 0)
     sink.write_batch(spark.createDataFrame([("a", d1, 2)], schema), 1)
 
-    # (a) build the staging exactly as restore would, then "crash"
-    # before the swap by not calling _finish_migrate
-    parts = sink._load_manifest(0)
-    staging = sink._migrate_staging()
-    os.makedirs(staging, exist_ok=True)
-    for d, e in parts.items():
-        shutil.copytree(
-            os.path.join(sink.snapshot_dir, "files", f"epoch={e}", d),
-            os.path.join(staging, d),
-        )
-    sch = sink._epoch_schema(0)
-    sink._atomic_json_write(
-        os.path.join(staging, "_RESTORE"),
-        {
-            "epoch": 2,
-            "parts": parts,
-            "schema": None if sch is None else sch.jsonValue(),
-            "specs": sink._transforms(),
-        },
+    # (a) crash after the record publishes, before the install
+    install = ParquetUpsertSink._finish_pending_epoch
+
+    def crash_before_install(self, spark_):
+        if self._staged_record() is not None:
+            raise RuntimeError("crash before the install")
+        return install(self, spark_)
+
+    monkeypatch.setattr(
+        ParquetUpsertSink, "_finish_pending_epoch", crash_before_install
     )
-    open(os.path.join(staging, "_SUCCESS"), "w").close()
-    sink._atomic_json_write(os.path.join(staging, "_MIGRATE"), sorted(parts))
+    with pytest.raises(RuntimeError, match="before the install"):
+        sink.restore(spark, 0)
+    monkeypatch.undo()
+    assert sink._staged_record()["epoch"] == 2
+    assert sink.snapshots() == [0, 1]
     # next entry point = a plain read: must finish the restore
     assert {(r["k"], r["total"]) for r in sink.read(spark).collect()} == {("a", 1)}
     assert sink.snapshots() == [0, 1, 2]
+    assert sink._manifest_op(2) == "restore"
+    assert not os.path.isdir(sink.merged_path)
 
-    # (b) an incomplete staging (no _MIGRATE) is discarded
-    os.makedirs(staging, exist_ok=True)
-    open(os.path.join(staging, "_SUCCESS"), "w").close()
+    # (b) crash before the record: the staging is discarded
+    _crash_before_record(monkeypatch, sink)
+    with pytest.raises(RuntimeError, match="before the record"):
+        sink.restore(spark, 1)
+    monkeypatch.undo()
+    assert os.path.isdir(sink.merged_path)
     assert {(r["k"], r["total"]) for r in sink.read(spark).collect()} == {("a", 1)}
-    assert not os.path.isdir(staging)
+    assert not os.path.isdir(sink.merged_path)
     assert sink.snapshots() == [0, 1, 2]
 
 
@@ -3528,35 +3625,35 @@ def test_occ_ledger_floor_is_scoped_per_writer_namespace(spark, tmp_path):
     assert got["x1"] == 1 and got["y3"] == 103 and got["x4"] == 4, got
 
 
-def test_occ_crash_recovery_records_writer_scoped_key(spark, tmp_path):
-    """A crashed OCC commit whose staging carries a writer-scoped
-    _OCC_KEY records the ledger entry under that writer's namespace on
-    recovery — the replayed (epoch, writer) pair is a no-op, while the
-    SAME epoch int under another writer is genuinely new."""
-    import json as _json
-    import os as _os
-
+def test_occ_crash_recovery_records_writer_scoped_key(
+    spark, tmp_path, monkeypatch
+):
+    """A crashed OCC commit whose staging record carries a
+    writer-scoped OCC key records the ledger entry under that writer's
+    namespace on recovery — the replayed (epoch, writer) pair is a
+    no-op, while the SAME epoch int under another writer is genuinely
+    new."""
     sink, d1, _ = _occ_seed(spark, tmp_path, snap=False)
-    v = sink.write_batch_occ(
-        spark.createDataFrame(
-            [("a", d1, 1)], "k string, window_start timestamp, total bigint"
-        ),
-        7,
-        writer_id="x",
-    )["version"]
-    # simulate the crash window: ledger entry lost, staging (with the
-    # writer-scoped key) left behind for recovery
-    raw = sink._occ_applied_raw()
-    raw["applied"].pop("x:7")
-    sink._atomic_json_write(sink._occ_applied_file(), raw)
-    _os.makedirs(sink.merged_path, exist_ok=True)
-    with open(_os.path.join(sink.merged_path, "_OCC_KEY"), "w") as fh:
-        _json.dump({"epoch": 7, "writer": "x"}, fh)
-    with open(_os.path.join(sink.merged_path, "_TOUCHED"), "w") as fh:
-        _json.dump({"touched": [], "emptied": [], "op": "merge"}, fh)
-    with open(_os.path.join(sink.merged_path, "_EPOCH"), "w") as fh:
-        _json.dump(v, fh)
-    open(_os.path.join(sink.merged_path, "_SUCCESS"), "w").close()
+    # crash the real OCC commit after its staging landed on the
+    # canonical path, before the ledger entry: the record (version and
+    # key) is all recovery has
+    def crash(*a, **k):
+        raise RuntimeError("crash before the ledger entry")
+
+    monkeypatch.setattr(sink, "_occ_record_applied", crash)
+    with pytest.raises(RuntimeError, match="ledger entry"):
+        sink.write_batch_occ(
+            spark.createDataFrame(
+                [("a", d1, 1)], "k string, window_start timestamp, total bigint"
+            ),
+            7,
+            writer_id="x",
+        )
+    monkeypatch.undo()
+    rec = sink._staged_record()
+    assert rec["occ"] == {"epoch": 7, "writer": "x"}
+    v = rec["epoch"]
+    assert sink._occ_replay_check(7, "x") is None  # the entry was lost
     sink._finish_pending_epoch(spark)
     assert sink._occ_replay_check(7, "x") == v  # recovered into x's ns
     assert sink._occ_replay_check(7, "y") is None  # y's 7 is new
@@ -4492,7 +4589,7 @@ def test_index_maintenance_cost_is_o_rewritten_files(spark, tmp_path):
     assert sa < ta
 
 
-def test_describe_files_empty_table_and_repair(spark, tmp_path):
+def test_describe_files_empty_table_and_repair(spark, tmp_path, monkeypatch):
     """describe_files on a never-written table is an empty view (not
     FileNotFoundError) and shares the crashed-swap healing every
     other read path performs (ADVICE r10)."""
@@ -4500,17 +4597,20 @@ def test_describe_files_empty_table_and_repair(spark, tmp_path):
     view = sink.describe_files(spark)
     assert view.count() == 0
     assert "has_bloom" in view.columns
-    # a pending compaction staging is finished before describing
+    # a compaction that crashed mid-swap is finished before describing
     s2 = _zb_sink(tmp_path / "r", spark, n=200)
     s2.compact(spark, files_per_partition=2)
-    import shutil as _sh
-
-    staging = s2._compact_staging()
-    _sh.copytree(s2.path, staging)
-    open(os.path.join(staging, "_SUCCESS"), "w").close()
+    _crash_mid_swap(monkeypatch)
+    with pytest.raises(RuntimeError, match="mid-swap"):
+        s2.compact(spark, files_per_partition=1)
+    monkeypatch.undo()
+    assert s2._staged_record()["op"] == "compact"
     files = s2.describe_files(spark)
-    assert not os.path.isdir(staging)  # healed, not described mid-swap
+    assert not os.path.isdir(s2.merged_path)  # healed, not described mid-swap
     assert files.count() > 0
+    assert {r["part_date"] for r in files.collect()} == {
+        d.split("=", 1)[1] for d in s2._part_dirs()
+    }
 
 
 def test_optimize_zorder_clusters_both_dims(spark, tmp_path):
