@@ -74,10 +74,25 @@ def configure_runtime(spark: SparkSession) -> None:
     applied to *any* session before the engine reads tables: UTC session
     timezone (the DuckDB oracle compares naive-UTC timestamps) and
     nanos-as-long parquet reads (events.ts is TIMESTAMP(NANOS), which
-    Spark's vectorized reader otherwise rejects).
+    Spark's vectorized reader otherwise rejects). It also trims the
+    streaming checkpoint's per-batch file work: fewer retained batches,
+    and renames that fork no process (see below).
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # Checkpoint renames without forking: the default FileContext-based
+    # manager resolves symlinks on every rename, and without the native
+    # Hadoop library RawLocalFileSystem does that by spawning `readlink`
+    # (four processes per published offset/commit/state file, counting
+    # the .crc files). The FileSystem-based manager renames through
+    # FileSystem.rename, which on the local checkpoints the engine uses
+    # is POSIX rename(2): atomic and overwriting, all the checkpoint
+    # protocol needs.
+    spark.conf.set(
+        "spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
+    )
     # Checkpoint-log retention: the default (100 batches of offset/
     # commit/state files) sizes recovery depth for long-lived clusters;
     # the replay harnesses here are availableNow one-shots, so retaining

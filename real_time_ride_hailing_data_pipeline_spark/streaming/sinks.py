@@ -51,9 +51,12 @@ Scale notes:
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import json
 import os
+import random
 import shutil
+import threading
 import time
 from collections.abc import Callable
 
@@ -61,25 +64,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-# lock paths this PROCESS currently holds (re-entrancy source of truth;
-# the pid inside a lock file can be spoofed by pid recycling)
-# lock path -> owning thread ident. Keyed per-thread so a second
-# writer IN THE SAME PROCESS (two streaming queries in one driver,
-# each foreachBatch on its own thread — the likeliest accidental
-# second writer) hits ConcurrentWriterError instead of being
-# misread as re-entrant; only true nested frames on the SAME thread
-# (auto-compaction inside a merge's lock) pass through.
+# lock path -> the thread holding that table's writer lock in this
+# process. Only for same-thread re-entry (auto-compaction inside a
+# merge's lock) and for refusing a second thread (two streaming queries
+# in one driver) before it opens the lock file; the kernel's flock does
+# the excluding.
 _HELD_LOCKS: dict[str, int] = {}
-
-
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-        return True
-    except ProcessLookupError:
-        return False
-    except PermissionError:  # exists, owned by someone else
-        return True
 
 
 class ConstraintViolationError(ValueError):
@@ -90,11 +80,14 @@ class ConstraintViolationError(ValueError):
 
 
 class ConcurrentWriterError(RuntimeError):
-    """A second live writer holds the table's writer lock. The sink is
-    single-writer by contract (one streaming query per checkpoint);
-    this guard turns an accidental second writer — which could
-    interleave staging/commit steps and tear the table — into a loud
-    error instead of silent corruption."""
+    """A second live writer holds the table's writer lock (the kernel
+    ``flock`` on ``<path>__lock``, see ``ParquetUpsertSink._writer_lock``),
+    or an OCC commit lost its race. The sink is single-writer by
+    contract (one streaming query per checkpoint); this guard turns an
+    accidental second writer — which could interleave staging/commit
+    steps and tear the table — into a loud error instead of silent
+    corruption. A dead holder never raises it: the kernel released its
+    lock."""
 
 
 def with_retries(fn: Callable[[], None], retries: int = 2, delay_s: float = 1.0) -> None:
@@ -350,13 +343,14 @@ class ParquetUpsertSink:
         ``as_epoch`` (default: newest + 1) with op ``restore``. The
         source version's immutable copies are HARDLINKED into the
         commit staging (O(files) inodes, zero bytes) under a record
-        carrying the new epoch and the source version's schema; the
-        install swaps them in, removes the live dirs the source version
-        lacks, restores the schema and snapshots the new version like
-        any commit. A crash before the record discards the staging
-        (the restore simply never happened — re-run it); after it, any
-        entry point or read finishes it. Returns the committed epoch
-        id."""
+        carrying the new epoch, the source version's schema and its
+        partition-spec history (plus the current spec, which new
+        writes keep); the install swaps them in, removes the live dirs
+        the source version lacks, restores the schema and specs and
+        snapshots the new version like any commit. A crash before the
+        record discards the staging (the restore simply never happened
+        — re-run it); after it, any entry point or read finishes it.
+        Returns the committed epoch id."""
         if self.snapshot_dir is None:
             raise ValueError("sink was built without snapshot_dir")
         with self._writer_lock():
@@ -380,13 +374,21 @@ class ParquetUpsertSink:
                 )
             # every live dir and every dir the newest version names is
             # touched: those the source version lacks are emptied, so
-            # the new manifest names exactly the restored set
+            # the new manifest names exactly the restored set. The
+            # restored dirs keep the spec history they were written
+            # under (a merge must still find their keys), and new
+            # writes keep the current spec.
+            current = self._transforms()
+            specs = self._manifest(epoch_id).get("specs", current)
+            if specs[-1] != current[-1]:
+                specs = [*specs, current[-1]]
             self._publish_record(
                 self.merged_path,
                 [*self._part_dirs(), *self._load_manifest(retained[-1])],
                 "restore",
                 self._epoch_schema(epoch_id),
                 epoch=new_epoch,
+                specs=specs,
             )
             self._finish_pending_epoch(spark)
             return new_epoch
@@ -395,115 +397,50 @@ class ParquetUpsertSink:
     def _lock_file(self) -> str:
         return self.path.rstrip("/") + "__lock"
 
-    def _writer_lock(self):
-        """Process-scoped writer lock around every mutating entry point
-        (merge, delete, compact): a pid-file next to the table,
-        PUBLISHED ATOMICALLY by ``os.link`` from a fully-written
-        private file — a visible lock therefore always carries a
-        complete pid (no empty-read window for a second writer to
-        misread as stale). A dead holder's lock is broken by
-        ``os.rename`` to a unique name, so exactly ONE breaker wins
-        and the loser retries against the winner's fresh lock. A LIVE
-        second writer raises ConcurrentWriterError rather than
-        interleaving staging/commit steps. Re-entrancy is tracked in
-        the process-local ``_HELD_LOCKS`` map keyed by OWNING THREAD
-        (auto-compaction runs compact() inside the merge's lock, same
-        thread) — NOT by comparing the holder pid, which a recycled
-        pid could spoof, and NOT by lock path alone, which would let a
-        second same-process writer thread slip through as re-entrant
-        and then have the first thread's exit delete the lock file out
-        from under it. This is the local/HDFS shape; on an object
-        store the same contract is a conditional-put on the lock
-        object."""
-        import threading
-        import uuid
-
-        sink = self
-
-        class _Lock:
-            def __enter__(self):
-                self.owned = False
-                lock = sink._lock_file()
-                holder_thread = _HELD_LOCKS.get(lock)
-                if holder_thread is not None:
-                    if holder_thread == threading.get_ident():
-                        return self  # re-entrant: the outer frame owns
-                    raise ConcurrentWriterError(
-                        f"thread {holder_thread} of this process holds "
-                        f"{lock}; the sink is single-writer (one "
-                        f"streaming query per checkpoint)"
-                    )
+    @contextlib.contextmanager
+    def _writer_lock(self, wait_s: float = 0.0):
+        """The table's writer lock around every mutating entry point:
+        an exclusive ``flock`` on ``<path>__lock``. The kernel excludes
+        a second process and a second open of the file in this one, and
+        drops the lock when its holder dies, so a crashed writer never
+        blocks the next. A live holder raises ConcurrentWriterError
+        at once, or, with ``wait_s > 0`` (the OCC and OPTIMIZE metadata
+        moments), after a jittered wait of up to ``wait_s`` seconds.
+        The same thread re-enters freely. Release closes the fd and
+        never unlinks the file: a writer that opened the old inode
+        could then lock it while a third one creates and locks a new
+        one."""
+        lock = self._lock_file()
+        me = threading.get_ident()
+        if _HELD_LOCKS.get(lock) == me:
+            yield  # re-entrant: the outer frame owns the lock
+            return
+        deadline = time.monotonic() + wait_s
+        while True:
+            holder = _HELD_LOCKS.get(lock)
+            if holder is None:
                 os.makedirs(os.path.dirname(lock) or ".", exist_ok=True)
-                tmp = f"{lock}.pid-{uuid.uuid4().hex}"
-                with open(tmp, "w") as fh:
-                    fh.write(str(os.getpid()))
+                fd = os.open(lock, os.O_RDWR | os.O_CREAT | os.O_CLOEXEC, 0o644)
                 try:
-                    for _ in range(4):
-                        try:
-                            os.link(tmp, lock)  # atomic, content complete
-                            _HELD_LOCKS[lock] = threading.get_ident()
-                            self.owned = True
-                            return self
-                        except FileExistsError:
-                            pass
-                        # another thread of THIS process may have won
-                        # between our dict check and the link: its lock
-                        # file carries our pid, so the stale-breaker
-                        # below would wrongly evict it — catch it here
-                        other = _HELD_LOCKS.get(lock)
-                        if other is not None and other != threading.get_ident():
-                            raise ConcurrentWriterError(
-                                f"thread {other} of this process holds "
-                                f"{lock}; the sink is single-writer"
-                            )
-                        try:
-                            with open(lock) as fh:
-                                holder = int(fh.read().strip() or 0)
-                        except FileNotFoundError:
-                            continue  # a breaker just won; retry create
-                        except ValueError:
-                            holder = 0  # foreign artifact: break it
-                        # holder == our pid but not in _HELD_LOCKS: a
-                        # dead writer's pid recycled to us — stale too
-                        if (
-                            holder
-                            and holder != os.getpid()
-                            and _pid_alive(holder)
-                        ):
-                            raise ConcurrentWriterError(
-                                f"writer pid {holder} holds {lock}; the "
-                                f"sink is single-writer (one streaming "
-                                f"query per checkpoint)"
-                            )
-                        stale = f"{lock}.stale-{uuid.uuid4().hex}"
-                        try:
-                            os.rename(lock, stale)  # one breaker wins
-                        except FileNotFoundError:
-                            continue  # another breaker won; retry
-                        with contextlib.suppress(FileNotFoundError):
-                            os.remove(stale)
-                    raise ConcurrentWriterError(f"could not acquire {lock}")
-                finally:
-                    with contextlib.suppress(FileNotFoundError):
-                        os.remove(tmp)
-
-            def __exit__(self, *exc):
-                if self.owned:
-                    lock = sink._lock_file()
-                    # file first, dict second: a racing same-process
-                    # thread that observed the dict entry gone could
-                    # read the lock file, see its own pid, take the
-                    # stale-breaker path and acquire — after which our
-                    # os.remove would delete the NEW owner's lock. With
-                    # the dict entry still present until after the file
-                    # is gone, that thread raises ConcurrentWriterError
-                    # instead (ADVICE r8).
-                    with contextlib.suppress(FileNotFoundError):
-                        os.remove(lock)
-                    _HELD_LOCKS.pop(lock, None)
-                return False
-
-        return _Lock()
+                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                    break
+                except BlockingIOError:
+                    os.close(fd)
+                who = "another writer"
+            else:
+                who = f"thread {holder} of this process"
+            if time.monotonic() >= deadline:
+                raise ConcurrentWriterError(
+                    f"{who} holds {lock}; the sink is single-writer "
+                    f"(one streaming query per checkpoint)"
+                )
+            time.sleep(0.02 + random.random() * 0.08)
+        _HELD_LOCKS[lock] = me
+        try:
+            yield
+        finally:
+            del _HELD_LOCKS[lock]
+            os.close(fd)
 
     # -- the foreachBatch hook -------------------------------------------
     def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
@@ -1432,12 +1369,13 @@ class ParquetUpsertSink:
         """Atomic manifest publish (the commit point), PRESERVING the
         first publish's commit timestamp across replays/heals and
         recording the operation type (merge/delete/restore/migrate)
-        for the history view. ``sidecars`` folds each referenced
-        partition's per-file metadata (data file names, file stats,
-        deletion vectors) INTO the manifest — the Delta-checkpoint /
-        Iceberg-manifest design — so a time-travel plan needs ONE JSON
-        read instead of O(partitions) sidecar opens (VERDICT r9
-        item 4)."""
+        for the history view and the partition-spec history the
+        version's dirs are stored under (``restore`` reinstalls it).
+        ``sidecars`` folds each referenced partition's per-file
+        metadata (data file names, file stats, deletion vectors) INTO
+        the manifest — the Delta-checkpoint / Iceberg-manifest design —
+        so a time-travel plan needs ONE JSON read instead of
+        O(partitions) sidecar opens (VERDICT r9 item 4)."""
         try:
             committed_at = self._manifest_committed_at(epoch_id)
         except (FileNotFoundError, ValueError):
@@ -1449,6 +1387,7 @@ class ParquetUpsertSink:
                 "committed_at": committed_at,
                 "op": op,
                 "sidecars": sidecars,
+                "specs": self._transforms(),
             },
         )
 
@@ -3185,7 +3124,7 @@ class ParquetUpsertSink:
             # -- pin (brief, BLOCKING: a live writer's lock means a
             # metadata moment in progress — maintenance waits it out
             # instead of dying, so OPTIMIZE runs beside a stream) ----
-            with self._writer_lock_blocking():
+            with self._writer_lock(wait_s=120.0):
                 self._recover(spark)
                 shutil.rmtree(pin_root, ignore_errors=True)
                 shutil.rmtree(stage, ignore_errors=True)
@@ -3220,18 +3159,24 @@ class ParquetUpsertSink:
                 fired = True
                 on_staged()
             # -- commit (brief BLOCKING lock): conflict-check + swap
-            with self._writer_lock_blocking():
+            with self._writer_lock(wait_s=120.0):
                 self._recover(spark)  # clear any pending commit first
-                # a writer landed in a skipped dir mid-rewrite (or the
-                # pin folded the dir away): its newer content wins
+                # a writer landed in a skipped dir mid-rewrite: its newer
+                # content wins. An unchanged dir the rewrite staged
+                # nothing for (its rows all hidden by deletion vectors)
+                # stays live and untouched, as compact leaves it.
                 skipped = [
                     d
                     for d in dirs
-                    if not os.path.isdir(os.path.join(stage, d))
-                    or self._dir_fingerprint(os.path.join(self.path, d))
+                    if self._dir_fingerprint(os.path.join(self.path, d))
                     != pinned_fp[d]
                 ]
-                swapped = [d for d in dirs if d not in skipped]
+                swapped = [
+                    d
+                    for d in dirs
+                    if d not in skipped
+                    and os.path.isdir(os.path.join(stage, d))
+                ]
                 if swapped:
                     os.makedirs(self.merged_path)
                     for d in swapped:
@@ -3270,36 +3215,6 @@ class ParquetUpsertSink:
     # commit concurrently; writers that raced on a partition retry
     # from a fresh pin. At 100 TB this is the difference between one
     # ingest stream per table and N backfill jobs landing together.
-
-    def _writer_lock_blocking(self, timeout_s: float = 120.0):
-        """A waiting variant of ``_writer_lock`` for the OCC phases:
-        a live holder means 'brief metadata moment in progress', so
-        the right move is a short jittered wait, not the single-writer
-        refusal. Same lock file, same crash recovery."""
-        import random
-        import time
-
-        sink = self
-
-        @contextlib.contextmanager
-        def _cm():
-            deadline = time.monotonic() + timeout_s
-            while True:
-                lk = sink._writer_lock()
-                try:
-                    lk.__enter__()
-                except ConcurrentWriterError:
-                    if time.monotonic() >= deadline:
-                        raise
-                    time.sleep(0.02 + random.random() * 0.08)
-                    continue
-                try:
-                    yield
-                finally:
-                    lk.__exit__(None, None, None)
-                return
-
-        return _cm()
 
     def _meta_fingerprint(self):
         """Conflict fingerprint of the TABLE-LEVEL metadata an OCC
@@ -3458,8 +3373,14 @@ class ParquetUpsertSink:
                 pid = int(n[len(prefix) :].split("_", 1)[0])
             except ValueError:
                 continue
-            if pid != os.getpid() and not _pid_alive(pid):
+            if pid == os.getpid():
+                continue
+            try:
+                os.kill(pid, 0)  # signal 0 only probes: the writer lives
+            except ProcessLookupError:
                 shutil.rmtree(os.path.join(parent, n), ignore_errors=True)
+            except PermissionError:
+                pass  # alive, owned by another user
 
     def write_batch_occ(
         self,
@@ -3532,7 +3453,7 @@ class ParquetUpsertSink:
                 # empty micro-batch: nothing to pin or merge — one
                 # empty snapshot commit under the lock, same as
                 # write_batch
-                with self._writer_lock_blocking():
+                with self._writer_lock(wait_s=120.0):
                     self._recover(spark)
                     version = self._next_version(epoch_id)
                     self._snapshot(spark, version, touched=[])
@@ -3668,7 +3589,7 @@ class ParquetUpsertSink:
             while True:
                 attempts += 1
                 # -- pin (brief blocking lock) ------------------------
-                with self._writer_lock_blocking():
+                with self._writer_lock(wait_s=120.0):
                     self._recover(spark)
                     self._occ_gc()
                     replayed = self._occ_replay_check(epoch_id, writer_id)
@@ -3712,7 +3633,7 @@ class ParquetUpsertSink:
                     fired = True
                     on_staged()
                 # -- commit (brief blocking lock): conflict check + swap
-                with self._writer_lock_blocking():
+                with self._writer_lock(wait_s=120.0):
                     self._recover(spark)
                     conflict = self._meta_fingerprint() != meta_fp or any(
                         self._dir_fingerprint(os.path.join(self.path, d))
@@ -3754,7 +3675,7 @@ class ParquetUpsertSink:
                 # compaction: an O(bytes) rewrite inside the lock turns
                 # the brief metadata moment into a rewrite-length hold
                 # and spins concurrent OCC writers into the
-                # _writer_lock_blocking timeout. compact() takes its
+                # writer lock's wait timeout. compact() takes its
                 # own lock; best-effort — a raced ConcurrentWriterError
                 # leaves the fat partition for the next commit or an
                 # explicit OPTIMIZE.
@@ -4391,7 +4312,7 @@ class ParquetUpsertSink:
                 )
         # BLOCKING: an index (re)build beside a live stream waits out
         # the brief per-batch commit locks instead of refusing
-        with self._writer_lock_blocking():
+        with self._writer_lock(wait_s=120.0):
             phys = self._phys_name_of(column)
             meta = self._bloom_meta()
             meta[phys] = {"m": m, "k": k}

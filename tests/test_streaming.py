@@ -257,6 +257,115 @@ def test_multibatch_replay_of_split_table_equals_batch(spark, tmp_path):
     assert _sink_result(sink, spark) == _batch_result(spark)
 
 
+def _split_events(spark, tmp_path) -> str:
+    """The events table split across 4 parquet files (4 micro-batches
+    at one file per trigger)."""
+    from real_time_ride_hailing_data_pipeline_spark import catalog
+
+    src = str(tmp_path / "src")
+    catalog.load_table(spark, SF_DIR, "events").repartition(4).write.mode(
+        "overwrite"
+    ).parquet(src)
+    return src
+
+
+def _start_city_metrics(spark, src, ckpt, fn):
+    events = sj.events_parquet_stream(spark, src, max_files_per_trigger=1)
+    return (
+        sj.city_metrics_update_stream(events, watermark=None)
+        .writeStream.outputMode("update")
+        .foreachBatch(fn)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def test_stateful_replay_forks_no_readlink(spark, tmp_path):
+    """The streaming checkpoint publishes its offset, commit and state
+    files without forking a process. Without the native Hadoop library
+    the default FileContext-based manager spawns `readlink` four times
+    per published file; configure_runtime selects the FileSystem-based
+    manager. Process starts are recorded in-process with JFR around a
+    4-batch stateful replay."""
+    jvm = spark._jvm
+    try:
+        rec = jvm.jdk.jfr.Recording()
+        rec.enable("jdk.ProcessStart")
+    except Exception as exc:  # noqa: BLE001 - a JVM without JFR
+        pytest.skip(f"JFR unavailable: {exc}")
+    ckpt = str(tmp_path / "ckpt")
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    assert manager.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(ckpt),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    ).getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    src = _split_events(spark, tmp_path)
+    sink = ParquetUpsertSink(
+        str(tmp_path / "metrics"), key_cols=("event_type", "window_start")
+    )
+    batches: list[int] = []
+
+    def fn(df, epoch):
+        batches.append(epoch)
+        sink.write_batch(df, epoch)
+
+    rec.start()
+    try:
+        _start_city_metrics(spark, src, ckpt, fn).awaitTermination()
+    finally:
+        rec.stop()
+    dump = jvm.java.io.File(str(tmp_path / "spawns.jfr")).toPath()
+    rec.dump(dump)
+    rec.close()
+    commands = [
+        e.getString("command")
+        for e in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+    ]
+    assert len(batches) >= 3, batches
+    assert not [c for c in commands if "readlink" in c], commands
+    assert _sink_result(sink, spark) == _batch_result(spark)
+
+
+def test_kill_after_sink_commit_resumes_exactly_once(spark, tmp_path):
+    """Kill-resume of the paper's pipeline in its worst window: the
+    foreachBatch fails right after epoch 1's sink commit returns, so
+    the sink has committed but Spark never writes that batch's commit
+    log. The restart from the same checkpoint replays batch 1 under
+    the same id; the sink's keyed overwrite lands it in the same state,
+    so every key reads once and the snapshot log holds one version per
+    epoch."""
+    src = _split_events(spark, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    sink = ParquetUpsertSink(
+        str(tmp_path / "metrics"),
+        key_cols=("event_type", "window_start"),
+        snapshot_dir=str(tmp_path / "snap"),
+    )
+    batches: list[int] = []
+
+    def fn(df, epoch):
+        batches.append(epoch)
+        sink.write_batch(df, epoch)
+        if epoch == 1 and batches.count(1) == 1:
+            raise RuntimeError("injected kill after the sink commit")
+
+    query = _start_city_metrics(spark, src, ckpt, fn)
+    with pytest.raises(Exception, match="injected kill"):
+        query.awaitTermination()
+    assert batches == [0, 1] and sink.snapshots() == [0, 1]
+    _start_city_metrics(spark, src, ckpt, fn).awaitTermination()
+    assert batches[:3] == [0, 1, 1], batches  # batch 1 replayed, same id
+    rows = sink.read(spark).collect()
+    assert {tuple(r) for r in rows} == _batch_result(spark)
+    keys = [(r["event_type"], r["window_start"]) for r in rows]
+    assert len(keys) == len(set(keys))
+    assert sink.snapshots() == sorted(set(batches))
+
+
 def test_streaming_registry_query_matches_batch(spark):
     """The registry's streaming entry (used by the driver gate) equals
     the batch flagship query."""
@@ -1168,12 +1277,51 @@ def test_delete_after_schema_evolution(spark, tmp_path):
     assert live == {"b": 777, "c": 888, "d": 111}
 
 
+def _lock_is_free(sink) -> bool:
+    """Probe the writer lock from a fresh open of the lock file: a
+    non-blocking flock succeeds only when no one holds it."""
+    import fcntl
+
+    fd = os.open(sink._lock_file(), os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        return True
+    except BlockingIOError:
+        return False
+    finally:
+        os.close(fd)
+
+
+def _lock_holder_process(sink):
+    """A subprocess that takes ``sink``'s writer lock and sleeps while
+    holding it; returns once the lock is taken."""
+    import subprocess
+    import sys as _sys
+
+    prog = (
+        "import sys, time; sys.path.insert(0, {root!r})\n"
+        "from real_time_ride_hailing_data_pipeline_spark.streaming.sinks import (\n"
+        "    ParquetUpsertSink)\n"
+        "sink = ParquetUpsertSink({path!r}, key_cols=('k', 'window_start'))\n"
+        "with sink._writer_lock():\n"
+        "    print('held', flush=True)\n"
+        "    time.sleep(600)\n"
+    ).format(root=REPO_ROOT, path=sink.path)
+    proc = subprocess.Popen(
+        [_sys.executable, "-c", prog], stdout=subprocess.PIPE, text=True
+    )
+    assert proc.stdout.readline().strip() == "held"
+    return proc
+
+
 def test_writer_lock_blocks_live_second_writer_breaks_stale(spark, tmp_path):
     """Single-writer guard: a lock held by a LIVE process makes a
-    second writer raise loudly; a dead holder's stale lock is broken
-    automatically; auto-compaction re-enters its own lock without
-    deadlocking (exercised by the auto_compact test's merge->compact
-    path)."""
+    second writer raise loudly; once that holder is killed, its lock
+    is gone with it and the next write proceeds; auto-compaction
+    re-enters its own lock without deadlocking (exercised by the
+    auto_compact test's merge->compact path)."""
+    import signal
+
     from real_time_ride_hailing_data_pipeline_spark.streaming.sinks import (
         ConcurrentWriterError,
         ParquetUpsertSink,
@@ -1184,17 +1332,17 @@ def test_writer_lock_blocks_live_second_writer_breaks_stale(spark, tmp_path):
     batch = spark.createDataFrame(
         [("a", d, 1)], "k string, window_start timestamp, total bigint"
     )
-    # live second writer: pid 1 always exists
-    with open(sink._lock_file(), "w") as fh:
-        fh.write("1")
-    with pytest.raises(ConcurrentWriterError, match="single-writer"):
-        sink.write_batch(batch, 0)
-    # stale lock: dead pid — broken and proceeds
-    with open(sink._lock_file(), "w") as fh:
-        fh.write("999999999")
+    holder = _lock_holder_process(sink)
+    try:
+        with pytest.raises(ConcurrentWriterError, match="single-writer"):
+            sink.write_batch(batch, 0)
+    finally:
+        holder.send_signal(signal.SIGKILL)
+        holder.wait(timeout=60)
+    # the killed holder's lock died with it: the write proceeds
     sink.write_batch(batch, 0)
     assert sink.read(spark).count() == 1
-    assert not os.path.exists(sink._lock_file())  # released
+    assert _lock_is_free(sink)  # released
 
 
 def test_null_partition_merge_and_delete(spark, tmp_path):
@@ -1740,6 +1888,30 @@ def test_restore_across_schema_evolution_restores_schema(spark, tmp_path):
     out = sink.read(spark)
     assert "fare_cents" not in out.columns
     assert {(r["k"], r["total"]) for r in out.collect()} == {("a", 10), ("b", 20)}
+
+
+def test_restore_reinstalls_the_source_versions_spec_history(spark, tmp_path):
+    """Restoring a version from before a partition migration brings
+    back its daily dirs, so the spec history must name ``day`` again
+    (with the current ``month`` kept for new writes): a later merge
+    then finds the restored key and replaces it instead of writing a
+    duplicate under the month dir."""
+    sink = _evo_sink(tmp_path)
+    d1, d2 = dt.datetime(2024, 1, 15, 10, 0), dt.datetime(2024, 1, 16, 11, 0)
+    schema = "k string, window_start timestamp, total bigint"
+    sink.write_batch(
+        spark.createDataFrame([("a", d1, 1), ("b", d2, 2)], schema), 0
+    )
+    sink.write_batch(spark.createDataFrame([("a", d1, 5)], schema), 1)
+    sink.evolve_partitioning("month")
+    sink.migrate_partitions(spark)
+    assert sink._transforms() == ["month"]
+    sink.restore(spark, 0)
+    assert sink._transforms() == ["day", "month"]
+    sink.write_batch(spark.createDataFrame([("a", d1, 9)], schema), 3)
+    assert sorted(
+        (r["k"], r["total"]) for r in sink.read(spark).collect()
+    ) == [("a", 9), ("b", 2)]
 
 
 def test_restore_crash_windows_recover(spark, tmp_path, monkeypatch):
@@ -2846,11 +3018,10 @@ def test_writer_lock_excludes_a_second_process(tmp_path):
 
 
 def test_writer_lock_recovers_a_dead_processes_lock(tmp_path):
-    """Torn-lock recovery across processes: a lock file left by a
-    CRASHED writer (its pid no longer alive) is broken by the next
-    writer, which acquires and proceeds — a crash never wedges the
-    table. The dead pid is real: a subprocess takes the lock, keeps
-    it past exit (skipping __exit__ via os._exit), and dies."""
+    """Crash recovery across processes: a writer that dies holding
+    the lock never wedges the table — the next writer acquires at
+    once. The crash is real: a subprocess takes the lock and exits
+    without releasing it (os._exit skips __exit__)."""
     import subprocess
     import sys as _sys
 
@@ -2867,16 +3038,17 @@ def test_writer_lock_recovers_a_dead_processes_lock(tmp_path):
         "sink = ParquetUpsertSink({path!r}, key_cols=('k', 'window_start'))\n"
         "lock = sink._writer_lock()\n"
         "lock.__enter__()\n"
-        "os._exit(0)  # crash: __exit__ never runs, the lock file stays\n"
+        "os._exit(0)  # crash: __exit__ never runs\n"
     ).format(root=REPO_ROOT, path=path)
     proc = subprocess.run(
         [_sys.executable, "-c", prog], capture_output=True, timeout=60
     )
     assert proc.returncode == 0, proc.stderr.decode()
-    assert os.path.exists(sink._lock_file())  # the torn lock survives
-    with sink._writer_lock():  # breaks the stale lock, acquires
-        assert os.path.exists(sink._lock_file())
-    assert not os.path.exists(sink._lock_file())
+    # the lock file outlives its holder, the lock does not
+    assert os.path.exists(sink._lock_file())
+    with sink._writer_lock():  # acquires at once
+        assert not _lock_is_free(sink)
+    assert _lock_is_free(sink)
 
 
 def test_dir_level_zone_map_short_circuits(spark, tmp_path):
@@ -3156,7 +3328,7 @@ def test_occ_two_processes_disjoint_partitions(spark, tmp_path):
 
 
 def test_blocking_lock_waits_then_times_out(tmp_path):
-    """_writer_lock_blocking waits out a live same-process holder and
+    """_writer_lock(wait_s=...) waits out a live same-process holder and
     acquires once released; against a holder that never releases it
     raises ConcurrentWriterError at the deadline instead of spinning
     forever."""
@@ -3182,12 +3354,12 @@ def test_blocking_lock_waits_then_times_out(tmp_path):
     # timeout path: the holder outlives the deadline
     t0 = _time.monotonic()
     with pytest.raises(ConcurrentWriterError):
-        with sink._writer_lock_blocking(timeout_s=0.5):
+        with sink._writer_lock(wait_s=0.5):
             pass
     assert 0.4 < _time.monotonic() - t0 < 5
     # wait-then-acquire path: release mid-wait
     threading.Timer(0.3, release.set).start()
-    with sink._writer_lock_blocking(timeout_s=10):
+    with sink._writer_lock(wait_s=10):
         pass  # acquired after the holder exited
     t.join(timeout=10)
 
@@ -3671,7 +3843,7 @@ def test_occ_auto_compact_runs_after_commit_lock_released(spark, tmp_path):
     orig = sink._auto_compact
 
     def spy(spark_, touched):
-        seen["lock_held_at_compact"] = os.path.exists(sink._lock_file())
+        seen["lock_held_at_compact"] = not _lock_is_free(sink)
         return orig(spark_, touched)
 
     sink._auto_compact = spy
@@ -4185,6 +4357,39 @@ def test_optimize_folds_deletion_vectors_and_sorts(spark, tmp_path):
     df, sel, tot = sink.read_pruned(spark, "total", lower=95)
     assert sel < tot
     assert sorted(r["total"] for r in df.collect()) == list(range(95, 99))
+
+
+def test_optimize_leaves_a_fully_hidden_partition_live(spark, tmp_path):
+    """A partition whose every row a deletion vector hides stages
+    nothing: no writer touched it, so it is neither a conflict to
+    retry nor a skip to report. It stays live and untouched, as
+    compact leaves it."""
+    sink = _evo_sink(tmp_path)
+    d1, d2 = dt.datetime(2024, 1, 15, 10, 0), dt.datetime(2024, 1, 16, 11, 0)
+    sink.write_batch(
+        spark.createDataFrame(
+            [("a", d1, 10), ("b", d1, 30), ("c", d2, 50)],
+            "k string, window_start timestamp, total bigint",
+        ),
+        0,
+    )
+    sink.delete_keys(
+        spark.createDataFrame([("c", d2)], "k string, window_start timestamp"),
+        1,
+        mode="merge_on_read",
+    )
+    before = sorted((r["k"], r["total"]) for r in sink.read(spark).collect())
+    dirs = sink._part_dirs()
+    res = sink.optimize(spark, files_per_partition=1)
+    assert res == {
+        "compacted": ["part_date=2024-01-15"],
+        "skipped": [],
+        "attempts": 1,
+    }, res
+    assert sorted(
+        (r["k"], r["total"]) for r in sink.read(spark).collect()
+    ) == before == [("a", 10), ("b", 30)]
+    assert sink._part_dirs() == dirs
 
 
 # -- z-order clustering + bloom point-lookup skipping (r10) ------------------
