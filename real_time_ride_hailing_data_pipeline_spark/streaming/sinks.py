@@ -424,8 +424,10 @@ class ParquetUpsertSink:
                 try:
                     fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
                     break
-                except BlockingIOError:
+                except OSError as exc:
                     os.close(fd)
+                    if not isinstance(exc, BlockingIOError):
+                        raise
                 who = "another writer"
             else:
                 who = f"thread {holder} of this process"

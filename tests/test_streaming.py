@@ -228,35 +228,6 @@ def test_crash_mid_stream_recovers_exactly_once(spark, tmp_path):
     assert got == {("view", 0, 2), ("view", 1, 1), ("view", 2, 2)}
 
 
-def test_multibatch_replay_of_split_table_equals_batch(spark, tmp_path):
-    """Production-shaped replay: the real events table split across 4
-    files in arbitrary (non-time-ordered) file order, processed as 4
-    micro-batches. Without a watermark (a bounded replay needs no
-    state eviction) the incremental aggregation must converge to the
-    batch answer regardless of how data is chunked across batches."""
-    src = str(tmp_path / "src")
-    from real_time_ride_hailing_data_pipeline_spark import catalog
-
-    catalog.load_table(spark, SF_DIR, "events").repartition(4).write.mode(
-        "overwrite"
-    ).parquet(src)
-
-    events = sj.events_parquet_stream(spark, src, max_files_per_trigger=1)
-    metrics = sj.city_metrics_update_stream(events, watermark=None)
-    sink = ParquetUpsertSink(
-        str(tmp_path / "metrics"), key_cols=("event_type", "window_start")
-    )
-    query = (
-        metrics.writeStream.outputMode("update")
-        .foreachBatch(sink.write_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    assert _sink_result(sink, spark) == _batch_result(spark)
-
-
 def _split_events(spark, tmp_path) -> str:
     """The events table split across 4 parquet files (4 micro-batches
     at one file per trigger)."""
@@ -279,6 +250,22 @@ def _start_city_metrics(spark, src, ckpt, fn):
         .trigger(availableNow=True)
         .start()
     )
+
+
+def test_multibatch_replay_of_split_table_equals_batch(spark, tmp_path):
+    """Production-shaped replay: the real events table split across 4
+    files in arbitrary (non-time-ordered) file order, processed as 4
+    micro-batches. Without a watermark (a bounded replay needs no
+    state eviction) the incremental aggregation must converge to the
+    batch answer regardless of how data is chunked across batches."""
+    src = _split_events(spark, tmp_path)
+    sink = ParquetUpsertSink(
+        str(tmp_path / "metrics"), key_cols=("event_type", "window_start")
+    )
+    _start_city_metrics(
+        spark, src, str(tmp_path / "ckpt"), sink.write_batch
+    ).awaitTermination()
+    assert _sink_result(sink, spark) == _batch_result(spark)
 
 
 def test_stateful_replay_forks_no_readlink(spark, tmp_path):
